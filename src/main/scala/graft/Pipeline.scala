@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.rules._
 import graft.schema._
@@ -33,29 +34,37 @@ object Pipeline {
 
   /** The per-table extract+convert plan migrate dumps: rules-driven
     * extraction (where/joins/renames/casts) followed by the raw-dump
-    * value conversions. Factored out so the etl_pipeline_dump oracle
-    * key can compare the dump bytes against EXACTLY the frame that
-    * rendered them — any drift between this plan and what migrate
-    * writes would be a correctness bug, so they share the code. */
+    * value conversions (boolean/bytea/time/zero-date/FK-zero). The
+    * etl_pipeline_dump oracle key compares the dump bytes against
+    * EXACTLY this frame, so migrate builds its plan with the same
+    * `convert` — any drift between the two would be a correctness bug. */
   def convertedFrame(spark: SparkSession, sfDir: String, table: String,
       changes: SchemaChanges,
       node: NodeRules = NodeRules.mysqlToPg,
       skipPreSql: Boolean = false): DataFrame = {
     val src = Tables.load(spark, sfDir, table)
     val orig = Introspect.fromSpark(src, table)
-    val td = SchemaRules.applyTable(orig, changes)
-      .map(SchemaRules.applyNode(_, node))
-      .getOrElse(throw new IllegalArgumentException(
+    val td = SchemaRules(Seq(orig), changes, node).headOption.getOrElse(
+      throw new IllegalArgumentException(
         s"table $table is skipped by the change-set"))
-    val extracted = Projector.extract(src, orig, changes.forTable(table),
-      t => Tables.load(spark, sfDir, t), Some(node), skipPreSql)
-    ValueRules.applyRawDump(extracted, td)
+    convert(src, orig, td, changes, node, skipPreSql,
+      t => Tables.load(spark, sfDir, t))
   }
+
+  private def convert(src: DataFrame, orig: TableDef, td: TableDef,
+      changes: SchemaChanges, node: NodeRules, skipPreSql: Boolean,
+      loadTable: String => DataFrame): DataFrame =
+    ValueRules.applyRawDump(
+      Projector.extract(src, orig, changes.forTable(orig.name), loadTable,
+        Some(node), skipPreSql),
+      td)
 
   /** Migrate a set of parquet-backed tables: apply schema rules,
     * extract per rules (where/joins/renames/casts), write PG-dialect
     * CSV dumps, and emit the full DDL bundle (create tables + FKs +
-    * indexes + setvals + v1-compat views). */
+    * indexes + setvals + v1-compat views). Each table is loaded and
+    * introspected once; its frame also serves every `_JOIN_`/orphan/
+    * pre-SQL lookup of it. */
   def migrate(spark: SparkSession, sfDir: String, outDir: String,
       tables: Seq[String], changes: SchemaChanges,
       node: NodeRules = NodeRules.mysqlToPg,
@@ -64,14 +73,13 @@ object Pipeline {
       sink: Sink = PgCsv,
       indexes: Map[String, Seq[IndexDef]] = Map.empty): MigrationResult = {
 
-    val originals = tables.map { t =>
-      Introspect.fromSpark(Tables.load(spark, sfDir, t), t,
+    val frames = scala.collection.mutable.Map.empty[String, DataFrame]
+    def load(t: String): DataFrame = frames.synchronized(
+      frames.getOrElseUpdate(t, Tables.load(spark, sfDir, t)))
+    val changed = tables.flatMap { t =>
+      val orig = Introspect.fromSpark(load(t), t,
         pk = pks.getOrElse(t, Nil), indexes = indexes.getOrElse(t, Nil))
-    }
-    val changed = SchemaRules(originals, changes, node)
-    val changedByOriginal = originals.flatMap { o =>
-      SchemaRules.applyTable(o, changes).map(SchemaRules.applyNode(_, node))
-        .map(o -> _)
+      SchemaRules(Seq(orig), changes, node).map(orig -> _)
     }
 
     // the reference forks a multiprocessing pool per table
@@ -79,47 +87,28 @@ object Pipeline {
     // Spark job submitted concurrently — partitions of all tables
     // interleave across the cluster, so small tables don't serialize
     // behind big ones
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // the pool MUST be shut down before returning: its threads are
-    // non-daemon, and a leaked pool keeps the whole JVM alive after
-    // main() returns (a hung Verify/Bench process, found the hard way)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, math.max(1, changedByOriginal.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val results = try {
-      val futures = changedByOriginal.map { case (orig, td) => Future {
-        // extraction + per-column raw-dump value conversions
-        // (boolean/bytea/time/zero-date/FK-zero), as the reference does
-        // between extraction and CSV rendering
-        val converted = convertedFrame(spark, sfDir, orig.name, changes,
-          node, skipPreSql)
-        val outPath = s"$outDir/${td.name}"
-        val rows = sink match {
-          case PgCsv =>
-            PgCopyWriter.write(converted, outPath)
-            // count the frame, not the dump's lines: a string cell with
-            // an embedded newline is one row but two file lines
-            converted.count()
-          case ParquetLake(partitionBy) =>
-            val w = converted.write.mode("overwrite")
-            partitionBy.get(orig.name).filter(_.nonEmpty)
-              .fold(w)(cols => w.partitionBy(cols: _*))
-              .parquet(outPath)
-            spark.read.parquet(outPath).count()
-        }
-        TableResult(orig.name, td.name,
-          rows = rows,
-          ddl = PgSqlGen.dropTable(td) + "\n" + PgSqlGen.createTable(td),
-          copySql = PgSqlGen.copyStatement(td, outPath))
-      } }
-      Await.result(Future.sequence(futures), Duration.Inf)
-    } finally pool.shutdown()
+    val results = onPool(changed, 8) { case (orig, td) =>
+      val converted = convert(load(orig.name), orig, td, changes, node,
+        skipPreSql, load)
+      val outPath = s"$outDir/${td.name}"
+      val rows = countWritten(converted)(df => sink match {
+        case PgCsv => PgCopyWriter.write(df, outPath)
+        case ParquetLake(partitionBy) =>
+          val w = df.write.mode("overwrite")
+          partitionBy.get(orig.name).filter(_.nonEmpty)
+            .fold(w)(cols => w.partitionBy(cols: _*))
+            .parquet(outPath)
+      })
+      TableResult(orig.name, td.name,
+        rows = rows,
+        ddl = PgSqlGen.dropTable(td) + "\n" + PgSqlGen.createTable(td),
+        copySql = PgSqlGen.copyStatement(td, outPath))
+    }
 
-    val constraints = changed.map(td =>
-      PgSqlGen.setval(td) + PgSqlGen.foreignKeys(td) + PgSqlGen.indexes(td))
-      .mkString("\n")
-    val views = changedByOriginal.map { case (orig, td) =>
+    val constraints = changed.map { case (_, td) =>
+      PgSqlGen.setval(td) + PgSqlGen.foreignKeys(td) + PgSqlGen.indexes(td)
+    }.mkString("\n")
+    val views = changed.map { case (orig, td) =>
       PgSqlGen.compatView(orig, td, "v1", "public")
     }.mkString("\n")
 
@@ -137,20 +126,33 @@ object Pipeline {
       outRoot: String, tables: Seq[String], changes: SchemaChanges,
       prefix: String = "",
       pks: Map[String, Seq[String]] = Map.empty): Map[String, MigrationResult] = {
+    val selected = dbDirs.filter { case (db, _) => db.startsWith(prefix) }
+    onPool(selected.toSeq, 4) { case (db, dir) =>
+      db -> migrate(spark, dir, s"$outRoot/$db", tables, changes, pks = pks)
+    }.toMap
+  }
+
+  /** `f` over `items` on at most `threads` threads, in input order. The
+    * pool is always shut down: its threads are non-daemon, and a leaked
+    * pool keeps the JVM alive after main() returns (a hung Verify). */
+  private def onPool[A, B](items: Seq[A], threads: Int)(f: A => B): Seq[B] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val selected = dbDirs.filter { case (db, _) => db.startsWith(prefix) }
-    // non-daemon pool: shut down before returning (see migrate)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(4, math.max(1, selected.size)))
+      math.min(threads, math.max(1, items.size)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = selected.toSeq.map { case (db, dir) =>
-        Future(db -> migrate(spark, dir, s"$outRoot/$db", tables, changes,
-          pks = pks))
-      }
-      Await.result(Future.sequence(futures), Duration.Inf).toMap
-    } finally pool.shutdown()
+    try Await.result(Future.traverse(items)(a => Future(f(a))), Duration.Inf)
+    finally pool.shutdown()
+  }
+
+  /** Runs `write` over `ds` and returns the rows it wrote, observed in
+    * the write job itself so the plan runs once. Rows, not file lines:
+    * a PG dump string cell with an embedded newline is one row but two
+    * file lines. */
+  private def countWritten[T](ds: Dataset[T])(write: Dataset[T] => Unit): Long = {
+    val written = Observation()
+    write(ds.observe(written, count(lit(1)).as("rows")))
+    written.get("rows").asInstanceOf[Long]
   }
 
   /** Write the reference's per-database artifact bundle
@@ -208,7 +210,6 @@ object Pipeline {
     import spark.implicits._
     val converted = spark.read.textFile(dumpPath)
       .flatMap(line => PgSqlGen.convertInsert(changes, line))
-    converted.write.mode("overwrite").text(outPath)
-    spark.read.textFile(outPath).count()
+    countWritten(converted)(_.write.mode("overwrite").text(outPath))
   }
 }

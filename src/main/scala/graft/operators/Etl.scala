@@ -479,19 +479,6 @@ object Etl {
   private[graft] def pipelineDumpDir(dir: String): String =
     s"/tmp/graft_pipeline_dump_${graft.Tables.sfTag(dir)}"
 
-  /** End-to-end migration dump parity — the whole orchestrated path
-    * (Pipeline.migrate: rules -> extract -> value convert ->
-    * PgCopyWriter CSV render) byte-round-trips, not just per-cell
-    * specs. The migration runs ONCE per corpus fingerprint and writes
-    * the PG \copy dump under /tmp; the DuckDB oracle parses those
-    * bytes back (read_csv with the PG single-quote dialect) while the
-    * Spark side recomputes the exact converted frame the dump rendered
-    * via the SAME code path (Pipeline.convertedFrame). Any defect in
-    * orchestration, quote doubling, NULL cells or numeric text breaks
-    * hash parity. (Float text round-trips exactly here because the
-    * node rules cast double -> decimal(18,2) before rendering — raw
-    * doubles would be bounded by PyFloatRepr's Python-2 12-significant-
-    * digit str(), which is the reference's own lossy contract.) */
   /** Cross-process exclusive section for one-time layout builds: two
     * JVMs running the same key on the same corpus (an overlapping
     * Bench and Verify) must not both observe a stale tag and race
@@ -505,6 +492,19 @@ object Etl {
     try body finally { lk.release(); ch.close() }
   }
 
+  /** End-to-end migration dump parity — the whole orchestrated path
+    * (Pipeline.migrate: rules -> extract -> value convert ->
+    * PgCopyWriter CSV render) byte-round-trips, not just per-cell
+    * specs. The migration runs ONCE per corpus fingerprint and writes
+    * the PG \copy dump under /tmp; the DuckDB oracle parses those
+    * bytes back (read_csv with the PG single-quote dialect) while the
+    * Spark side recomputes the exact converted frame the dump rendered
+    * via the SAME code path (Pipeline.convertedFrame). Any defect in
+    * orchestration, quote doubling, NULL cells or numeric text breaks
+    * hash parity. (Float text round-trips exactly here because the
+    * node rules cast double -> decimal(18,2) before rendering — raw
+    * doubles would be bounded by PyFloatRepr's Python-2 12-significant-
+    * digit str(), which is the reference's own lossy contract.) */
   def etlPipelineDump(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     val outDir = pipelineDumpDir(dir)

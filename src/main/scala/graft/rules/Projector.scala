@@ -1,6 +1,8 @@
 package graft.rules
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
 import org.apache.spark.sql.functions._
 
 import graft.schema._
@@ -77,16 +79,24 @@ object Projector {
     * drop every row of a nullable FK column). */
   def dropFkOrphans(child: DataFrame, fk: String,
       parent: DataFrame, pk: String): DataFrame =
-    child.filter(child(fk).isNotNull)
-      .join(parent.select(col(pk)), child(fk) === col(pk), "left_semi")
+    joinParent(child, fk, parent, pk, "left_semi")
       .unionAll(child.filter(child(fk).isNull))
 
   /** The deleted side: non-NULL fks with no parent. NULL-fk rows are
     * never orphans (the reference's DELETE does not touch them). */
   def fkOrphans(child: DataFrame, fk: String,
       parent: DataFrame, pk: String): DataFrame =
+    joinParent(child, fk, parent, pk, "left_anti")
+
+  /** Non-NULL-fk child rows joined to the parent's key, aliased like a
+    * `_JOIN_`'s `__ref_` column: a self-FK (`manager_id -> id`) makes
+    * the child carry a column named `pk` too, and a bare `col(pk)`
+    * would then be ambiguous. */
+  private def joinParent(child: DataFrame, fk: String,
+      parent: DataFrame, pk: String, how: String): DataFrame =
     child.filter(child(fk).isNotNull)
-      .join(parent.select(col(pk)), child(fk) === col(pk), "left_anti")
+      .join(parent.select(col(pk).as(s"__ref_$pk")),
+        child(fk) === col(s"__ref_$pk"), how)
 
   private val DeleteRe =
     """(?is)^\s*DELETE\s+(?:IGNORE\s+)?FROM\s+[`"]?(\w+)[`"]?\s+WHERE\s+(.+?)\s*;?\s*$""".r
@@ -128,11 +138,11 @@ object Projector {
     *    with `CASE WHEN cond THEN e ELSE c END` per assigned column
     *    (cond NULL/false leaves the row untouched, like UPDATE).
     *
-    * Statements run via spark.sql over temp views: the current frame
-    * is registered under the table's own name, and any other table a
-    * subquery references (`... NOT IN (SELECT id FROM reservation)`)
-    * is resolved through `loadTable` and registered on demand. A
-    * statement targeting a different table, or any other statement
+    * Every table the parsed statement names, subqueries included, is
+    * bound straight to a plan: its own name to the current frame, any
+    * other to `loadTable`. No temp view is involved, so a caller's
+    * views are neither read nor dropped and concurrent calls stay
+    * apart. A statement targeting a different table, or any other
     * shape, throws — a pre-SQL the engine can't honor must never
     * silently no-op. */
   def runPreSql(df: DataFrame, table: String, stmts: Seq[String],
@@ -145,34 +155,17 @@ object Projector {
           if (t.toLowerCase != table.toLowerCase)
             throw new IllegalArgumentException(
               s"pre-SQL for table '$table' targets '$t': $stmt")
-        // Execute one rewritten statement over temp views. Referenced
-        // tables come from the PARSED plan's UnresolvedRelation nodes,
-        // not a regex — JOIN / comma-list references resolve, and a
-        // string literal containing "FROM x" can't register a bogus
-        // view. Every view this call registers is dropped in finally:
-        // view resolution happens at analysis time (s.sql analyzes
-        // eagerly), so the returned frame keeps its plan after the
-        // views are gone and pre-SQL leaves no session-global residue
-        // for a later statement to silently read stale.
+        // tables come from the parsed plan, not a regex: JOIN / comma
+        // lists resolve, and a literal containing "FROM x" binds nothing
         def run(sqlText: String): DataFrame = {
-          // collectWithSubqueries: relations inside IN/EXISTS subquery
-          // expressions live in nested plans the plain collect skips
-          val refs = s.sessionState.sqlParser.parsePlan(sqlText)
-            .collectWithSubqueries {
-              case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
-                r.multipartIdentifier.last.toLowerCase
-            }.distinct
-          val created = scala.collection.mutable.Buffer[String]()
-          acc.createOrReplaceTempView(table)
-          created += table
-          refs.filterNot(_ == table.toLowerCase).foreach { t =>
-            if (!s.catalog.tableExists(t)) {
-              loadTable(t).createOrReplaceTempView(t)
-              created += t
+          val plan = s.sessionState.sqlParser.parsePlan(sqlText)
+            .transformUpWithSubqueries {
+              case r: UnresolvedRelation =>
+                val name = r.multipartIdentifier.last
+                SubqueryAlias(name, (if (name.equalsIgnoreCase(table)) acc
+                  else loadTable(name.toLowerCase)).queryExecution.analyzed)
             }
-          }
-          try s.sql(sqlText)
-          finally created.foreach(s.catalog.dropTempView(_))
+          GraftSqlBridge.ofRows(s, plan)
         }
         stmt match {
           case DeleteRe(target, cond) =>

@@ -246,6 +246,23 @@ class EtlSpec extends AnyFunSuite {
     assert(orphans == Seq(2))
   }
 
+  test("dropFkOrphans and fkOrphans handle a self-referencing FK") {
+    import spark.implicits._
+    def staff = Seq[(Int, Option[Int])]((1, None), (2, Some(1)), (3, Some(99)))
+      .toDF("id", "manager_id")
+    val child = staff
+    // the child itself as parent (migrate's shared loads) and a fresh
+    // frame of the same rows: both carry the child's own `id` column
+    Seq(child, staff).foreach { parent =>
+      val kept = Projector.dropFkOrphans(child, "manager_id", parent, "id")
+        .select("id").collect().map(_.getInt(0)).sorted
+      assert(kept.toSeq == Seq(1, 2)) // NULL manager kept, 99 dropped
+      val orphans = Projector.fkOrphans(child, "manager_id", parent, "id")
+        .select("id").collect().map(_.getInt(0)).toSeq
+      assert(orphans == Seq(3))
+    }
+  }
+
   test("runPreSql executes DELETE with NOT IN subquery, keeping NULL fks") {
     import spark.implicits._
     val reminders = Seq((1, Some(10)), (2, Some(99)), (3, None))
@@ -269,6 +286,31 @@ class EtlSpec extends AnyFunSuite {
       .orderBy("id").collect()
     assert(out.map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq ==
       Seq((1, 6, 200), (2, 50, 200)))
+  }
+
+  test("runPreSql leaves a caller's temp view of the table's name alone") {
+    import spark.implicits._
+    Seq(7).toDF("id").createOrReplaceTempView("presql_own")
+    try {
+      val out = Projector.runPreSql(Seq(1, 2).toDF("id"), "presql_own",
+        Seq("DELETE FROM presql_own WHERE id = 2"),
+        _ => sys.error("no refs expected"))
+      assert(out.collect().map(_.getInt(0)).toSeq == Seq(1))
+      assert(spark.catalog.tableExists("presql_own"), "caller's view was dropped")
+      assert(spark.table("presql_own").collect().map(_.getInt(0)).toSeq == Seq(7))
+    } finally spark.catalog.dropTempView("presql_own")
+  }
+
+  test("runPreSql resolves a referenced table through loadTable, not a view") {
+    import spark.implicits._
+    Seq(10, 20, 30).toDF("rid").createOrReplaceTempView("presql_parents")
+    try {
+      val out = Projector.runPreSql(Seq((1, 10), (2, 30)).toDF("id", "fk"), "c",
+        Seq("DELETE FROM c WHERE fk NOT IN (SELECT rid FROM presql_parents)"),
+        Map("presql_parents" -> Seq(10).toDF("rid")))
+        .select("id").collect().map(_.getInt(0)).toSeq
+      assert(out == Seq(1))
+    } finally spark.catalog.dropTempView("presql_parents")
   }
 
   test("runPreSql throws on wrong-target and unsupported statements") {

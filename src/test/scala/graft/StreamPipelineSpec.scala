@@ -1265,6 +1265,47 @@ class StreamPipelineSpec extends AnyFunSuite {
       s"no partition pruning in:\n$plan")
   }
 
+  test("Pipeline.migrate counts rows, not dump lines, for an embedded newline") {
+    import spark.implicits._
+    val src = java.nio.file.Files.createTempDirectory("newline_src").toString
+    Seq((1L, "two\nlines"), (2L, "one")).toDF("id", "note")
+      .write.parquet(s"$src/notes.parquet")
+    val out = java.nio.file.Files.createTempDirectory("newline_out").toString
+    val res = Pipeline.migrate(spark, src, out, Seq("notes"), SchemaChanges())
+    assert(res.tables.map(_.rows) == Seq(2L))
+    assert(spark.read.text(s"$out/notes").count() == 3)
+  }
+
+  test("Pipeline.migrate runs one load and one write job per table") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"migrate-jobs-${java.util.UUID.randomUUID}"
+    val drain = s"$group-drain"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`drain`) => drained.countDown()
+          case _ =>
+        }
+    }
+    val out = java.nio.file.Files.createTempDirectory("migrate_jobs").toString
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "migrate job count")
+      try Pipeline.migrate(spark, sf, out, Seq("nation", "region"), SchemaChanges())
+      finally sc.clearJobGroup()
+      // the bus delivers events in order: once the drain job's start
+      // arrives, every migrate job start has been counted
+      sc.setJobGroup(drain, "drain the listener bus")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 4, s"${jobs.get} jobs for 2 tables")
+  }
+
   test("Pipeline.migrateAll migrates multiple databases with prefix filter") {
     val out = java.nio.file.Files.createTempDirectory("multidb").toString
     val dbs = Map(

@@ -1,8 +1,9 @@
 #!/bin/bash
-# The full local gate, one command: ScalaTest suite, then the
-# strict-in-order DuckDB board compare at all four scale factors
-# (sf0.001 / sf0.01 / sf0.1 from /root/testdata, sf1 regenerated via
-# GenScale — /tmp is wiped between sessions, so sf1 is always rebuilt).
+# The full local gate, one command: ScalaTest suite, the benchmark's
+# smoke test, then the strict-in-order DuckDB board compare at all four
+# scale factors (sf0.001 / sf0.01 / sf0.1 from /root/testdata, sf1
+# regenerated via GenScale — /tmp is wiped between sessions, so sf1 is
+# always rebuilt).
 #
 # Usage: tools/gate.sh [out-prefix]     (default /tmp/gate)
 # Exits non-zero on the first red stage. Each stage's summary line is
@@ -18,6 +19,14 @@ P="${1:-/tmp/gate}"
 echo "== suite =="
 sbt -batch test > "$P.suite.log" 2>&1 || { grep -E "Tests:|\*\*\*" "$P.suite.log" | tail -5; exit 1; }
 grep -E "Tests:" "$P.suite.log" | tail -1
+
+# perfbench compiles graft's sources together with its own, so a
+# signature change in a module it calls breaks the benchmark while the
+# suite stays green
+echo "== perfbench smoke =="
+python3 perfbench/test_smoke.py > "$P.perfbench.log" 2>&1 \
+  || { tail -10 "$P.perfbench.log"; exit 1; }
+tail -1 "$P.perfbench.log"
 
 for sf in 0.001 0.01 0.1; do
   echo "== sf$sf =="
