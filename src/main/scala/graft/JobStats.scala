@@ -1,6 +1,8 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -17,6 +19,32 @@ import org.apache.spark.sql.SparkSession
   *   runMain graft.JobStats <sfDir> <key1,key2,...>
   */
 object JobStats {
+
+  /** Prefix of [[drain]]'s marker job groups; job counters skip them. */
+  val drainGroupPrefix = "graft-listener-drain-"
+
+  def jobGroup(j: SparkListenerJobStart): Option[String] =
+    Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+
+  /** Returns once every listener has been handed every event posted
+    * before the call: the bus delivers events in order, so when a
+    * marker job's start reaches this call's own listener, every
+    * earlier event has reached every listener. */
+  def drain(sc: SparkContext): Unit = {
+    val group = drainGroupPrefix + java.util.UUID.randomUUID
+    val seen = new CountDownLatch(1)
+    val marker = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (jobGroup(j).contains(group)) seen.countDown()
+    }
+    sc.addSparkListener(marker)
+    try {
+      sc.setJobGroup(group, "drain the listener bus")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      require(seen.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+    } finally sc.removeSparkListener(marker)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
@@ -35,40 +63,34 @@ object JobStats {
     // just totalled — the streaming keys' job budget is invisible at
     // the aggregate grain.
     val detail = sys.env.get("SPARK_GRAFT_JOBSTATS_DETAIL").contains("1")
-    val jobSites = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val stageJob =
-      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Integer]()
-    val jobTasks =
-      new java.util.concurrent.ConcurrentHashMap[Int, AtomicLong]()
-    val jobStart =
-      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-    val jobMs =
-      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
+    final case class Job(site: String, start: Long,
+      tasks: AtomicLong = new AtomicLong(0L), ms: AtomicLong = new AtomicLong(-1L))
+    val jobInfo = new ConcurrentHashMap[Int, Job]()
+    val stageJob = new ConcurrentHashMap[Int, Job]()
+    val drainStages = ConcurrentHashMap.newKeySet[Int]()
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        if (detail) {
-          val site = Option(j.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short")))
-            .getOrElse("?")
-          jobSites.put(j.jobId, site)
-          jobStart.put(j.jobId, j.time)
-          j.stageIds.foreach(sid => stageJob.put(sid, j.jobId))
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (jobGroup(j).exists(_.startsWith(drainGroupPrefix)))
+          j.stageIds.foreach(drainStages.add)
+        else {
+          jobs.incrementAndGet()
+          if (detail) {
+            val job = Job(Option(j.properties)
+              .flatMap(p => Option(p.getProperty("callSite.short")))
+              .getOrElse("?"), j.time)
+            jobInfo.put(j.jobId, job)
+            j.stageIds.foreach(stageJob.put(_, job))
+          }
         }
-      }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        if (detail) Option(jobStart.get(j.jobId)).foreach { t0 =>
-          jobMs.put(j.jobId, j.time - t0)
-        }
+        Option(jobInfo.get(j.jobId)).foreach(job => job.ms.set(j.time - job.start))
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        stages.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        if (detail) Option(stageJob.get(t.stageId)).foreach { jid =>
-          jobTasks.computeIfAbsent(jid.intValue, _ => new AtomicLong(0L))
-            .incrementAndGet()
+        if (!drainStages.contains(s.stageInfo.stageId)) stages.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (!drainStages.contains(t.stageId)) {
+          tasks.incrementAndGet()
+          Option(stageJob.get(t.stageId)).foreach(_.tasks.incrementAndGet())
         }
-      }
     })
     // warm the page cache like Bench does, then drop those events
     Tables.all.foreach(t => Tables.load(spark, sfDir, t).count())
@@ -80,22 +102,20 @@ object JobStats {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
-      Thread.sleep(200) // let straggling listener events drain
+      drain(spark.sparkContext) // the warm-up's last events land first
       jobs.set(0); stages.set(0); tasks.set(0L)
-      jobSites.clear(); stageJob.clear(); jobTasks.clear()
-      jobStart.clear(); jobMs.clear()
+      jobInfo.clear(); stageJob.clear()
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
+      drain(spark.sparkContext)
       println(f"[jobstats] $n jobs=${jobs.get} stages=${stages.get} " +
         f"tasks=${tasks.get} wall=$sec%.2f s")
       if (detail) {
         import scala.jdk.CollectionConverters._
-        jobSites.asScala.toSeq.sortBy(_._1).foreach { case (jid, site) =>
-          val nt = Option(jobTasks.get(jid)).map(_.get).getOrElse(0L)
-          val ms = Option(jobMs.get(jid)).map(_.longValue).getOrElse(-1L)
-          println(f"[jobstats]   $n job=$jid tasks=$nt ms=$ms site=$site")
+        jobInfo.asScala.toSeq.sortBy(_._1).foreach { case (jid, job) =>
+          println(f"[jobstats]   $n job=$jid tasks=${job.tasks.get} " +
+            f"ms=${job.ms.get} site=${job.site}")
         }
       }
     }

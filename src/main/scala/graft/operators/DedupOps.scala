@@ -712,14 +712,14 @@ object DedupOps {
   // transitive cluster"). Large-star/small-star edge contraction
   // (see clusterLabels): rounds are O(log diameter) and each round's
   // frames are edge-sized, with the full corpus joining in exactly
-  // once at the final labeling; each round localCheckpoints the edge
-  // frame to cut lineage, the standard Pregel-lite shape. The DuckDB
+  // once at the final labeling; Fixpoint.converge pins each round's
+  // edge frame, the standard Pregel-lite shape. The DuckDB
   // oracle rebuilds components independently via a recursive CTE over
   // the same lossless pair set.
   // ---------------------------------------------------------------
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     val docs = dupDocs(s, dir)
-    clusterLabels(docs, jaccardPairs(docs, jaccardTau))
+    clusterLabels(docs, jaccardPairs(docs, jaccardTau))._1
       .orderBy("doc_id")
   }
 
@@ -744,7 +744,7 @@ object DedupOps {
     Etl.withPathLock(Paths.get(root + ".lock")) {
       if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
         val docs = dupDocs(s, dir)
-        clusterLabels(docs, jaccardPairs(docs, jaccardTau))
+        clusterLabels(docs, jaccardPairs(docs, jaccardTau))._1
           .write.mode("overwrite").parquet(root)
         Files.writeString(tagPath, tag)
       }
@@ -775,16 +775,17 @@ object DedupOps {
     * story: components ride the dup graph, the clean 95% of the
     * corpus joins in exactly once at the final labeling.
     *
-    * Convergence is asserted, never assumed (an unconverged edge set
-    * is wrong, not slow): a round's change test is ONE odd-multiplicity
-    * aggregate over next ∪ prev (both are distinct sets, so a (a,b)
-    * with odd count is in exactly one of them). */
-  private[graft] def clusterLabels(docs: DataFrame, pairFrame: DataFrame): DataFrame = {
-    var edges = pairFrame.select(col("a"), col("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint()
-    var rounds = 0
-    var done = edges.head(1).isEmpty
-    while (!done && rounds < 50) {
+    * Convergence is asserted, never assumed: the state tags each
+    * edge with `in`, the bit set of rounds holding it (1 = this
+    * round, 2 = the previous), set by the round's final (a, b)
+    * aggregate, so the change test `in` =!= 3 needs no exchange of
+    * its own. Returns the labels and the rounds run. */
+  private[graft] def clusterLabels(docs: DataFrame,
+      pairFrame: DataFrame): (DataFrame, Int) = {
+    val init = pairFrame.select(col("a"), col("b"))
+      .filter(col("a") =!= col("b")).distinct().withColumn("in", lit(1))
+    val (stars, rounds) = Fixpoint.converge(init, 50, "clusterLabels") { state =>
+      val edges = state.filter(col("in") =!= 2).select("a", "b")
       // LARGE-STAR
       val dbl = edges.unionAll(
         edges.select(col("b").as("a"), col("a").as("b")))
@@ -803,41 +804,25 @@ object DedupOps {
       val canon = ls.select(greatest(col("a"), col("b")).as("a"),
         least(col("a"), col("b")).as("b"))
       val mins2 = canon.groupBy("a").agg(min(col("b")).as("m"))
-      // LAZY checkpoint fused with the convergence test (r14): the
-      // odd-multiplicity aggregate's map side computes EVERY partition
-      // of next, so the checkpoint materializes inside that job — one
-      // job per round instead of two (the qHierarchy discipline). The
-      // initial edges checkpoint stays eager: its follow-up action is
-      // head(1), which computes partitions incrementally and would
-      // leave the checkpoint to a fill-in job.
-      val next = canon.join(mins2, "a")
+      canon.join(mins2, "a")
         .select(col("b").as("a"), col("m").as("b"))
         .unionAll(mins2.select(col("a"), col("m").as("b")))
-        .filter(col("a") =!= col("b")).distinct()
-        .localCheckpoint(eager = false)
-      done = next.unionAll(edges).groupBy("a", "b")
-        .agg(count(lit(1)).as("c")).filter(col("c") % 2 === 1)
-        .head(1).isEmpty
-      edges = next
-      rounds += 1
-    }
-    require(done, s"star contraction did not converge in $rounds rounds")
-    lastClusterRounds = rounds
+        .filter(col("a") =!= col("b")).withColumn("in", lit(1))
+        .unionAll(edges.withColumn("in", lit(2)))
+        .groupBy("a", "b").agg(bit_or(col("in")).as("in"))
+    }(_.filter(col("in") =!= 3))
     // stars: every edge is (member, component-min); nodes with no
     // near-dup edge label themselves — the one O(docs) join
-    val roots = edges
+    val roots = stars // converged: every edge is tagged 3
       .select(greatest(col("a"), col("b")).as("doc_id"),
         least(col("a"), col("b")).as("label"))
       .groupBy("doc_id").agg(min(col("label")).as("label"))
-    docs.select(col("doc_id"))
+    val labels = docs.select(col("doc_id"))
       .join(roots, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("label"), col("doc_id")).as("canonical_id"))
+    (labels, rounds)
   }
-
-  /** Test hook: LS+SS alternations the last clusterLabels call took
-    * (the O(log diameter) claim is asserted, not assumed). */
-  @volatile private[graft] var lastClusterRounds: Int = -1
 
   /** The shared near-dup-component CTE chain (expects a CTE named
     * `corpus` with doc_id/text; leaves `reach(u, lbl)` for the

@@ -1721,7 +1721,7 @@ object Etl {
           .select(col("p_partkey").as("doc_id"))
         val pairs = StatsOps.qFuzzyJoin(s, dir)
           .select(col("a_key").as("a"), col("b_key").as("b"))
-        DedupOps.clusterLabels(ids, pairs)
+        DedupOps.clusterLabels(ids, pairs)._1
           .write.mode("overwrite").parquet(root)
         Files.writeString(tagPath, tag)
       }

@@ -1064,6 +1064,10 @@ object Relational {
       .orderBy(col("est_count").desc, col("item"))
   }
 
+  // the synthetic forest (root 0) q_hierarchy and q_bom_explosion walk
+  private def parentOf(c: Column): Column =
+    when(c > 0, (c * 48271L % 8191L) % c).otherwise(lit(0L))
+
   /** Recursive hierarchy walk — the WITH RECURSIVE capability Spark
     * has no native operator for (org charts, bill-of-materials,
     * category trees: every warehouse has one). Each order key gets a
@@ -1075,38 +1079,22 @@ object Relational {
     * tree): each round follows the current pointer's pointer and adds
     * its distance, so after r rounds every pointer has advanced 2^r
     * steps — O(log depth) rounds of thin (k, ptr, dist) frames, with
-    * one localCheckpoint per round cutting lineage. The convergence
-    * count rides the same materialization. All-integer arithmetic:
-    * bit-exact against DuckDB's native WITH RECURSIVE replay of the
-    * same parent formula. */
+    * the state pinned per round by [[Fixpoint.converge]], whose
+    * convergence count rides the same materialization. All-integer
+    * arithmetic: bit-exact against DuckDB's native WITH RECURSIVE
+    * replay of the same parent formula. */
   def qHierarchy(s: SparkSession, dir: String): DataFrame = {
-    def parentOf(c: Column): Column =
-      when(c > 0, (c * 48271L % 8191L) % c).otherwise(lit(0L))
-    // LAZY checkpoints (r14): the convergence count that follows each
-    // round is the action that materializes the round's blocks, so
-    // the eager checkpoint's own separate job disappears — one job
-    // per round instead of two. Safe because the count runs BEFORE
-    // the next round's join reads the blocks (no intra-job recompute
-    // race — contrast qBfsReach, where the checkpointed edge frame is
-    // consumed by several stages of one job and stays eager).
-    var t = Tables.load(s, dir, "orders")
+    val init = Tables.load(s, dir, "orders")
       .select(col("o_orderkey").as("k"),
         parentOf(col("o_orderkey")).as("ptr"),
         when(col("o_orderkey") > 0, 1L).otherwise(0L).as("dist"))
-      .localCheckpoint(eager = false)
-    var open = t.filter(col("ptr") =!= 0).count()
-    var rounds = 0
-    while (open > 0) {
-      rounds += 1
-      require(rounds <= 40, s"pointer doubling failed to converge")
+    val (t, _) = Fixpoint.converge(init, 40, "q_hierarchy") { t =>
       val t2 = t.select(col("k").as("j_k"), col("ptr").as("j_ptr"),
         col("dist").as("j_dist"))
-      t = t.join(t2.hint("shuffle_hash"), col("ptr") === col("j_k"))
+      t.join(t2.hint("shuffle_hash"), col("ptr") === col("j_k"))
         .select(col("k"), col("j_ptr").as("ptr"),
           (col("dist") + col("j_dist")).as("dist"))
-        .localCheckpoint(eager = false)
-      open = t.filter(col("ptr") =!= 0).count()
-    }
+    }(_.filter(col("ptr") =!= 0))
     t.select(col("k").as("o_orderkey"), col("dist").as("depth"))
       .orderBy("o_orderkey")
   }
@@ -1718,8 +1706,8 @@ object Relational {
     * joins every node's walked segment onto the segment starting
     * where it ended (position, accumulated product), so path length
     * covered doubles per round: O(log depth) shuffle-pinned
-    * self-joins, localCheckpoint truncating lineage per round
-    * (dedup_clusters' regime), instead of O(depth) sequential steps.
+    * self-joins, each round's state pinned by [[Fixpoint.converge]],
+    * instead of O(depth) sequential steps.
     * Root-absorbed rows ride along unchanged. The path product `q`
     * itself rides in DECIMAL(38,0) from the first edge — effective
     * quantities grow GEOMETRICALLY with depth, and a long product
@@ -1728,37 +1716,26 @@ object Relational {
     * errors on its BIGINT cast), never as silent garbage. Rollup
     * sums stay decimal, cast to long only at the output edge. */
   def qBomExplosion(s: SparkSession, dir: String): DataFrame = {
-    def parentOf(c: Column): Column =
-      when(c > 0, (c * 48271L % 8191L) % c).otherwise(lit(0L))
     def qtyOf(c: Column): Column = lit(1L) + pmod(c, lit(3L))
     val parts = Tables.load(s, dir, "part")
       .select(col("p_partkey").as("k"),
         expr("cast(cast(p_retailprice as decimal(12,2)) * 100 as bigint)")
           .as("cents"))
-    // LAZY checkpoints fused with the convergence count, exactly as
-    // in qHierarchy (r14): one job per composition round, not two.
-    var t = parts
+    val init = parts
       .select(col("k"),
         when(parentOf(col("k")) === 0, col("k")).as("root"),
         parentOf(col("k")).as("ptr"),
         when(parentOf(col("k")) === 0, lit(1L))
           .otherwise(qtyOf(col("k"))).cast("decimal(38,0)").as("q"))
-      .localCheckpoint(eager = false)
-    var open = t.filter(col("root").isNull).count()
-    var rounds = 0
-    while (open > 0) {
-      rounds += 1
-      require(rounds <= 40, "BOM path composition failed to converge")
+    val (t, _) = Fixpoint.converge(init, 40, "q_bom_explosion") { t =>
       val j = t.select(col("k").as("j_k"), col("root").as("j_root"),
         col("ptr").as("j_ptr"), col("q").as("j_q"))
-      t = t.filter(col("root").isNull)
+      t.filter(col("root").isNull)
         .join(j.hint("shuffle_hash"), col("ptr") === col("j_k"))
         .select(col("k"), col("j_root").as("root"),
           col("j_ptr").as("ptr"), (col("q") * col("j_q")).as("q"))
         .unionByName(t.filter(col("root").isNotNull))
-        .localCheckpoint(eager = false)
-      open = t.filter(col("root").isNull).count()
-    }
+    }(_.filter(col("root").isNull))
     t.join(parts.hint("shuffle_hash"), Seq("k"))
       .groupBy(col("root").as("root_part"))
       .agg(count(lit(1)).as("n_parts"),

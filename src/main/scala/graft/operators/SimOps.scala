@@ -1444,9 +1444,9 @@ object SimOps {
     * frames and their O(queries·m²) pairwise-cosine table — model-
     * sized at any corpus scale, exactly how production MMR runs
     * (rerank the shortlist, never the corpus). The k−1 greedy rounds
-    * are unrolled joins over those bounded frames (the text_bpe_train
-    * iterative discipline), each round localCheckpoint'd so lineage
-    * stays flat. Ties break on vec_id; all cosine trees are the
+    * are unrolled joins over those bounded frames, each round's
+    * picked set pinned by [[Fixpoint.unroll]] so lineage stays flat.
+    * Ties break on vec_id; all cosine trees are the
     * mirrored IEEE form, so the argmax is bit-deterministic. */
   def simMmrRerank(s: SparkSession, dir: String): DataFrame = {
     val c = corpus(s, dir)
@@ -1456,15 +1456,6 @@ object SimOps {
     val scored = c.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), col("v"), col("nrm"),
         (dotD(col("v"), col("qv")) / (col("nrm") * col("qnrm"))).as("rel"))
-    // LAZY checkpoints throughout (r14): every frame past the corpus
-    // scan is O(queries·m) model-sized, and the loop interleaves no
-    // driver action — eager checkpoints ran one job per round (7 jobs
-    // of pure scheduling). Lazy keeps the plan-truncation (each
-    // checkpoint still swaps the logical plan for an RDD reference,
-    // so planning stays flat across rounds) while the single final
-    // action materializes each marked RDD and caches its blocks
-    // (concurrent stages MAY recompute a partition before the cache
-    // fills — harmless: deterministic content, set-semantic reads).
     val candV = graft.plans.TopKPerKey.topK(scored, Seq("q_id"),
       Seq(col("rel").desc, col("vec_id")), mmrShortlist)
       .localCheckpoint(eager = false)
@@ -1480,12 +1471,12 @@ object SimOps {
       .localCheckpoint(eager = false)
     val w1 = Window.partitionBy(col("q_id"))
       .orderBy(col("rel").desc, col("vec_id"))
-    var selected = cand
+    val first = cand
       .withColumn("rn", row_number().over(w1)).filter(col("rn") === 1)
       .select(col("q_id"), lit(1).as("rnd"), col("vec_id"), col("rel"),
         lit(null).cast("double").as("red"))
-      .localCheckpoint(eager = false)
-    for (t <- 2 to mmrK) {
+    val picked = Fixpoint.unroll(first, mmrK - 1) { (selected, r) =>
+      val t = r + 1
       val selKeys = selected.select(col("q_id"), col("vec_id"))
       val remaining = cand.join(selKeys, Seq("q_id", "vec_id"), "left_anti")
       // redundancy of each candidate vs the picked set: max pairwise
@@ -1502,9 +1493,9 @@ object SimOps {
         .withColumn("rn", row_number().over(wt)).filter(col("rn") === 1)
         .select(col("q_id"), lit(t).as("rnd"), col("vec_id"), col("rel"),
           col("red"))
-      selected = selected.unionByName(selT).localCheckpoint(eager = false)
+      selected.unionByName(selT)
     }
-    selected.orderBy("q_id", "rnd")
+    picked.orderBy("q_id", "rnd")
   }
 
   val simMmrRerankSql: String = {

@@ -575,41 +575,30 @@ object StatsOps {
     *
     * Built as textbook distributed BFS: per round, frontier ⨝ edges
     * (keyed shuffle joins, never cartesian) → dedup → anti-join the
-    * visited set → label with the round number; localCheckpoint pins
-    * each round (the dedup_clusters iterative discipline — lineage
-    * stays O(1) per round). The first label IS the minimal hop, so
-    * the result equals the oracle's recursive-CTE MIN(hop) exactly.
+    * visited set → label with the round number (the frontier is the
+    * visited rows of the previous hop). The first label IS the
+    * minimal hop, so the result equals the oracle's MIN(hop) exactly.
     *
     * Scale shape: every round's work is frontier-sized, the edge
     * list shuffles once per round on the join key (at production
     * scale the edge frame is partition-pinned once and reused);
     * rounds are bounded by the hop horizon, not the graph. */
   def qBfsReach(s: SparkSession, dir: String): DataFrame = {
-    // LAZY checkpoints throughout (r14): the hop horizon is a
-    // CONSTANT (3), no convergence count interleaves the rounds, so
-    // eager checkpoints bought nothing but one scheduling job per
-    // frame (7 jobs total). Lazy keeps the per-round plan truncation
-    // (planning stays O(1) per round); the single final action
-    // materializes each marked RDD (concurrent stages of that job MAY
-    // recompute a partition before its cache blocks land — harmless
-    // here: every consumer is set-semantic over deterministic
-    // content, and the JobStats task counts dropped, not rose).
     val e = coPurchaseEdges(s, dir).localCheckpoint(eager = false)
     val src = Tables.load(s, dir, "part")
       .filter(col("p_partkey") % bfsSourceModulus === 0)
       .select(col("p_partkey").as("p")).withColumn("hop", lit(0))
-    var visited = src.localCheckpoint(eager = false)
-    var frontier = visited.select("p")
-    (1 to bfsMaxHops).foreach { h =>
-      val next = frontier
+    val visited = Fixpoint.unroll(src, bfsMaxHops) { (visited, h) =>
+      // hop 1's frontier is all of visited: read unfiltered, its
+      // exchange is the anti-join's, and AQE runs it once
+      val frontier =
+        if (h == 1) visited else visited.filter(col("hop") === h - 1)
+      visited.union(frontier.select("p")
         .join(e.hint("shuffle_hash"), col("p") === col("a"))
         .select(col("b").as("p")).distinct()
         .join(visited.select("p").hint("shuffle_hash"), Seq("p"),
           "left_anti")
-        .withColumn("hop", lit(h))
-        .localCheckpoint(eager = false)
-      visited = visited.union(next).localCheckpoint(eager = false)
-      frontier = next.select("p")
+        .withColumn("hop", lit(h)))
     }
     visited.select(col("p").as("p_partkey"),
       col("hop").cast(LongType).as("hops")).orderBy("p_partkey")
@@ -641,9 +630,8 @@ object StatsOps {
     * never cartesian), then ONE min-agg collapses candidates; after
     * round k every label is the exact minimum over ≤k-edge walks
     * (the optimal ≤k+1-edge walk extends an optimal ≤k-edge walk, so
-    * per-round min-collapse loses nothing). localCheckpoint pins
-    * each round — the dedup_clusters iterative discipline, lineage
-    * O(1) per round.
+    * per-round min-collapse loses nothing). [[Fixpoint.unroll]]
+    * pins each round's labels.
     *
     * Scale shape: edge weights come from ONE map-side-combined
     * min-agg over the co-purchase self-join (thin integer rows);
@@ -662,20 +650,15 @@ object StatsOps {
       .select(col("x.p").as("a"), col("y.p").as("b"),
         (col("x.q") + col("y.q")).as("qq"))
       .groupBy("a", "b").agg(min("qq").as("w"))
-      // LAZY checkpoints: fixed-horizon loop with no interleaved
-      // driver action — same rationale as qBfsReach above.
       .localCheckpoint(eager = false)
     val src = Tables.load(s, dir, "part")
       .filter(col("p_partkey") % bfsSourceModulus === 0)
       .select(col("p_partkey").as("p")).withColumn("cost", lit(0L))
-    var dist = src.localCheckpoint(eager = false)
-    (1 to bfsMaxHops).foreach { _ =>
+    val dist = Fixpoint.unroll(src, bfsMaxHops) { (dist, _) =>
       val relax = dist
         .join(e.hint("shuffle_hash"), col("p") === col("a"))
         .select(col("b").as("p"), (col("cost") + col("w")).as("cost"))
-      dist = dist.union(relax)
-        .groupBy("p").agg(min("cost").as("cost"))
-        .localCheckpoint(eager = false)
+      dist.union(relax).groupBy("p").agg(min("cost").as("cost"))
     }
     dist.select(col("p").as("p_partkey"), col("cost")).orderBy("p_partkey")
   }
@@ -1578,11 +1561,12 @@ object StatsOps {
       .filter((col("ax") - col("bx")) * (col("ax") - col("bx")) +
         (col("ay") - col("by")) * (col("ay") - col("by")) <= dbscanEps2)
       .select(col("a"), col("b"))
-      // LAZY (r14): feeds counts, core edges AND border adoption, but
-      // the FIRST consumer to run is clusterLabels' eager initial edge
-      // checkpoint, whose job shuffles every partition of nbr/cores —
-      // both materialize fully inside it; the eager versions were two
-      // extra scheduling jobs.
+      // LAZY (r14): feeds counts, core edges AND border adoption. Under
+      // AQE a pin runs its plan's shuffle stages when it is taken, so
+      // `cores`' pin below shuffles every partition of nbr, and
+      // clusterLabels' initial edge pin shuffles every partition of
+      // nbr and cores — each materializes inside a job that runs
+      // anyway; eager pins would add two scheduling jobs.
       .localCheckpoint(eager = false)
     val cnt = nbr.groupBy(col("a").as("pid"))
       .agg(count(lit(1)).as("n_neighbors"))
@@ -1592,7 +1576,7 @@ object StatsOps {
       .join(cores.toDF("a"), "a").join(cores.toDF("b"), "b")
       .filter(col("a") < col("b"))
     val labels = DedupOps.clusterLabels(
-        cores.toDF("doc_id"), coreEdges.select("a", "b"))
+        cores.toDF("doc_id"), coreEdges.select("a", "b"))._1
       .toDF("pid", "cluster")
     val border = nbr.filter(col("a") =!= col("b"))
       .join(cores.toDF("b"), "b")

@@ -414,20 +414,12 @@ object StreamOps {
       q.stop()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(hbDir))
     }
-    lastStreamJoinSinkRows = spark.table(name).count()
     collectAndDrop(spark, name, spark.table(name)
       .groupBy("user_id")
       .agg(sum(col("n_pairs")).as("n_pairs"),
         sum(col("sum_gap_us")).as("sum_gap_us"))
       .orderBy("user_id"))
   }
-
-  /** Test hook: the per-(user, window) aggregate row count the memory
-    * sink held for the last streamJoin drain — the scale invariant the
-    * chained-agg shape exists for (sink rows = aggregate groups, not
-    * raw pairs). Captured here because the sink view is dropped on
-    * return. */
-  @volatile private[graft] var lastStreamJoinSinkRows: Long = -1L
 
   /** Batch twin of streamJoin for parity checks. */
   def batchJoin(spark: SparkSession, sfDir: String): DataFrame = {

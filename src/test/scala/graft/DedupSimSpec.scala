@@ -38,12 +38,14 @@ class DedupSimSpec extends AnyFunSuite {
   }
 
   test("dedup_clusters: planted pairs share a canonical id; chains are transitive") {
-    val rows = DedupOps.dedupClusters(spark, sf).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the dedup_clusters chain, run directly for its round count
+    val dupDocs = DedupOps.dupDocs(spark, sf)
+    val (labels, rounds) = DedupOps.clusterLabels(dupDocs,
+      DedupOps.jaccardPairs(dupDocs, DedupOps.jaccardTau))
+    val rows = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // star contraction keeps rounds logarithmic — converging anywhere
     // near the 50-round cap means the rewiring degraded to O(diameter)
-    assert(DedupOps.lastClusterRounds > 0 && DedupOps.lastClusterRounds <= 10,
-      s"star contraction took ${DedupOps.lastClusterRounds} rounds")
+    assert(rounds > 0 && rounds <= 10, s"star contraction took $rounds rounds")
     // every doc labeled, labels are component minima (<= the doc id)
     assert(rows.size == 550)
     rows.foreach { case (d, c) => assert(c <= d) }
@@ -57,7 +59,7 @@ class DedupSimSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Seq(1L, 2L, 3L, 4L, 9L).toDF("doc_id")
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
-    val got = DedupOps.clusterLabels(docs, chain).collect()
+    val got = DedupOps.clusterLabels(docs, chain)._1.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 9L -> 9L))
   }

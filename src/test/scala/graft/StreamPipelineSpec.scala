@@ -938,7 +938,34 @@ class StreamPipelineSpec extends AnyFunSuite {
   }
 
   test("stream_join (stream-stream interval join) equals its batch twin") {
-    val streamed = StreamOps.streamJoin(spark, sf).collect()
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    // the memory sink's row count, summed over the query's own progress
+    // reports (streamJoin drops the sink view before it returns)
+    val sinkRows = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, java.lang.Long]
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      // delivered synchronously from start(), before any progress event
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (Option(e.name).exists(_.startsWith("stream_join_"))) sinkRows.put(e.id, 0L)
+      // an idle trigger reports -1: it wrote nothing
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        sinkRows.computeIfPresent(e.progress.id,
+          (_, n) => n + math.max(e.progress.sink.numOutputRows, 0L))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (sinkRows.containsKey(e.id)) ended.countDown()
+    }
+    val streams = StreamOps.streamingSessionForTest(spark).streams
+    streams.addListener(listener)
+    val streamed =
+      try {
+        val rows = StreamOps.streamJoin(spark, sf).collect()
+        // progress events precede the termination event on the bus
+        assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        rows
+      } finally streams.removeListener(listener)
+    assert(sinkRows.size == 1, s"stream_join queries seen: ${sinkRows.keySet}")
+    val sinkHeld = sinkRows.values.iterator.next().longValue
     val batch = StreamOps.batchJoin(spark, sf).collect()
     assert(streamed.nonEmpty && streamed.length == batch.length)
     streamed.zip(batch).foreach { case (s, b) => assert(s == b) }
@@ -958,11 +985,10 @@ class StreamPipelineSpec extends AnyFunSuite {
     val nPairs = pairs.count()
     val nGroups = pairs
       .groupBy(col("c_user"), window(col("c_ts"), "6 hours")).count().count()
-    assert(StreamOps.lastStreamJoinSinkRows == nGroups,
-      s"sink held ${StreamOps.lastStreamJoinSinkRows} rows, want $nGroups groups")
+    assert(sinkHeld == nGroups, s"sink held $sinkHeld rows, want $nGroups groups")
     // at sf0.001 groups may hold a single pair each, so == is legal;
     // the structural claim is sink rows track GROUPS, bounded by pairs
-    assert(StreamOps.lastStreamJoinSinkRows <= nPairs,
+    assert(sinkHeld <= nPairs,
       s"sink rows should be aggregates (<= $nPairs raw pairs)")
   }
 
@@ -1277,33 +1303,11 @@ class StreamPipelineSpec extends AnyFunSuite {
   }
 
   test("Pipeline.migrate runs one load and one write job per table") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"migrate-jobs-${java.util.UUID.randomUUID}"
-    val drain = s"$group-drain"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`drain`) => drained.countDown()
-          case _ =>
-        }
-    }
     val out = java.nio.file.Files.createTempDirectory("migrate_jobs").toString
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "migrate job count")
-      try Pipeline.migrate(spark, sf, out, Seq("nation", "region"), SchemaChanges())
-      finally sc.clearJobGroup()
-      // the bus delivers events in order: once the drain job's start
-      // arrives, every migrate job start has been counted
-      sc.setJobGroup(drain, "drain the listener bus")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 4, s"${jobs.get} jobs for 2 tables")
+    val (_, jobs) = JobCount.in(spark) {
+      Pipeline.migrate(spark, sf, out, Seq("nation", "region"), SchemaChanges())
+    }
+    assert(jobs == 4, s"$jobs jobs for 2 tables")
   }
 
   test("Pipeline.migrateAll migrates multiple databases with prefix filter") {
