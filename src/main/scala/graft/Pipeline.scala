@@ -11,9 +11,12 @@ import graft.sqlgen.PgSqlGen
 /** End-to-end migration orchestration — the reference's main.py flow
   * (introspect → rules → pre-SQL → extract → convert → artifacts)
   * over Spark. Where the reference forks a multiprocessing pool per
-  * database (/root/reference/main.py:124-189), here each table is an
-  * independent lazy plan and Spark schedules all partitions across
-  * the cluster; the driver-side loop only submits jobs.
+  * database (main.py:124-189), here migrate makes one pool pass with
+  * one task per table — load, introspect, rules, convert, write — and
+  * Spark schedules every table's partitions across the cluster. Like
+  * the reference, which derives every schema stage and the DDL from
+  * one introspected JSON, a migration introspects each table once:
+  * writeArtifacts only serializes the MigrationResult.
   */
 object Pipeline {
 
@@ -29,8 +32,12 @@ object Pipeline {
   case class TableResult(originalName: String, outputName: String,
       rows: Long, ddl: String, copySql: String)
 
+  /** `originals` is the raw introspection of every requested table,
+    * skipped ones included, in the caller's order: the bundle's
+    * `mysql_schema.json` stage, which writeArtifacts serializes. */
   case class MigrationResult(tables: Seq[TableResult],
-      schemaSql: String, constraintsSql: String, viewsSql: String)
+      schemaSql: String, constraintsSql: String, viewsSql: String,
+      originals: Seq[TableDef])
 
   /** The per-table extract+convert plan migrate dumps: rules-driven
     * extraction (where/joins/renames/casts) followed by the raw-dump
@@ -62,9 +69,11 @@ object Pipeline {
   /** Migrate a set of parquet-backed tables: apply schema rules,
     * extract per rules (where/joins/renames/casts), write PG-dialect
     * CSV dumps, and emit the full DDL bundle (create tables + FKs +
-    * indexes + setvals + v1-compat views). Each table is loaded and
-    * introspected once; its frame also serves every `_JOIN_`/orphan/
-    * pre-SQL lookup of it. */
+    * indexes + setvals + v1-compat views). One pool pass runs each
+    * table start to end: load, introspect, schema rules and, unless
+    * the change-set skips it, convert and write. Each table is loaded
+    * once per call; its frame also serves every `_JOIN_`/orphan/
+    * pre-SQL lookup of it, including tables outside `tables`. */
   def migrate(spark: SparkSession, sfDir: String, outDir: String,
       tables: Seq[String], changes: SchemaChanges,
       node: NodeRules = NodeRules.mysqlToPg,
@@ -73,37 +82,41 @@ object Pipeline {
       sink: Sink = PgCsv,
       indexes: Map[String, Seq[IndexDef]] = Map.empty): MigrationResult = {
 
-    val frames = scala.collection.mutable.Map.empty[String, DataFrame]
-    def load(t: String): DataFrame = frames.synchronized(
-      frames.getOrElseUpdate(t, Tables.load(spark, sfDir, t)))
-    val changed = tables.flatMap { t =>
-      val orig = Introspect.fromSpark(load(t), t,
-        pk = pks.getOrElse(t, Nil), indexes = indexes.getOrElse(t, Nil))
-      SchemaRules(Seq(orig), changes, node).map(orig -> _)
-    }
+    // one lazy cell per table: concurrent loads of different tables
+    // run in parallel, and a second lookup of a table waits only for
+    // that table's load
+    final class Frame(t: String) { lazy val df = Tables.load(spark, sfDir, t) }
+    val frames = new java.util.concurrent.ConcurrentHashMap[String, Frame]
+    def load(t: String): DataFrame = frames.computeIfAbsent(t, new Frame(_)).df
 
     // the reference forks a multiprocessing pool per table
-    // (main.py:124-189); here each table's write is an independent
-    // Spark job submitted concurrently — partitions of all tables
-    // interleave across the cluster, so small tables don't serialize
-    // behind big ones
-    val results = onPool(changed, 8) { case (orig, td) =>
-      val converted = convert(load(orig.name), orig, td, changes, node,
-        skipPreSql, load)
-      val outPath = s"$outDir/${td.name}"
-      val rows = countWritten(converted)(df => sink match {
-        case PgCsv => PgCopyWriter.write(df, outPath)
-        case ParquetLake(partitionBy) =>
-          val w = df.write.mode("overwrite")
-          partitionBy.get(orig.name).filter(_.nonEmpty)
-            .fold(w)(cols => w.partitionBy(cols: _*))
-            .parquet(outPath)
-      })
-      TableResult(orig.name, td.name,
-        rows = rows,
-        ddl = PgSqlGen.dropTable(td) + "\n" + PgSqlGen.createTable(td),
-        copySql = PgSqlGen.copyStatement(td, outPath))
+    // (main.py:124-189); here each table's schema read and write are
+    // independent Spark jobs submitted concurrently — partitions of
+    // all tables interleave across the cluster, so small tables don't
+    // serialize behind big ones
+    val perTable = onPool(tables, 8) { t =>
+      val src = load(t)
+      val orig = Introspect.fromSpark(src, t,
+        pk = pks.getOrElse(t, Nil), indexes = indexes.getOrElse(t, Nil))
+      orig -> SchemaRules(Seq(orig), changes, node).headOption.map { td =>
+        val converted = convert(src, orig, td, changes, node, skipPreSql, load)
+        val outPath = s"$outDir/${td.name}"
+        val rows = countWritten(converted)(df => sink match {
+          case PgCsv => PgCopyWriter.write(df, outPath)
+          case ParquetLake(partitionBy) =>
+            val w = df.write.mode("overwrite")
+            partitionBy.get(t).filter(_.nonEmpty)
+              .fold(w)(cols => w.partitionBy(cols: _*))
+              .parquet(outPath)
+        })
+        td -> TableResult(t, td.name,
+          rows = rows,
+          ddl = PgSqlGen.dropTable(td) + "\n" + PgSqlGen.createTable(td),
+          copySql = PgSqlGen.copyStatement(td, outPath))
+      }
     }
+    val changed = perTable.collect { case (orig, Some((td, _))) => orig -> td }
+    val results = perTable.flatMap(_._2).map(_._2)
 
     val constraints = changed.map { case (_, td) =>
       PgSqlGen.setval(td) + PgSqlGen.foreignKeys(td) + PgSqlGen.indexes(td)
@@ -116,7 +129,8 @@ object Pipeline {
       schemaSql = PgSqlGen.schemaPreamble("public") +
         results.map(_.ddl).mkString("\n\n"),
       constraintsSql = constraints,
-      viewsSql = views)
+      viewsSql = views,
+      originals = perTable.map(_._1))
   }
 
   /** The `all-databases` analog (main.py:168-189): migrate several
@@ -159,10 +173,17 @@ object Pipeline {
     * (main.py:52-112: mysql_schema.json, mysql_schema_v2.json,
     * psql_schema.json, psql_tables.sql, psql_data.sql,
     * psql_index_fk.sql, psql_views.sql) alongside the per-table CSV
-    * dumps migrate() already produced under `outDir`. The three
-    * schema JSONs are distinct stages, as in main.py:54-69:
-    * raw introspection → user changes applied (still mysql types) →
-    * node type-map applied (PG types). */
+    * dumps migrate() already produced under `outDir`. The bundle is a
+    * serialization of `result`: it reads no source and runs no job.
+    * The three schema JSONs are distinct stages, as in main.py:54-69:
+    * raw introspection (`result.originals`) → user changes applied
+    * (still mysql types) → node type-map applied (PG types).
+    *
+    * `tables`, `pks` and `indexes` must be the ones `result` was
+    * migrated with, or the schema JSONs would describe other tables
+    * than the SQL files; a mismatch throws IllegalArgumentException.
+    * `spark` and `sfDir` are unused, kept only for the benchmark's
+    * call site. */
   def writeArtifacts(spark: SparkSession, sfDir: String, outDir: String,
       tables: Seq[String], changes: SchemaChanges,
       result: MigrationResult,
@@ -170,13 +191,23 @@ object Pipeline {
       pks: Map[String, Seq[String]] = Map.empty,
       indexes: Map[String, Seq[IndexDef]] = Map.empty): Unit = {
     import java.nio.file.{Files, Paths}
+    val introspected = result.originals.map(o => o.name -> o).toMap
+    val originals = tables.map { t =>
+      val orig = introspected.getOrElse(t, throw new IllegalArgumentException(
+        s"table $t was not migrated in this result"))
+      val pk = pks.getOrElse(t, Nil)
+      if (orig.columns.exists(c => c.isPk != pk.contains(c.name)))
+        throw new IllegalArgumentException(
+          s"table $t was migrated with pk ${orig.pkColumns.map(_.name)}, not $pk")
+      if (orig.indexes != indexes.getOrElse(t, Nil))
+        throw new IllegalArgumentException(
+          s"table $t was migrated with indexes ${orig.indexes}, not ${indexes.getOrElse(t, Nil)}")
+      orig
+    }
     val dir = Paths.get(outDir)
     Files.createDirectories(dir)
     def write(name: String, content: String): Unit =
       Files.writeString(dir.resolve(name), content)
-    val originals = tables.map(t =>
-      Introspect.fromSpark(Tables.load(spark, sfDir, t), t,
-        pk = pks.getOrElse(t, Nil), indexes = indexes.getOrElse(t, Nil)))
     // v2 = user changes only (mysql-flavoured types, RuleHandler
     // .obtain_modified_schema); psql = v2 + the mysql_to_psql node map
     // (PsqlParser.get_schema_from_mysql:38-41)

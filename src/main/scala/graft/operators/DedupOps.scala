@@ -113,9 +113,6 @@ object DedupOps {
       .orderBy(col("jaccard").desc, col("a"), col("b"))
       .limit(20)
 
-  /** All near-dup pairs (a < b, word-3gram Jaccard >= tau) of a
-    * (doc_id, text) frame — the reusable core of dedup_ngram_jaccard,
-    * also exercised by the randomized brute-force equivalence spec. */
   /** df-cap knob for the pair generator (the DEPLOY.md skew guard):
     * 0 (the fixture default — at corpus df ≈ 10-30 plain counting
     * wins outright) disables it; > 0 routes shingles with document
@@ -125,7 +122,7 @@ object DedupOps {
     * (see jaccardPairsCapped for the losslessness argument). At web
     * scale this is the knob that keeps one viral boilerplate shingle
     * from turning candidate generation into a df² explosion. */
-    val dfCapKey = "spark.graft.dedup.dfCap"
+  val dfCapKey = "spark.graft.dedup.dfCap"
 
   /** The (doc_id, n_sh, shingle-hash) postings frame the pair
     * generator joins on. Hashes stay UNSORTED: size(), explode() and
@@ -168,6 +165,9 @@ object DedupOps {
           (col("na") + col("nb") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= tau)
 
+  /** All near-dup pairs (a < b, word-3gram Jaccard >= tau) of a
+    * (doc_id, text) frame — the reusable core of dedup_ngram_jaccard,
+    * also exercised by the randomized brute-force equivalence spec. */
   def jaccardPairs(input: DataFrame, tau: Double): DataFrame = {
     // |∩| by COUNTING: explode each doc's distinct hashed shingles
     // and count shared shingles per (a, b) in the co-occurrence

@@ -1310,6 +1310,41 @@ class StreamPipelineSpec extends AnyFunSuite {
     assert(jobs == 4, s"$jobs jobs for 2 tables")
   }
 
+  test("Pipeline.migrate looks up tables outside its list under concurrent loads") {
+    import java.nio.file.{Files, Paths}
+    // sf0.001 with every tenth customer and part key removed, so both
+    // rules drop rows; neither parent table is in the migrated list
+    val src = Files.createTempDirectory("migrate_lookups_src")
+    Seq("orders", "lineitem").foreach(t => Files.createSymbolicLink(
+      src.resolve(s"$t.parquet"), Paths.get(sf, s"$t.parquet").toRealPath()))
+    Seq("customer" -> "c_custkey", "part" -> "p_partkey").foreach { case (t, k) =>
+      Tables.load(spark, sf, t).filter(col(k) % 10 =!= 0)
+        .write.parquet(src.resolve(s"$t.parquet").toString)
+    }
+    val out = Files.createTempDirectory("migrate_lookups").toString
+    val changes = SchemaChanges(Map(
+      "orders" -> TableChange(
+        dropOrphans = Seq(OrphanRule("o_custkey", "customer", "c_custkey"))),
+      "lineitem" -> TableChange(
+        joins = Seq(JoinRule("part", "l_partkey", "p_partkey")))))
+    val (res, jobs) = JobCount.in(spark) {
+      Pipeline.migrate(spark, src.toString, out, Seq("orders", "lineitem"), changes)
+    }
+    def semi(t: String, fk: String, parent: String, key: String): Long = {
+      val kept = Tables.load(spark, src.toString, t)
+        .join(Tables.load(spark, src.toString, parent).select(key),
+          col(fk) === col(key), "left_semi").count()
+      assert(kept < Tables.load(spark, sf, t).count(), s"$t: nothing dropped")
+      kept
+    }
+    assert(res.tables.map(t => t.originalName -> t.rows) == Seq(
+      "orders" -> semi("orders", "o_custkey", "customer", "c_custkey"),
+      "lineitem" -> semi("lineitem", "l_partkey", "part", "p_partkey")))
+    // 2 schema reads and 2 writes of the migrated tables, 2 schema
+    // reads of the looked-up parents, 2 for the parents' broadcasts
+    assert(jobs == 8, s"$jobs jobs")
+  }
+
   test("Pipeline.migrateAll migrates multiple databases with prefix filter") {
     val out = java.nio.file.Files.createTempDirectory("multidb").toString
     val dbs = Map(
@@ -1337,8 +1372,11 @@ class StreamPipelineSpec extends AnyFunSuite {
       IndexDef("by_nation_seg", Seq("c_nationkey", "c_mktsegment"))))
     val res = Pipeline.migrate(spark, sf, out, tables, changes, pks = pks,
       indexes = idx)
-    Pipeline.writeArtifacts(spark, sf, out, tables, changes, res, pks = pks,
-      indexes = idx)
+    val (_, bundleJobs) = JobCount.in(spark) {
+      Pipeline.writeArtifacts(spark, sf, out, tables, changes, res, pks = pks,
+        indexes = idx)
+    }
+    assert(bundleJobs == 0, s"the bundle ran $bundleJobs jobs")
     def read(f: String) =
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(out, f)))
@@ -1358,6 +1396,41 @@ class StreamPipelineSpec extends AnyFunSuite {
     assert(psql.contains("\"clients\"") && psql.contains("\"type\": \"decimal\""))
     assert(!psql.contains("\"type\": \"double\""))
     assert(read("mysql_schema.json").contains("\"customer\""))
+    // the raw stage is migrate's introspection, equal to a fresh one
+    assert(read("mysql_schema.json") == PgSqlGen.schemaJson(tables.map(t =>
+      Introspect.fromSpark(Tables.load(spark, sf, t), t,
+        pk = pks(t), indexes = idx.getOrElse(t, Nil)))))
+  }
+
+  /** Migrates `nation` with its pk, bundles the result with these
+    * arguments and returns the rejection's message; a rejected bundle
+    * writes no file. */
+  private def bundleMismatch(tables: Seq[String], pks: Map[String, Seq[String]],
+      indexes: Map[String, Seq[IndexDef]] = Map.empty): String = {
+    val out = java.nio.file.Files.createTempDirectory("mismatch").toString
+    val res = Pipeline.migrate(spark, sf, out, Seq("nation"), SchemaChanges(),
+      pks = Map("nation" -> Seq("n_nationkey")))
+    val e = intercept[IllegalArgumentException](Pipeline.writeArtifacts(spark,
+      sf, out, tables, SchemaChanges(), res, pks = pks, indexes = indexes))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "mysql_schema.json")))
+    e.getMessage
+  }
+
+  test("Pipeline.writeArtifacts rejects a table the result did not migrate") {
+    val msg = bundleMismatch(Seq("nation", "region"),
+      Map("nation" -> Seq("n_nationkey")))
+    assert(msg.contains("region"), msg)
+  }
+
+  test("Pipeline.writeArtifacts rejects a pk the result was not migrated with") {
+    val msg = bundleMismatch(Seq("nation"), Map("nation" -> Seq("n_regionkey")))
+    assert(msg.contains("nation"), msg)
+  }
+
+  test("Pipeline.writeArtifacts rejects indexes the result was not migrated with") {
+    val msg = bundleMismatch(Seq("nation"), Map("nation" -> Seq("n_nationkey")),
+      Map("nation" -> Seq(IndexDef("by_region", Seq("n_regionkey")))))
+    assert(msg.contains("nation"), msg)
   }
 
   test("Pipeline.convertMysqlDump rewrites a dump file distributively") {
