@@ -296,23 +296,18 @@ object DedupOps {
   /** Publishes (or freshness-checks) the minhash signature index for
     * `dir`; returns its location. Idempotent per corpus fingerprint. */
   private[graft] def minhashPublish(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
     val idxDir = minhashIdxDir(dir)
     val tag = ScaleJoins.corpusTag(dir, Seq("documents"))
-    val tagPath = Paths.get(idxDir, "_GRAFT_TAG")
-    Etl.withPathLock(Paths.get(idxDir + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        // LAZY: the two segment writes are sequential full-
-        // materializing actions — the first computes and caches every
-        // partition, the second reads the cache (r14)
-        val sigs = minhashSignatures(dupDocs(s, dir))
-          .localCheckpoint(eager = false)
-        sigs.select("doc_id", "sh").write.mode("overwrite")
-          .parquet(s"$idxDir/sets")
-        bandBuckets(sigs).write.mode("overwrite")
-          .parquet(s"$idxDir/buckets")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(idxDir, Some(tag)) {
+      // LAZY: the two segment writes are sequential full-
+      // materializing actions — the first computes and caches every
+      // partition, the second reads the cache (r14)
+      val sigs = minhashSignatures(dupDocs(s, dir))
+        .localCheckpoint(eager = false)
+      sigs.select("doc_id", "sh").write.mode("overwrite")
+        .parquet(s"$idxDir/sets")
+      bandBuckets(sigs).write.mode("overwrite")
+        .parquet(s"$idxDir/buckets")
     }
     idxDir
   }
@@ -523,29 +518,24 @@ object DedupOps {
     * hamming verify all read the published bytes, so the DuckDB
     * oracle recomputes them with its own bit_count(xor) ([T]→[O] r8). */
   def dedupSimhash(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val idxDir = simhashIdxDir(dir)
     val tag = ScaleJoins.corpusTag(dir, Seq("documents"))
-    val tagPath = Paths.get(idxDir, "_GRAFT_TAG")
-    Etl.withPathLock(Paths.get(idxDir + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        // no checkpoint (r14): sigs has exactly ONE consumer (the
-        // bucket-segment write) — the pin bought a whole extra job
-        // for lineage nobody re-read
-        val sigs = simhashSigs(dupDocs(s, dir))
-        // sig rides each band row (8 bytes × 4 bands): the candidate
-        // self-join then verifies hamming IN PLACE — no per-side sig
-        // re-join, the same one-join shape the in-flight path uses
-        sigs.select(col("doc_id"), col("sig"),
-            explode(array((0 until 4).map { b =>
-              struct(lit(b).as("band"),
-                shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL)
-                  .as("bucket"))
-            }: _*)).as("bb"))
-          .select(col("doc_id"), col("sig"), col("bb.band"), col("bb.bucket"))
-          .write.mode("overwrite").parquet(s"$idxDir/buckets")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(idxDir, Some(tag)) {
+      // no checkpoint (r14): sigs has exactly ONE consumer (the
+      // bucket-segment write) — the pin bought a whole extra job
+      // for lineage nobody re-read
+      val sigs = simhashSigs(dupDocs(s, dir))
+      // sig rides each band row (8 bytes × 4 bands): the candidate
+      // self-join then verifies hamming IN PLACE — no per-side sig
+      // re-join, the same one-join shape the in-flight path uses
+      sigs.select(col("doc_id"), col("sig"),
+          explode(array((0 until 4).map { b =>
+            struct(lit(b).as("band"),
+              shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL)
+                .as("bucket"))
+          }: _*)).as("bb"))
+        .select(col("doc_id"), col("sig"), col("bb.band"), col("bb.bucket"))
+        .write.mode("overwrite").parquet(s"$idxDir/buckets")
     }
     // corpus-sized band frame: never broadcast (see jaccardPairs)
     val banded = s.read.parquet(s"$idxDir/buckets").hint("shuffle_hash")
@@ -737,17 +727,12 @@ object DedupOps {
     * independently (recursive CTE), so the published labels are
     * verified, not trusted. */
   def publishedLabels(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = labelsDir(dir)
     val tag = ScaleJoins.corpusTag(dir, Seq("documents"))
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
-    Etl.withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val docs = dupDocs(s, dir)
-        clusterLabels(docs, jaccardPairs(docs, jaccardTau))._1
-          .write.mode("overwrite").parquet(root)
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(root, Some(tag)) {
+      val docs = dupDocs(s, dir)
+      clusterLabels(docs, jaccardPairs(docs, jaccardTau))._1
+        .write.mode("overwrite").parquet(root)
     }
     s.read.parquet(root)
   }
@@ -880,10 +865,8 @@ object DedupOps {
     * under a shifted id (dupDocs' planted clones) — a nightly crawl
     * whose re-fetched pages must match their corpus originals. */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val idxDir = dedupIndexDir(dir)
     val tag = ScaleJoins.corpusTag(dir, Seq("documents"))
-    val tagPath = Paths.get(idxDir, "_GRAFT_TAG")
     // per-run work: hash ONLY the batch; publish its segment (the
     // oracle reads it, and in production tonight's segment compacts
     // into tomorrow's corpus index)
@@ -899,9 +882,10 @@ object DedupOps {
     // overwrite-mode on every run, and a concurrent JVM (or the
     // oracle) reading those globs mid-overwrite would hit deleted
     // files — the same overlapping-Bench-and-Verify race the corpus
-    // build guards against
-    Etl.withPathLock(Paths.get(idxDir + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
+    // build guards against. One locked section: publish's own lock on
+    // the same root would throw OverlappingFileLockException here
+    graft.Artifacts.withLock(idxDir) {
+      graft.Artifacts.publishHeld(idxDir, Some(tag)) {
         val corpusSigs =
           minhashSignatures(Tables.load(s, dir, "documents"))
             .localCheckpoint(eager = false) // sequential writes, as above
@@ -909,7 +893,6 @@ object DedupOps {
           .parquet(s"$idxDir/corpus_sets")
         bandBuckets(corpusSigs).write.mode("overwrite")
           .parquet(s"$idxDir/corpus_buckets")
-        Files.writeString(tagPath, tag)
       }
       batchSigs.select("doc_id", "sh").write.mode("overwrite")
         .parquet(s"$idxDir/batch_sets")

@@ -472,25 +472,12 @@ object Etl {
           reference = Some(Reference("nation", "n_nationkey")))))))
 
   /** The dump location the static oracle SQL reads: keyed by the same
-    * dir-hash tag Verify substitutes for __SFTAG__. A `_GRAFT_TAG`
-    * marker carrying the corpus CONTENT fingerprint guards staleness —
-    * a regenerated fixture at the same path re-runs the migration
-    * instead of letting the oracle read a stale dump. */
+    * dir-hash tag Verify substitutes for __SFTAG__. It is published
+    * under the corpus CONTENT fingerprint, so a regenerated fixture at
+    * the same path re-runs the migration instead of letting the oracle
+    * read a stale dump. */
   private[graft] def pipelineDumpDir(dir: String): String =
     s"/tmp/graft_pipeline_dump_${graft.Tables.sfTag(dir)}"
-
-  /** Cross-process exclusive section for one-time layout builds: two
-    * JVMs running the same key on the same corpus (an overlapping
-    * Bench and Verify) must not both observe a stale tag and race
-    * overwrite-mode writes into one directory — one of them could
-    * stamp a valid tag over a dump the other is mid-rewrite on. An OS
-    * FileLock on a sibling lock file serializes check-then-build. */
-  private[graft] def withPathLock[A](lockFile: java.nio.file.Path)(body: => A): A = {
-    import java.nio.file.StandardOpenOption.{CREATE, WRITE}
-    val ch = java.nio.channels.FileChannel.open(lockFile, CREATE, WRITE)
-    val lk = ch.lock()
-    try body finally { lk.release(); ch.close() }
-  }
 
   /** End-to-end migration dump parity — the whole orchestrated path
     * (Pipeline.migrate: rules -> extract -> value convert ->
@@ -506,20 +493,15 @@ object Etl {
     * doubles would be bounded by PyFloatRepr's Python-2 12-significant-
     * digit str(), which is the reference's own lossy contract.) */
   def etlPipelineDump(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val outDir = pipelineDumpDir(dir)
     val tag = ScaleJoins.corpusTag(dir, Seq("customer", "nation"))
-    val tagPath = Paths.get(outDir, "_GRAFT_TAG")
-    withPathLock(Paths.get(outDir + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val res = graft.Pipeline.migrate(s, dir, outDir,
-          Seq("customer", "nation"), pipelineDumpChanges,
-          pks = Map("customer" -> Seq("c_custkey"),
-            "nation" -> Seq("n_nationkey")))
-        require(res.tables.map(_.outputName).toSet == Set("clients", "nation"),
-          s"unexpected migration outputs: ${res.tables}")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(outDir, Some(tag)) {
+      val res = graft.Pipeline.migrate(s, dir, outDir,
+        Seq("customer", "nation"), pipelineDumpChanges,
+        pks = Map("customer" -> Seq("c_custkey"),
+          "nation" -> Seq("n_nationkey")))
+      require(res.tables.map(_.outputName).toSet == Set("clients", "nation"),
+        s"unexpected migration outputs: ${res.tables}")
     }
     // the exact frame migrate rendered; decimal -> double only for the
     // compare harness (decimal cells hash as Decimal objects on the
@@ -805,19 +787,14 @@ object Etl {
     * corpus) hash-matches. A group whose count reaches 0 drops from
     * the view, exactly as GROUP BY would. */
   def etlIncrementalAgg(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val layout = baseAggDir(dir)
-    val tagPath = Paths.get(layout, "_GRAFT_TAG")
     val tag = ScaleJoins.corpusTag(dir, Seq("customer"))
-    withPathLock(Paths.get(layout + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        Tables.load(s, dir, "customer")
-          .groupBy("c_mktsegment")
-          .agg(count(lit(1)).as("n_customers"),
-            sum(col("c_acctbal").cast(DecimalType(18, 2))).as("sum_bal"))
-          .write.mode("overwrite").parquet(layout)
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(layout, Some(tag)) {
+      Tables.load(s, dir, "customer")
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n_customers"),
+          sum(col("c_acctbal").cast(DecimalType(18, 2))).as("sum_bal"))
+        .write.mode("overwrite").parquet(layout)
     }
     val base = Tables.load(s, dir, "customer")
     def dec(c: Column) = c.cast(DecimalType(18, 2))
@@ -885,18 +862,13 @@ object Etl {
       .sortWithinPartitions("o_orderdate", "o_orderkey")
 
   def etlShardExport(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val outDir = shardExportDir(dir)
     val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    val tagPath = Paths.get(outDir, "_GRAFT_TAG")
-    withPathLock(Paths.get(outDir + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        shardExportFrame(s, dir)
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", 2000)
-          .parquet(outDir)
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(outDir, Some(tag)) {
+      shardExportFrame(s, dir)
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", 2000)
+        .parquet(outDir)
     }
     // the oracle-checked result is the re-read shards: any loss,
     // duplication or value corruption in the export breaks parity
@@ -925,23 +897,18 @@ object Etl {
     * bug (lost rows, wrong filter) and a merge bug (misaligned
     * columns, wrong null fill) both break parity. */
   def etlSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = schemaEvoDir(dir)
     val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
-    withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val ord = Tables.load(s, dir, "orders")
-        ord.filter(year(col("o_orderdate")) < 1995)
-          .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
-          .write.mode("overwrite").parquet(s"$root/b1")
-        ord.filter(year(col("o_orderdate")) >= 1995)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-            col("o_orderdate"),
-            substring(col("o_orderpriority"), 1, 1).as("o_prio_class"))
-          .write.mode("overwrite").parquet(s"$root/b2")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(root, Some(tag)) {
+      val ord = Tables.load(s, dir, "orders")
+      ord.filter(year(col("o_orderdate")) < 1995)
+        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
+        .write.mode("overwrite").parquet(s"$root/b1")
+      ord.filter(year(col("o_orderdate")) >= 1995)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+          col("o_orderdate"),
+          substring(col("o_orderpriority"), 1, 1).as("o_prio_class"))
+        .write.mode("overwrite").parquet(s"$root/b2")
     }
     s.read.option("mergeSchema", "true").parquet(s"$root/b1", s"$root/b2")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate",
@@ -975,20 +942,15 @@ object Etl {
     * so any row lost or duplicated by either rewrite breaks parity.
     * EtlSpec proves the file count actually collapsed. */
   def etlCompact(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = compactDir(dir)
     val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
-    withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        Tables.load(s, dir, "orders")
-          .repartition(64)
-          .write.mode("overwrite").parquet(s"$root/frag")
-        s.read.parquet(s"$root/frag")
-          .coalesce(2)
-          .write.mode("overwrite").parquet(s"$root/compact")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(root, Some(tag)) {
+      Tables.load(s, dir, "orders")
+        .repartition(64)
+        .write.mode("overwrite").parquet(s"$root/frag")
+      s.read.parquet(s"$root/frag")
+        .coalesce(2)
+        .write.mode("overwrite").parquet(s"$root/compact")
     }
     s.read.parquet(s"$root/compact").orderBy("o_orderkey")
   }
@@ -1114,23 +1076,18 @@ object Etl {
     * The oracle is plain SQL over the raw table — two eras, one
     * answer, layout invisible. */
   def etlPartitionEvolution(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = partEvoDir(dir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
     val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val base = Tables.load(s, dir, "orders")
-          .withColumn("o_year", year(col("o_orderdate")))
-          .withColumn("o_month", month(col("o_orderdate")))
-        base.filter(col("o_year") <= 1997)
-          .write.mode("overwrite").partitionBy("o_year")
-          .parquet(s"$root/era_year")
-        base.filter(col("o_year") >= 1998)
-          .write.mode("overwrite").partitionBy("o_year", "o_month")
-          .parquet(s"$root/era_month")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(root, Some(tag)) {
+      val base = Tables.load(s, dir, "orders")
+        .withColumn("o_year", year(col("o_orderdate")))
+        .withColumn("o_month", month(col("o_orderdate")))
+      base.filter(col("o_year") <= 1997)
+        .write.mode("overwrite").partitionBy("o_year")
+        .parquet(s"$root/era_year")
+      base.filter(col("o_year") >= 1998)
+        .write.mode("overwrite").partitionBy("o_year", "o_month")
+        .parquet(s"$root/era_month")
     }
     val uni = s.read.parquet(s"$root/era_year")
       .unionByName(s.read.parquet(s"$root/era_month"))
@@ -1170,22 +1127,17 @@ object Etl {
     * round-trip (to_json → corrupt-aware from_json) on the price
     * sums of surviving rows. */
   def etlBadRecords(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = badRecordsDir(dir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
     val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        Tables.load(s, dir, "orders")
-          .select(col("o_orderkey"),
-            to_json(struct(col("o_orderkey"), col("o_orderstatus"),
-              col("o_totalprice"))).as("line"))
-          .select(when(col("o_orderkey") % 13 === 0,
-              expr("substring(line, 1, length(line) - 1)"))
-            .otherwise(col("line")).as("value"))
-          .write.mode("overwrite").text(s"$root/jsonl")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(root, Some(tag)) {
+      Tables.load(s, dir, "orders")
+        .select(col("o_orderkey"),
+          to_json(struct(col("o_orderkey"), col("o_orderstatus"),
+            col("o_totalprice"))).as("line"))
+        .select(when(col("o_orderkey") % 13 === 0,
+            expr("substring(line, 1, length(line) - 1)"))
+          .otherwise(col("line")).as("value"))
+        .write.mode("overwrite").text(s"$root/jsonl")
     }
     val parsed = s.read
       .schema("o_orderkey LONG, o_orderstatus STRING, " +
@@ -1248,25 +1200,20 @@ object Etl {
     * table. EtlSpec proves the manifest actually prunes (selected
     * files a strict subset) and that pruning loses no rows. */
   def etlManifestPrune(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = manifestRoot(dir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
     val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        Tables.load(s, dir, "orders")
-          .repartitionByRange(16, col("o_orderkey"))
-          .sortWithinPartitions("o_orderkey")
-          .write.mode("overwrite").parquet(s"$root/data")
-        s.read.parquet(s"$root/data")
-          .groupBy(input_file_name().as("file"))
-          .agg(min(col("o_orderkey")).as("key_min"),
-            max(col("o_orderkey")).as("key_max"),
-            count(lit(1)).as("n_rows"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/manifest")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(root, Some(tag)) {
+      Tables.load(s, dir, "orders")
+        .repartitionByRange(16, col("o_orderkey"))
+        .sortWithinPartitions("o_orderkey")
+        .write.mode("overwrite").parquet(s"$root/data")
+      s.read.parquet(s"$root/data")
+        .groupBy(input_file_name().as("file"))
+        .agg(min(col("o_orderkey")).as("key_min"),
+          max(col("o_orderkey")).as("key_max"),
+          count(lit(1)).as("n_rows"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$root/manifest")
     }
     s.read.parquet(manifestSelectedFiles(s, root): _*)
       .filter(col("o_orderkey").between(manifestLo, manifestHi))
@@ -1711,20 +1658,15 @@ object Etl {
     * still rebuilds components independently, so the artifact is
     * verified, never trusted. */
   def publishedPartLabels(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = partLabelsDir(dir)
     val tag = ScaleJoins.corpusTag(dir, Seq("part"))
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
-    withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val ids = Tables.load(s, dir, "part")
-          .select(col("p_partkey").as("doc_id"))
-        val pairs = StatsOps.qFuzzyJoin(s, dir)
-          .select(col("a_key").as("a"), col("b_key").as("b"))
-        DedupOps.clusterLabels(ids, pairs)._1
-          .write.mode("overwrite").parquet(root)
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(root, Some(tag)) {
+      val ids = Tables.load(s, dir, "part")
+        .select(col("p_partkey").as("doc_id"))
+      val pairs = StatsOps.qFuzzyJoin(s, dir)
+        .select(col("a_key").as("a"), col("b_key").as("b"))
+      DedupOps.clusterLabels(ids, pairs)._1
+        .write.mode("overwrite").parquet(root)
     }
     s.read.parquet(root)
   }
@@ -1848,7 +1790,6 @@ object Etl {
     import scala.jdk.CollectionConverters._
     val base = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-    val run = s"/tmp/graft_wap_run_${java.util.UUID.randomUUID().toString.take(8)}"
     val batches = (0 until 3).map { b =>
       val slice = base.filter(col("c_custkey") % 3 === b)
       if (b == 1)
@@ -1859,35 +1800,36 @@ object Etl {
           .unionAll(slice.filter(col("c_custkey") % 7 === 1))
       else slice
     }
-    val manifest = batches.zipWithIndex.map { case (df, b) =>
-      df.write.parquet(s"$run/stage_$b") // WRITE (staged, unpublished)
-      val staged = s.read.parquet(s"$run/stage_$b")
-      // ONE audit job instead of three (r14): group the staged files
-      // by key once — row count, null-key count and duplicate-key
-      // count all fall out of the grouped counts, so the audit reads
-      // the staged snapshot exactly once instead of three times.
-      // Values are identical to the former three separate counts.
-      // sums are coalesced to 0: an EMPTY staged batch aggregates
-      // sum() to NULL, and getLong on it would NPE where the old
-      // three count() calls returned 0 (ADVICE r14) — latent on this
-      // fixture (%3 slices are never empty) but wrong for any caller
-      val audit = staged.groupBy("c_custkey").agg(count(lit(1)).as("c"))
-        .agg(coalesce(sum(col("c")), lit(0L)).as("n_rows"),
-          coalesce(sum(when(col("c_custkey").isNull, col("c"))
-            .otherwise(lit(0L))), lit(0L)).as("n_null"),
-          count(when(col("c_custkey").isNotNull && col("c") > 1, lit(1)))
-            .as("n_dup"))
-        .head()
-      val nRows = audit.getLong(0)
-      val nNull = audit.getLong(1)
-      val nDup = audit.getLong(2)
-      val ok = nNull == 0 && nDup == 0 // AUDIT on the staged files
-      if (ok) // PUBLISH only after the audit passes
-        staged.write.mode("append").parquet(s"$run/published")
-      (b, nRows, nNull, nDup, if (ok) "published" else "rejected")
+    val (manifest, publishedTotal) = graft.Artifacts.withRunDir("wap") { run =>
+      val manifest = batches.zipWithIndex.map { case (df, b) =>
+        df.write.parquet(s"$run/stage_$b") // WRITE (staged, unpublished)
+        val staged = s.read.parquet(s"$run/stage_$b")
+        // ONE audit job instead of three (r14): group the staged files
+        // by key once — row count, null-key count and duplicate-key
+        // count all fall out of the grouped counts, so the audit reads
+        // the staged snapshot exactly once instead of three times.
+        // Values are identical to the former three separate counts.
+        // sums are coalesced to 0: an EMPTY staged batch aggregates
+        // sum() to NULL, and getLong on it would NPE where the old
+        // three count() calls returned 0 (ADVICE r14) — latent on this
+        // fixture (%3 slices are never empty) but wrong for any caller
+        val audit = staged.groupBy("c_custkey").agg(count(lit(1)).as("c"))
+          .agg(coalesce(sum(col("c")), lit(0L)).as("n_rows"),
+            coalesce(sum(when(col("c_custkey").isNull, col("c"))
+              .otherwise(lit(0L))), lit(0L)).as("n_null"),
+            count(when(col("c_custkey").isNotNull && col("c") > 1, lit(1)))
+              .as("n_dup"))
+          .head()
+        val nRows = audit.getLong(0)
+        val nNull = audit.getLong(1)
+        val nDup = audit.getLong(2)
+        val ok = nNull == 0 && nDup == 0 // AUDIT on the staged files
+        if (ok) // PUBLISH only after the audit passes
+          staged.write.mode("append").parquet(s"$run/published")
+        (b, nRows, nNull, nDup, if (ok) "published" else "rejected")
+      }
+      (manifest, s.read.parquet(s"$run/published").count())
     }
-    val publishedTotal = s.read.parquet(s"$run/published").count()
-    scala.reflect.io.Directory(new java.io.File(run)).deleteRecursively()
     val rows = manifest.map { case (b, n, nn, nd, st) =>
       org.apache.spark.sql.Row(b, n, nn, nd, st, publishedTotal)
     }

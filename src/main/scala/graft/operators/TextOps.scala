@@ -1739,17 +1739,13 @@ object TextOps {
     * must never be evaluated independently per engine (the
     * published-centroids discipline applied to lexical stats).
     *
-    * Freshness + atomicity: a _GRAFT_TAG-style corpus fingerprint
-    * beside the parquet forces a REBUILD when the fixture at the
-    * same path changes (unlike the IVF centroids — intentionally
-    * frozen because Lloyd isn't bit-reproducible — the IDF table is
-    * a deterministic function of the corpus, so rebuilding is safe),
-    * and the publish is write-to-temp + atomic rename so a JVM
-    * killed mid-write can never leave a partial table that
-    * exists() trusts forever. */
+    * Published under the corpus fingerprint, so it REBUILDS when the
+    * fixture at the same path changes: unlike the IVF centroids
+    * (frozen, because Lloyd isn't bit-reproducible), the IDF table is
+    * a deterministic function of the corpus, so rebuilding is safe. */
   private def ensureBm25Stats(s: SparkSession, dir: String): String = {
     val path = bm25StatsPath(dir)
-    graft.operators.ScaleJoins.publishParquet(path,
+    graft.Artifacts.publish(path,
       Some(graft.operators.ScaleJoins.corpusTag(dir, Seq("documents")))) {
       val docs = graft.Tables.load(s, dir, "documents")
         .select(col("doc_id"), toks(col("text")).as("w"))
@@ -1759,6 +1755,7 @@ object TextOps {
         .select(col("term"), log(lit(1.0) +
           (lit(n) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
           .as("idf"))
+        .write.parquet(path)
     }
     path
   }

@@ -372,53 +372,50 @@ object StreamOps {
     * window at first commit); the second lands in batch 2, whose
     * emission pass flushes every closed window to the sink. */
   def streamJoin(parent: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
     val spark = streamingSession(parent)
     val name = s"stream_join_${runId.incrementAndGet()}"
-    val hbDir = Files.createTempDirectory("graft_stream_hb").toString
-    def heartbeat(n: Int, ts: String): Unit =
-      spark.createDataFrame(java.util.Arrays.asList(
-          org.apache.spark.sql.Row(-n.toLong, java.sql.Timestamp.valueOf(ts),
-            -1L, "click", 0.0, null),
-          org.apache.spark.sql.Row(-n.toLong - 1L,
-            java.sql.Timestamp.valueOf(ts), -2L, "purchase", 0.0, null)),
-        eventsTsSchema)
-        .write.mode("append").parquet(hbDir)
-    heartbeat(1, "2099-01-01 00:00:00")
-    val ev = eventsStream(spark, sfDir).unionByName(
-      spark.readStream.schema(eventsTsSchema).parquet(hbDir))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 day")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 day")
-    val agg = clicks.join(purchases,
-      col("c_user") === col("p_user") &&
-        col("p_ts") > col("c_ts") &&
-        col("p_ts") <= col("c_ts") + expr("INTERVAL 2 HOURS"))
-      .select(col("c_user").as("user_id"), col("c_ts"),
-        (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
-      .groupBy(col("user_id"), window(col("c_ts"), "6 hours"))
-      .agg(count(lit(1)).as("n_pairs"), sum(col("gap_us")).as("sum_gap_us"))
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .start()
-    try {
-      q.processAllAvailable()           // batch 1: corpus + heartbeat 1
-      heartbeat(3, "2099-06-01 00:00:00")
-      q.processAllAvailable()           // batch 2: emits all closed windows
-    } finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(hbDir))
+    graft.Artifacts.withRunDir("stream_join") { hbDir =>
+      def heartbeat(n: Int, ts: String): Unit =
+        spark.createDataFrame(java.util.Arrays.asList(
+            org.apache.spark.sql.Row(-n.toLong, java.sql.Timestamp.valueOf(ts),
+              -1L, "click", 0.0, null),
+            org.apache.spark.sql.Row(-n.toLong - 1L,
+              java.sql.Timestamp.valueOf(ts), -2L, "purchase", 0.0, null)),
+          eventsTsSchema)
+          .write.mode("append").parquet(hbDir)
+      heartbeat(1, "2099-01-01 00:00:00")
+      val ev = eventsStream(spark, sfDir).unionByName(
+        spark.readStream.schema(eventsTsSchema).parquet(hbDir))
+      val clicks = ev.filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+        .withWatermark("c_ts", "1 day")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
+        .withWatermark("p_ts", "1 day")
+      val agg = clicks.join(purchases,
+        col("c_user") === col("p_user") &&
+          col("p_ts") > col("c_ts") &&
+          col("p_ts") <= col("c_ts") + expr("INTERVAL 2 HOURS"))
+        .select(col("c_user").as("user_id"), col("c_ts"),
+          (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
+        .groupBy(col("user_id"), window(col("c_ts"), "6 hours"))
+        .agg(count(lit(1)).as("n_pairs"), sum(col("gap_us")).as("sum_gap_us"))
+      val q = agg.writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .start()
+      try {
+        q.processAllAvailable()           // batch 1: corpus + heartbeat 1
+        heartbeat(3, "2099-06-01 00:00:00")
+        q.processAllAvailable()           // batch 2: emits all closed windows
+      } finally q.stop()
+      collectAndDrop(spark, name, spark.table(name)
+        .groupBy("user_id")
+        .agg(sum(col("n_pairs")).as("n_pairs"),
+          sum(col("sum_gap_us")).as("sum_gap_us"))
+        .orderBy("user_id"))
     }
-    collectAndDrop(spark, name, spark.table(name)
-      .groupBy("user_id")
-      .agg(sum(col("n_pairs")).as("n_pairs"),
-        sum(col("sum_gap_us")).as("sum_gap_us"))
-      .orderBy("user_id"))
   }
 
   /** Batch twin of streamJoin for parity checks. */
@@ -480,86 +477,83 @@ object StreamOps {
     * sentinel watermark), each of which resolves its user's remaining
     * clicks and emits the single per-user result row. */
   def streamFunnelTimeout(parent: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = streamingSession(parent)
     import spark.implicits._
     val name = s"stream_funnel_${runId.incrementAndGet()}"
-    val hbDir = Files.createTempDirectory("graft_stream_fhb").toString
-    def heartbeat(n: Int, ts: String): Unit =
-      spark.createDataFrame(java.util.Arrays.asList(
-          org.apache.spark.sql.Row(-n.toLong, java.sql.Timestamp.valueOf(ts),
-            -1L, "click", 0.0, null)),
-        eventsTsSchema)
-        .write.mode("append").parquet(hbDir)
-    heartbeat(1, "2099-01-01 00:00:00")
-    val ev = eventsStream(spark, sfDir).unionByName(
-        spark.readStream.schema(eventsTsSchema).parquet(hbDir))
-      .filter(col("event_type").isin("click", "purchase"))
-      .withWatermark("ts", "1 day")
-      .select(col("user_id"), col("event_type"), col("ts"),
-        unix_micros(col("ts")).as("us"))
-      .as[FunnelEvent]
-    def resolve(st: FunnelState, wmUs: Long, all: Boolean): FunnelState = {
-      val (decided, pending) =
-        if (all) (st.pending, Nil)
-        else st.pending.partition(c => c + twoHoursUs < wmUs)
-      val m = decided.count(c =>
-        st.purchases.exists(p => p > c && p <= c + twoHoursUs))
-      FunnelState(pending,
-        st.purchases.filter(_ > wmUs - twoHoursUs),
-        st.matched + m, st.orphans + (decided.size - m))
-    }
-    val results = ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelResult](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, batch: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
-          if (user < 0) Iterator.empty   // sentinel heartbeat groups
-          else if (state.hasTimedOut) {
-            // event time has passed every click's horizon: final verdicts
-            val st = resolve(state.getOption
-                .getOrElse(FunnelState(Nil, Nil, 0L, 0L)),
-              state.getCurrentWatermarkMs() * 1000L, all = true)
-            state.remove()
-            if (st.matched + st.orphans > 0)
-              Iterator.single(FunnelResult(user, st.matched, st.orphans))
-            else Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(FunnelState(Nil, Nil, 0L, 0L))
-            var maxUs = 0L
-            batch.foreach { e =>
-              maxUs = math.max(maxUs, e.us)
-              st = if (e.event_type == "click") st.copy(pending = e.us :: st.pending)
-                else st.copy(purchases = e.us :: st.purchases)
-            }
-            // resolve what the current watermark already decides and
-            // evict purchases that can no longer match anything
-            st = resolve(st, state.getCurrentWatermarkMs() * 1000L, all = false)
-            state.update(st)
-            // the timer that will deliver the remaining verdicts: just
-            // past this user's own horizon (a timer must exceed the
-            // current watermark — for a straggler batch arriving after
-            // the watermark passed this user's horizon, fire ASAP)
-            state.setTimeoutTimestamp(
-              math.max(maxUs / 1000L + 3L * 3600 * 1000,
-                state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
+    graft.Artifacts.withRunDir("stream_funnel_timeout") { hbDir =>
+      def heartbeat(n: Int, ts: String): Unit =
+        spark.createDataFrame(java.util.Arrays.asList(
+            org.apache.spark.sql.Row(-n.toLong, java.sql.Timestamp.valueOf(ts),
+              -1L, "click", 0.0, null)),
+          eventsTsSchema)
+          .write.mode("append").parquet(hbDir)
+      heartbeat(1, "2099-01-01 00:00:00")
+      val ev = eventsStream(spark, sfDir).unionByName(
+          spark.readStream.schema(eventsTsSchema).parquet(hbDir))
+        .filter(col("event_type").isin("click", "purchase"))
+        .withWatermark("ts", "1 day")
+        .select(col("user_id"), col("event_type"), col("ts"),
+          unix_micros(col("ts")).as("us"))
+        .as[FunnelEvent]
+      def resolve(st: FunnelState, wmUs: Long, all: Boolean): FunnelState = {
+        val (decided, pending) =
+          if (all) (st.pending, Nil)
+          else st.pending.partition(c => c + twoHoursUs < wmUs)
+        val m = decided.count(c =>
+          st.purchases.exists(p => p > c && p <= c + twoHoursUs))
+        FunnelState(pending,
+          st.purchases.filter(_ > wmUs - twoHoursUs),
+          st.matched + m, st.orphans + (decided.size - m))
       }
-    val q = results.toDF().writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .start()
-    try {
-      q.processAllAvailable()           // batch 1: corpus + heartbeat 1
-      heartbeat(2, "2099-06-01 00:00:00")
-      q.processAllAvailable()           // batch 2: timers fire, rows emit
-    } finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(hbDir))
+      val results = ev.groupByKey(_.user_id)
+        .flatMapGroupsWithState[FunnelState, FunnelResult](
+          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+          (user: Long, batch: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
+            if (user < 0) Iterator.empty   // sentinel heartbeat groups
+            else if (state.hasTimedOut) {
+              // event time has passed every click's horizon: final verdicts
+              val st = resolve(state.getOption
+                  .getOrElse(FunnelState(Nil, Nil, 0L, 0L)),
+                state.getCurrentWatermarkMs() * 1000L, all = true)
+              state.remove()
+              if (st.matched + st.orphans > 0)
+                Iterator.single(FunnelResult(user, st.matched, st.orphans))
+              else Iterator.empty
+            } else {
+              var st = state.getOption.getOrElse(FunnelState(Nil, Nil, 0L, 0L))
+              var maxUs = 0L
+              batch.foreach { e =>
+                maxUs = math.max(maxUs, e.us)
+                st = if (e.event_type == "click") st.copy(pending = e.us :: st.pending)
+                  else st.copy(purchases = e.us :: st.purchases)
+              }
+              // resolve what the current watermark already decides and
+              // evict purchases that can no longer match anything
+              st = resolve(st, state.getCurrentWatermarkMs() * 1000L, all = false)
+              state.update(st)
+              // the timer that will deliver the remaining verdicts: just
+              // past this user's own horizon (a timer must exceed the
+              // current watermark — for a straggler batch arriving after
+              // the watermark passed this user's horizon, fire ASAP)
+              state.setTimeoutTimestamp(
+                math.max(maxUs / 1000L + 3L * 3600 * 1000,
+                  state.getCurrentWatermarkMs() + 1L))
+              Iterator.empty
+            }
+        }
+      val q = results.toDF().writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .start()
+      try {
+        q.processAllAvailable()           // batch 1: corpus + heartbeat 1
+        heartbeat(2, "2099-06-01 00:00:00")
+        q.processAllAvailable()           // batch 2: timers fire, rows emit
+      } finally q.stop()
+      collectAndDrop(spark, name, spark.table(name).orderBy("user_id"))
     }
-    collectAndDrop(spark, name, spark.table(name).orderBy("user_id"))
   }
 
   /** Batch twin of streamFunnelTimeout for parity checks. */
@@ -625,7 +619,7 @@ object StreamOps {
   private[graft] def cdcLogDir(sfDir: String): String =
     s"/tmp/graft_cdc_log_${graft.operators.ScaleJoins.corpusTag(sfDir, Seq("customer"))}"
 
-  private val cdcLogSchema: StructType = StructType(Seq(
+  private[graft] val cdcLogSchema: StructType = StructType(Seq(
     StructField("c_custkey", LongType),
     StructField("c_name", StringType),
     StructField("c_nationkey", IntegerType),
@@ -646,47 +640,42 @@ object StreamOps {
   private val cdcLogTsSchema: StructType =
     StructType(cdcLogSchema.fields :+ StructField("change_ts", TimestampType))
 
-  private def writeCdcLog(s: SparkSession, sfDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
+  private[graft] def writeCdcLog(s: SparkSession, sfDir: String): Unit = {
     val root = cdcLogDir(sfDir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
     // layout suffix: the r13 change_ts column must force a republish
     // of logs published by older binaries (content check only — the
     // DIR name stays keyed on corpus identity alone)
     val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("customer")) +
       "|layout=ts1"
-    graft.operators.Etl.withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val base = graft.Tables.load(s, sfDir, "customer")
-        def stamp(df: DataFrame, op: String, v: Int): DataFrame =
-          df.withColumn("op", lit(op)).withColumn("version", lit(v))
-            .withColumn("change_ts",
-              expr(s"timestamp_micros(${cdcT0Micros}L + version * 3600000000L)"))
-        val b1 = stamp(base.filter(col("c_custkey") % 10 === 1)
-          .withColumn("c_acctbal", col("c_acctbal") + 100.0), "U", 1)
-        // deletes ride with their last payload (Debezium 'before'
-        // image); the apply only reads their key + version
-        val b2 = stamp(base.filter(col("c_custkey") % 10 === 3), "D", 2)
-        val shift = base.agg(max(col("c_custkey")).as("key_shift"))
-        val b3 = stamp(base.filter(col("c_custkey") % 10 === 7)
-          .crossJoin(broadcast(shift))
-          .withColumn("c_custkey", col("c_custkey") + col("key_shift"))
-          .drop("key_shift"), "I", 3)
-        // sequential writes give the file source its mtime order. For
-        // the MERGE consumers (stream_cdc_apply, stream_scd2,
-        // stream_dim_vacuum) that order is a convenience — the merge
-        // is version-aware and converges under any delivery order —
-        // but the SNAPSHOT keys (stream_dim_asof, stream_dim_asof_ts)
-        // DEPEND on wave v landing as batchId v-1: their as-of bounds
-        // index batch positions. An mtime tie reordering the waves
-        // would silently desynchronize every snapshot from the
-        // progressive oracle, so those keys' foreachBatch REQUIREs
-        // version == batchId+1 and fails fast instead.
-        b1.coalesce(1).write.mode("overwrite").parquet(s"$root/b1")
-        b2.coalesce(1).write.mode("overwrite").parquet(s"$root/b2")
-        b3.coalesce(1).write.mode("overwrite").parquet(s"$root/b3")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(root, Some(tag)) {
+      val base = graft.Tables.load(s, sfDir, "customer")
+      def stamp(df: DataFrame, op: String, v: Int): DataFrame =
+        df.withColumn("op", lit(op)).withColumn("version", lit(v))
+          .withColumn("change_ts",
+            expr(s"timestamp_micros(${cdcT0Micros}L + version * 3600000000L)"))
+      val b1 = stamp(base.filter(col("c_custkey") % 10 === 1)
+        .withColumn("c_acctbal", col("c_acctbal") + 100.0), "U", 1)
+      // deletes ride with their last payload (Debezium 'before'
+      // image); the apply only reads their key + version
+      val b2 = stamp(base.filter(col("c_custkey") % 10 === 3), "D", 2)
+      val shift = base.agg(max(col("c_custkey")).as("key_shift"))
+      val b3 = stamp(base.filter(col("c_custkey") % 10 === 7)
+        .crossJoin(broadcast(shift))
+        .withColumn("c_custkey", col("c_custkey") + col("key_shift"))
+        .drop("key_shift"), "I", 3)
+      // sequential writes give the file source its mtime order. For
+      // the MERGE consumers (stream_cdc_apply, stream_scd2,
+      // stream_dim_vacuum) that order is a convenience — the merge
+      // is version-aware and converges under any delivery order —
+      // but the SNAPSHOT keys (stream_dim_asof, stream_dim_asof_ts)
+      // DEPEND on wave v landing as batchId v-1: their as-of bounds
+      // index batch positions. An mtime tie reordering the waves
+      // would silently desynchronize every snapshot from the
+      // progressive oracle, so those keys' foreachBatch REQUIREs
+      // version == batchId+1 and fails fast instead.
+      b1.coalesce(1).write.mode("overwrite").parquet(s"$root/b1")
+      b2.coalesce(1).write.mode("overwrite").parquet(s"$root/b2")
+      b3.coalesce(1).write.mode("overwrite").parquet(s"$root/b3")
     }
   }
 
@@ -741,29 +730,24 @@ object StreamOps {
     StructField("c_mktsegment", StringType)))
 
   private def writeScd2Log(s: SparkSession, sfDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
     val root = scd2LogDir(sfDir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
     val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("customer"))
-    graft.operators.Etl.withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val base = graft.Tables.load(s, sfDir, "customer")
-          .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
-        val w1 = base.filter(col("c_custkey") % 10 === 1)
-          .withColumn("c_acctbal", col("c_acctbal") + 100.0)
-          .withColumn("ver", lit(1))
-        val w2 = base.filter(col("c_custkey") % 5 === 1)
-          .withColumn("c_acctbal", col("c_acctbal") +
-            when(col("c_custkey") % 10 === 1, 350.0).otherwise(250.0))
-          .withColumn("c_mktsegment", lit("MACHINERY"))
-          .withColumn("ver", lit(2))
-        val cols = Seq("c_custkey", "ver", "c_acctbal", "c_mktsegment")
-        w1.select(cols.map(col): _*)
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/b1")
-        w2.select(cols.map(col): _*)
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/b2")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(root, Some(tag)) {
+      val base = graft.Tables.load(s, sfDir, "customer")
+        .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
+      val w1 = base.filter(col("c_custkey") % 10 === 1)
+        .withColumn("c_acctbal", col("c_acctbal") + 100.0)
+        .withColumn("ver", lit(1))
+      val w2 = base.filter(col("c_custkey") % 5 === 1)
+        .withColumn("c_acctbal", col("c_acctbal") +
+          when(col("c_custkey") % 10 === 1, 350.0).otherwise(250.0))
+        .withColumn("c_mktsegment", lit("MACHINERY"))
+        .withColumn("ver", lit(2))
+      val cols = Seq("c_custkey", "ver", "c_acctbal", "c_mktsegment")
+      w1.select(cols.map(col): _*)
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/b1")
+      w2.select(cols.map(col): _*)
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/b2")
     }
   }
 
@@ -1131,60 +1115,69 @@ object StreamOps {
     }
   }
 
+  /** One generation-store run, shared by the five dimension-store
+    * keys: a fresh run directory holds the store (g0 = `init`) and the
+    * streaming checkpoint; the change log under `logDir` replays one
+    * wave directory per micro-batch through [[applyDimBatch]]; `read`
+    * turns the drained store (and its checkpoint) into the answer.
+    * The answer is materialized before the run directory goes and is
+    * returned as a local relation (it is O(keys·waves) — the
+    * drained-sink contract). The run directory is deleted whether the
+    * run returns or throws. */
+  private[graft] def dimStoreRun(spark: SparkSession, name: String,
+      logSchema: StructType, logDir: String, init: DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame,
+      compactEvery: Int = dimCompactEvery, requireWave: Boolean = false,
+      eventTimeMicros: Option[Long] = None)(
+      read: (String, String) => DataFrame): DataFrame =
+    graft.Artifacts.withRunDir(name) { run =>
+      val store = s"$run/store"
+      writeDimStore(init, store, eventTimeMicros)
+      val changes = spark.readStream.schema(logSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"$logDir/b*")
+      runAvailableNow(changes.writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          applyDimBatch(spark, store, batchId, batch, merge,
+            compactEvery, requireWave)
+        }
+        .option("checkpointLocation", s"$run/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start())
+      val fin = read(store, s"$run/ckpt")
+      spark.createDataFrame(java.util.Arrays.asList(fin.collect(): _*), fin.schema)
+    }
+
+  /** The CDC keys' initial store: every customer as a version-0
+    * insert image. */
+  private def cdcInit(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Tables.load(spark, sfDir, "customer")
+      .withColumn("op", lit("I")).withColumn("version", lit(0))
+
+  /** The served rows of a CDC store state: tombstones filtered. */
+  private def liveRows(state: DataFrame): DataFrame =
+    state.filter(col("op") =!= "D").drop("op", "version")
+
   def streamScd2(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
     writeScd2Log(spark, sfDir)
-    val run = s"/tmp/graft_scd2_run_${runId.incrementAndGet()}_${java.util.UUID.randomUUID().toString.take(8)}"
-    val store = s"$run/store"
-    writeDimStore(graft.Tables.load(spark, sfDir, "customer")
-      .select(col("c_custkey"), lit(0).as("eff_from_ver"),
-        lit(null).cast(IntegerType).as("eff_to_ver"),
-        lit(1).as("is_current"), col("c_acctbal"), col("c_mktsegment")),
-      store)
-    val changes = spark.readStream.schema(scd2LogSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"${scd2LogDir(sfDir)}/b*")
-    runAvailableNow(changes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDimBatch(spark, store, batchId, batch, scd2Merge)
-      }
-      .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start())
-    val fin = readDimStore(spark, store)
-      .orderBy("c_custkey", "eff_from_ver")
-    // materialize before the run dir is deleted, then return a local
-    // relation (history is O(keys·waves) — the drained-sink contract)
-    val rows = fin.collect()
-    scala.reflect.io.Directory(new java.io.File(run)).deleteRecursively()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), fin.schema)
+    dimStoreRun(spark, "scd2", scd2LogSchema, scd2LogDir(sfDir),
+      graft.Tables.load(spark, sfDir, "customer")
+        .select(col("c_custkey"), lit(0).as("eff_from_ver"),
+          lit(null).cast(IntegerType).as("eff_to_ver"),
+          lit(1).as("is_current"), col("c_acctbal"), col("c_mktsegment")),
+      scd2Merge) { (store, _) =>
+      readDimStore(spark, store).orderBy("c_custkey", "eff_from_ver")
+    }
   }
 
   def streamCdcApply(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
     writeCdcLog(spark, sfDir)
-    val run = s"/tmp/graft_cdc_apply_run_${runId.incrementAndGet()}_${java.util.UUID.randomUUID().toString.take(8)}"
-    val store = s"$run/store"
-    writeDimStore(graft.Tables.load(spark, sfDir, "customer")
-      .withColumn("op", lit("I")).withColumn("version", lit(0)), store)
-    val changes = spark.readStream.schema(cdcLogSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"${cdcLogDir(sfDir)}/b*")
-    runAvailableNow(changes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDimBatch(spark, store, batchId, batch, cdcMerge)
-      }
-      .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start())
-    val fin = readDimStore(spark, store)
-      .filter(col("op") =!= "D").drop("op", "version")
-      .orderBy("c_custkey")
-    // materialize before the run dir is deleted, then return a local
-    // relation (final store is O(keys) — the drained-sink contract)
-    val rows = fin.collect()
-    scala.reflect.io.Directory(new java.io.File(run)).deleteRecursively()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), fin.schema)
+    dimStoreRun(spark, "cdc_apply", cdcLogSchema, cdcLogDir(sfDir),
+      cdcInit(spark, sfDir), cdcMerge) { (store, _) =>
+      liveRows(readDimStore(spark, store)).orderBy("c_custkey")
+    }
   }
 
   /** The dim-store RETENTION lifecycle end-to-end — the third member
@@ -1206,37 +1199,20 @@ object StreamOps {
   def streamDimVacuum(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
     writeCdcLog(spark, sfDir)
-    val run = s"/tmp/graft_dim_vacuum_run_${runId.incrementAndGet()}_${java.util.UUID.randomUUID().toString.take(8)}"
-    val store = s"$run/store"
-    writeDimStore(graft.Tables.load(spark, sfDir, "customer")
-      .withColumn("op", lit("I")).withColumn("version", lit(0)), store)
-    val changes = spark.readStream.schema(cdcLogSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"${cdcLogDir(sfDir)}/b*")
-    runAvailableNow(changes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDimBatch(spark, store, batchId, batch, cdcMerge,
-          compactEvery = 2)
-      }
-      .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start())
-    // the retention decision as data: with 3 waves at cadence 2 some
-    // generation ≥ g1 is always full (either a wave covered every
-    // bucket or batch 2 compacted), so the vacuum must both keep and
-    // reclaim — a no-op vacuum here means the lifecycle is broken.
-    // The replay horizon is READ from the checkpoint's commit log:
-    // the drained stream has every batch committed, so the whole
-    // scan is judged — no hand-passed depth
-    val decisions = vacuumDimStore(store, s"$run/ckpt")
-    require(decisions.exists(_._2) && decisions.exists(!_._2),
-      s"dim vacuum reclaimed nothing (decisions=$decisions)")
-    val fin = readDimStore(spark, store)
-      .filter(col("op") =!= "D").drop("op", "version")
-      .orderBy("c_custkey")
-    val rows = fin.collect()
-    scala.reflect.io.Directory(new java.io.File(run)).deleteRecursively()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), fin.schema)
+    dimStoreRun(spark, "dim_vacuum", cdcLogSchema, cdcLogDir(sfDir),
+      cdcInit(spark, sfDir), cdcMerge, compactEvery = 2) { (store, ckpt) =>
+      // the retention decision as data: with 3 waves at cadence 2 some
+      // generation ≥ g1 is always full (either a wave covered every
+      // bucket or batch 2 compacted), so the vacuum must both keep and
+      // reclaim — a no-op vacuum here means the lifecycle is broken.
+      // The replay horizon is READ from the checkpoint's commit log:
+      // the drained stream has every batch committed, so the whole
+      // scan is judged — no hand-passed depth
+      val decisions = vacuumDimStore(store, ckpt)
+      require(decisions.exists(_._2) && decisions.exists(!_._2),
+        s"dim vacuum reclaimed nothing (decisions=$decisions)")
+      liveRows(readDimStore(spark, store)).orderBy("c_custkey")
+    }
   }
 
   /** Snapshot reads over the generation store — the third leg of the
@@ -1262,41 +1238,26 @@ object StreamOps {
   def streamDimAsof(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
     writeCdcLog(spark, sfDir)
-    val run = s"/tmp/graft_dim_asof_run_${runId.incrementAndGet()}_${java.util.UUID.randomUUID().toString.take(8)}"
-    val store = s"$run/store"
-    writeDimStore(graft.Tables.load(spark, sfDir, "customer")
-      .withColumn("op", lit("I")).withColumn("version", lit(0)), store)
-    val changes = spark.readStream.schema(cdcLogSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"${cdcLogDir(sfDir)}/b*")
-    runAvailableNow(changes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDimBatch(spark, store, batchId, batch, cdcMerge,
-          compactEvery = 2, requireWave = true)
-      }
-      .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start())
-    // all four generations must exist and some full snapshot must sit
-    // ABOVE the early bounds (a compaction at small SFs, a bucket-
-    // covering wave at larger ones) — otherwise the as-of reads are
-    // not exercising history-below-a-snapshot at all
-    val scan = scanDimStore(store, Long.MaxValue)
-    require(scan.map(_._1) == Seq(0L, 1L, 2L, 3L) &&
-      lastFullIdx(scan) >= 1,
-      s"fixture must retain g0..g3 with a full snapshot past g0: " +
-        s"${scan.map(t => t._1 -> t._2.size)}")
-    val asOf = (0 to 3).map { b =>
-      spark.read.parquet(resolveDimStore(store, b.toLong).map(_._2): _*)
-        .filter(col("op") =!= "D").drop("op", "version")
-        .withColumn("as_of", lit(b))
-    }.reduce(_ unionByName _)
-      .select("as_of", "c_custkey", "c_name", "c_nationkey",
-        "c_acctbal", "c_mktsegment")
-      .orderBy("as_of", "c_custkey")
-    val rows = asOf.collect()
-    scala.reflect.io.Directory(new java.io.File(run)).deleteRecursively()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), asOf.schema)
+    dimStoreRun(spark, "dim_asof", cdcLogSchema, cdcLogDir(sfDir),
+      cdcInit(spark, sfDir), cdcMerge, compactEvery = 2,
+      requireWave = true) { (store, _) =>
+      // all four generations must exist and some full snapshot must sit
+      // ABOVE the early bounds (a compaction at small SFs, a bucket-
+      // covering wave at larger ones) — otherwise the as-of reads are
+      // not exercising history-below-a-snapshot at all
+      val scan = scanDimStore(store, Long.MaxValue)
+      require(scan.map(_._1) == Seq(0L, 1L, 2L, 3L) &&
+        lastFullIdx(scan) >= 1,
+        s"fixture must retain g0..g3 with a full snapshot past g0: " +
+          s"${scan.map(t => t._1 -> t._2.size)}")
+      (0 to 3).map { b =>
+        liveRows(spark.read.parquet(resolveDimStore(store, b.toLong).map(_._2): _*))
+          .withColumn("as_of", lit(b))
+      }.reduce(_ unionByName _)
+        .select("as_of", "c_custkey", "c_name", "c_nationkey",
+          "c_acctbal", "c_mktsegment")
+        .orderBy("as_of", "c_custkey")
+    }
   }
 
   /** AS OF TIMESTAMP over the generation store — the API users
@@ -1320,40 +1281,24 @@ object StreamOps {
   def streamDimAsofTs(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
     writeCdcLog(spark, sfDir)
-    val run = s"/tmp/graft_dim_asof_ts_run_${runId.incrementAndGet()}_${java.util.UUID.randomUUID().toString.take(8)}"
-    val store = s"$run/store"
-    writeDimStore(graft.Tables.load(spark, sfDir, "customer")
-      .withColumn("op", lit("I")).withColumn("version", lit(0)), store,
-      eventTimeMicros = Some(cdcT0Micros))
-    val changes = spark.readStream.schema(cdcLogTsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"${cdcLogDir(sfDir)}/b*")
-    runAvailableNow(changes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDimBatch(spark, store, batchId, batch, cdcMerge,
-          compactEvery = 2, requireWave = true)
-      }
-      .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start())
-    // probe instants (micros past T0): 0 = the initial load, +90 min
-    // = strictly between wave 1 (+1 h) and wave 2 (+2 h) — must read
-    // the EARLIER state, +2 h = exactly wave 2's commit, +10 h = past
-    // the last wave
-    val probes = Seq(0L, 5400000000L, 7200000000L, 36000000000L)
-      .map(cdcT0Micros + _)
-    val asOf = probes.map { t =>
-      val g = resolveAsOfTimestamp(store, t)
-      spark.read.parquet(resolveDimStore(store, g).map(_._2): _*)
-        .filter(col("op") =!= "D").drop("op", "version")
-        .withColumn("as_of_us", lit(t))
-    }.reduce(_ unionByName _)
-      .select("as_of_us", "c_custkey", "c_name", "c_nationkey",
-        "c_acctbal", "c_mktsegment")
-      .orderBy("as_of_us", "c_custkey")
-    val rows = asOf.collect()
-    scala.reflect.io.Directory(new java.io.File(run)).deleteRecursively()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), asOf.schema)
+    dimStoreRun(spark, "dim_asof_ts", cdcLogTsSchema, cdcLogDir(sfDir),
+      cdcInit(spark, sfDir), cdcMerge, compactEvery = 2, requireWave = true,
+      eventTimeMicros = Some(cdcT0Micros)) { (store, _) =>
+      // probe instants (micros past T0): 0 = the initial load, +90 min
+      // = strictly between wave 1 (+1 h) and wave 2 (+2 h) — must read
+      // the EARLIER state, +2 h = exactly wave 2's commit, +10 h = past
+      // the last wave
+      val probes = Seq(0L, 5400000000L, 7200000000L, 36000000000L)
+        .map(cdcT0Micros + _)
+      probes.map { t =>
+        val g = resolveAsOfTimestamp(store, t)
+        liveRows(spark.read.parquet(resolveDimStore(store, g).map(_._2): _*))
+          .withColumn("as_of_us", lit(t))
+      }.reduce(_ unionByName _)
+        .select("as_of_us", "c_custkey", "c_name", "c_nationkey",
+          "c_acctbal", "c_mktsegment")
+        .orderBy("as_of_us", "c_custkey")
+    }
   }
 
   /** Progressive folds keyed by PROBE INSTANT — stream_dim_asof_ts's
@@ -1582,23 +1527,19 @@ object StreamOps {
   private def writeLateLog(s: SparkSession, sfDir: String): Unit = {
     import java.nio.file.{Files, Paths}
     val root = lateLogDir(sfDir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
     val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("events"))
-    graft.operators.Etl.withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val ev = graft.Tables.load(s, sfDir, "events")
-          .select(col("event_id"), col("event_type"), col("ts"))
-        (0 until 3).foreach { b =>
-          val dir = s"$root/b${b + 1}"
-          ev.filter(col("event_id") % 3 === b)
-            .coalesce(1).write.mode("overwrite").parquet(dir)
-          // pin the file source's processing order explicitly
-          val t = java.nio.file.attribute.FileTime.fromMillis(
-            1600000000000L + b * 60000L)
-          Files.list(Paths.get(dir)).forEach(p =>
-            Files.setLastModifiedTime(p, t))
-        }
-        Files.writeString(tagPath, tag)
+    graft.Artifacts.publish(root, Some(tag)) {
+      val ev = graft.Tables.load(s, sfDir, "events")
+        .select(col("event_id"), col("event_type"), col("ts"))
+      (0 until 3).foreach { b =>
+        val dir = s"$root/b${b + 1}"
+        ev.filter(col("event_id") % 3 === b)
+          .coalesce(1).write.mode("overwrite").parquet(dir)
+        // pin the file source's processing order explicitly
+        val t = java.nio.file.attribute.FileTime.fromMillis(
+          1600000000000L + b * 60000L)
+        Files.list(Paths.get(dir)).forEach(p =>
+          Files.setLastModifiedTime(p, t))
       }
     }
   }
@@ -1874,27 +1815,22 @@ object StreamOps {
     StructField("o_totalprice", DoubleType)))
 
   private def writeMvLog(s: SparkSession, sfDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
     val root = mvLogDir(sfDir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
     val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("orders"))
-    graft.operators.Etl.withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val delta = graft.Tables.load(s, sfDir, "orders")
-          .filter(col("o_orderdate") >=
-            lit(graft.operators.ScaleJoins.mvRefreshCutoff).cast(TimestampType))
-          .withColumn("wave",
-            when(col("o_orderdate") < lit("1999-06-01").cast(TimestampType), 0)
-              .when(col("o_orderdate") < lit("2000-06-01").cast(TimestampType), 1)
-              .otherwise(2))
-          .select("wave", "o_orderdate", "o_totalprice")
-        delta.cache()
-        try (0 to 2).foreach { w =>
-          delta.filter(col("wave") === w)
-            .coalesce(1).write.mode("overwrite").parquet(s"$root/b$w")
-        } finally delta.unpersist()
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(root, Some(tag)) {
+      val delta = graft.Tables.load(s, sfDir, "orders")
+        .filter(col("o_orderdate") >=
+          lit(graft.operators.ScaleJoins.mvRefreshCutoff).cast(TimestampType))
+        .withColumn("wave",
+          when(col("o_orderdate") < lit("1999-06-01").cast(TimestampType), 0)
+            .when(col("o_orderdate") < lit("2000-06-01").cast(TimestampType), 1)
+            .otherwise(2))
+        .select("wave", "o_orderdate", "o_totalprice")
+      delta.cache()
+      try (0 to 2).foreach { w =>
+        delta.filter(col("wave") === w)
+          .coalesce(1).write.mode("overwrite").parquet(s"$root/b$w")
+      } finally delta.unpersist()
     }
   }
 
@@ -1954,44 +1890,43 @@ object StreamOps {
   def streamMvMaintain(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
     writeMvLog(spark, sfDir)
-    val run = s"/tmp/graft_mv_maintain_run_${runId.incrementAndGet()}_${java.util.UUID.randomUUID().toString.take(8)}"
-    spark.read.parquet(
-        graft.operators.ScaleJoins.ensureStaleMv(spark, sfDir))
-      .withColumn("wave", lit(-1))
-      .select("yr", "mo", "wave", "rev_cents", "n_orders",
-        "min_cents", "max_cents")
-      .write.parquet(s"$run/store_0")
-    val last = new AtomicLong(0L)
-    val arrivals = spark.readStream.schema(mvLogSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"${mvLogDir(sfDir)}/b*")
-    runAvailableNow(arrivals.writeStream
-      // retry-safe generations: the store index is Spark's batchId
-      // (Long end to end — never truncated; stable across
-      // at-least-once replays) and the write is overwrite-mode, so a
-      // replayed micro-batch REBUILDS store_(b+1) from the intact
-      // store_b instead of dying on an existing path or merging
-      // against the wrong generation. Generation = batchId assumes a
-      // FRESH checkpoint (true by construction: the run dir is
-      // UUID-fresh per call) — the require makes a violated
-      // assumption loud instead of a nonexistent-path stack trace
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        require(new java.io.File(s"$run/store_$batchId").exists,
-          s"generation store_$batchId missing: the batchId-indexed " +
-            "store assumes a fresh checkpoint per run")
-        val prev = spark.read.parquet(s"$run/store_$batchId")
-        mvMaintainMerge(prev, batch).write.mode("overwrite")
-          .parquet(s"$run/store_${batchId + 1}")
-        last.getAndAccumulate(batchId + 1, (a, b) => math.max(a, b))
-        ()
-      }
-      .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start())
-    val fin = mvMaintainRollup(spark.read.parquet(s"$run/store_${last.get()}"))
-    val rows = fin.collect()
-    scala.reflect.io.Directory(new java.io.File(run)).deleteRecursively()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), fin.schema)
+    graft.Artifacts.withRunDir("mv_maintain") { run =>
+      spark.read.parquet(
+          graft.operators.ScaleJoins.ensureStaleMv(spark, sfDir))
+        .withColumn("wave", lit(-1))
+        .select("yr", "mo", "wave", "rev_cents", "n_orders",
+          "min_cents", "max_cents")
+        .write.parquet(s"$run/store_0")
+      val last = new AtomicLong(0L)
+      val arrivals = spark.readStream.schema(mvLogSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"${mvLogDir(sfDir)}/b*")
+      runAvailableNow(arrivals.writeStream
+        // retry-safe generations: the store index is Spark's batchId
+        // (Long end to end — never truncated; stable across
+        // at-least-once replays) and the write is overwrite-mode, so a
+        // replayed micro-batch REBUILDS store_(b+1) from the intact
+        // store_b instead of dying on an existing path or merging
+        // against the wrong generation. Generation = batchId assumes a
+        // FRESH checkpoint (true by construction: the run dir is
+        // UUID-fresh per call) — the require makes a violated
+        // assumption loud instead of a nonexistent-path stack trace
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          require(new java.io.File(s"$run/store_$batchId").exists,
+            s"generation store_$batchId missing: the batchId-indexed " +
+              "store assumes a fresh checkpoint per run")
+          val prev = spark.read.parquet(s"$run/store_$batchId")
+          mvMaintainMerge(prev, batch).write.mode("overwrite")
+            .parquet(s"$run/store_${batchId + 1}")
+          last.getAndAccumulate(batchId + 1, (a, b) => math.max(a, b))
+          ()
+        }
+        .option("checkpointLocation", s"$run/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start())
+      val fin = mvMaintainRollup(spark.read.parquet(s"$run/store_${last.get()}"))
+      spark.createDataFrame(java.util.Arrays.asList(fin.collect(): _*), fin.schema)
+    }
   }
 
   /** One-time CDC-delete log for streaming retraction maintenance:
@@ -2012,26 +1947,21 @@ object StreamOps {
     StructField("o_totalprice", DoubleType)))
 
   private def writeRetractLog(s: SparkSession, sfDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
     val root = retractLogDir(sfDir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
     val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("orders"))
-    graft.operators.Etl.withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val dels = graft.Tables.load(s, sfDir, "orders")
-          .filter(col("o_orderkey") % 101 === 0)
-          .withColumn("wave",
-            when(col("o_orderdate") < lit("1997-01-01").cast(TimestampType), 0)
-              .when(col("o_orderdate") < lit("1999-01-01").cast(TimestampType), 1)
-              .otherwise(2))
-          .select("wave", "o_orderkey", "o_orderdate", "o_totalprice")
-        dels.cache()
-        try (0 to 2).foreach { w =>
-          dels.filter(col("wave") === w)
-            .coalesce(1).write.mode("overwrite").parquet(s"$root/b$w")
-        } finally dels.unpersist()
-        Files.writeString(tagPath, tag)
-      }
+    graft.Artifacts.publish(root, Some(tag)) {
+      val dels = graft.Tables.load(s, sfDir, "orders")
+        .filter(col("o_orderkey") % 101 === 0)
+        .withColumn("wave",
+          when(col("o_orderdate") < lit("1997-01-01").cast(TimestampType), 0)
+            .when(col("o_orderdate") < lit("1999-01-01").cast(TimestampType), 1)
+            .otherwise(2))
+        .select("wave", "o_orderkey", "o_orderdate", "o_totalprice")
+      dels.cache()
+      try (0 to 2).foreach { w =>
+        dels.filter(col("wave") === w)
+          .coalesce(1).write.mode("overwrite").parquet(s"$root/b$w")
+      } finally dels.unpersist()
     }
   }
 
@@ -2127,47 +2057,46 @@ object StreamOps {
   def streamMvRetract(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
     writeRetractLog(spark, sfDir)
-    val run = s"/tmp/graft_mv_retract_run_${runId.incrementAndGet()}_${java.util.UUID.randomUUID().toString.take(8)}"
-    spark.read.parquet(
-        graft.operators.ScaleJoins.ensureMonthMv(spark, sfDir))
-      .withColumn("wave", lit(-1))
-      .select("yr", "mo", "wave", "rev_cents", "n_orders",
-        "min_cents", "max_cents")
-      .write.parquet(s"$run/store_0/part")
-    spark.range(0).select(col("id").as("o_orderkey"))
-      .write.parquet(s"$run/store_0/keys")
-    val orders = graft.Tables.load(spark, sfDir, "orders")
-    val last = new AtomicLong(0L)
-    val deletes = spark.readStream.schema(retractLogSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"${retractLogDir(sfDir)}/b*")
-    runAvailableNow(deletes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        require(new java.io.File(s"$run/store_$batchId").exists,
-          s"generation store_$batchId missing: the batchId-indexed " +
-            "store assumes a fresh checkpoint per run")
-        val prevPart = spark.read.parquet(s"$run/store_$batchId/part")
-        val prevKeys = spark.read.parquet(s"$run/store_$batchId/keys")
-        val (part, keys) = mvRetractApply(orders, prevPart, prevKeys, batch)
-        part.write.mode("overwrite").parquet(s"$run/store_${batchId + 1}/part")
-        keys.write.mode("overwrite").parquet(s"$run/store_${batchId + 1}/keys")
-        last.getAndAccumulate(batchId + 1, (a, b) => math.max(a, b))
-        ()
-      }
-      .option("checkpointLocation", s"$run/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start())
-    val fin = spark.read.parquet(s"$run/store_${last.get()}/part")
-      .groupBy("yr", "mo")
-      .agg(sum(col("rev_cents")).as("rev_cents"),
-        sum(col("n_orders")).as("n_orders"),
-        min(col("min_cents")).as("min_cents"),
-        max(col("max_cents")).as("max_cents"))
-      .filter(col("n_orders") > 0)
-      .orderBy("yr", "mo")
-    val rows = fin.collect()
-    scala.reflect.io.Directory(new java.io.File(run)).deleteRecursively()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), fin.schema)
+    graft.Artifacts.withRunDir("mv_retract") { run =>
+      spark.read.parquet(
+          graft.operators.ScaleJoins.ensureMonthMv(spark, sfDir))
+        .withColumn("wave", lit(-1))
+        .select("yr", "mo", "wave", "rev_cents", "n_orders",
+          "min_cents", "max_cents")
+        .write.parquet(s"$run/store_0/part")
+      spark.range(0).select(col("id").as("o_orderkey"))
+        .write.parquet(s"$run/store_0/keys")
+      val orders = graft.Tables.load(spark, sfDir, "orders")
+      val last = new AtomicLong(0L)
+      val deletes = spark.readStream.schema(retractLogSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"${retractLogDir(sfDir)}/b*")
+      runAvailableNow(deletes.writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          require(new java.io.File(s"$run/store_$batchId").exists,
+            s"generation store_$batchId missing: the batchId-indexed " +
+              "store assumes a fresh checkpoint per run")
+          val prevPart = spark.read.parquet(s"$run/store_$batchId/part")
+          val prevKeys = spark.read.parquet(s"$run/store_$batchId/keys")
+          val (part, keys) = mvRetractApply(orders, prevPart, prevKeys, batch)
+          part.write.mode("overwrite").parquet(s"$run/store_${batchId + 1}/part")
+          keys.write.mode("overwrite").parquet(s"$run/store_${batchId + 1}/keys")
+          last.getAndAccumulate(batchId + 1, (a, b) => math.max(a, b))
+          ()
+        }
+        .option("checkpointLocation", s"$run/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start())
+      val fin = spark.read.parquet(s"$run/store_${last.get()}/part")
+        .groupBy("yr", "mo")
+        .agg(sum(col("rev_cents")).as("rev_cents"),
+          sum(col("n_orders")).as("n_orders"),
+          min(col("min_cents")).as("min_cents"),
+          max(col("max_cents")).as("max_cents"))
+        .filter(col("n_orders") > 0)
+        .orderBy("yr", "mo")
+      spark.createDataFrame(java.util.Arrays.asList(fin.collect(): _*), fin.schema)
+    }
   }
 
   /** Streaming KMV bottom-K merge: fold a batch's hashes into the
