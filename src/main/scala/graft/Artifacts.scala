@@ -51,7 +51,8 @@ import java.nio.file.{Files, Paths}
   *
   * SCRATCH ([[withRunDir]]). A run directory is unique per call and
   * deleted in `finally`, so a key that throws leaves no store or
-  * checkpoint behind.
+  * checkpoint behind. A directory that outlives any one call is
+  * deleted at JVM exit ([[deleteAtExit]]).
   *
   * The root is `/tmp`, fixed: the static oracle SQL reads
   * `/tmp/graft_<artifact>___SFTAG__` paths, and artifact paths carry
@@ -100,6 +101,14 @@ object Artifacts {
       java.util.UUID.randomUUID().toString.take(8)
     Files.createDirectories(Paths.get(run))
     try body(run) finally deleteTree(run)
+  }
+
+  /** Delete `dir` when the JVM exits: for a directory that lives as
+    * long as something this JVM memoizes (an embedded database, a
+    * test session's warehouse), which no `finally` scope spans. */
+  private[graft] def deleteAtExit(dir: java.nio.file.Path): Unit = {
+    sys.addShutdownHook(deleteTree(dir.toString))
+    ()
   }
 
   private def deleteTree(path: String): Unit =

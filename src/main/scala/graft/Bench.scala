@@ -1,14 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import Verify.jstr
 
 object Bench {
   private def loadavg: String =
     try java.nio.file.Files.readString(
       java.nio.file.Paths.get("/proc/loadavg")).trim
     catch { case _: Exception => "unavailable" }
-
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
   /** Hypervisor steal ticks (field 8 of /proc/stat's cpu line) — the
     * direct multi-tenancy signal the loadavg stamps can't show. */
@@ -59,35 +56,41 @@ object Bench {
       "is frozen and the sort/window shape already shares its one " +
       "nation exchange, so the spread is compile-state, not data)"))
 
-  def main(args: Array[String]): Unit = {
+  /** Bench's one stdout line, scraped as bare JSON of at most 8 KB:
+    * every key's best seconds (`-1` for a failed key), their total and
+    * the calibration seconds. Values carry at most 4 significant
+    * digits and at most 4 decimals, trailing zeros stripped: 333 keys
+    * at full Double precision made the line ~10 KB and the scrape
+    * window truncated it mid-line two rounds running, and fixed 4
+    * decimals still grew one byte per key past 10 s. 4 digits lose
+    * nothing at the >10 ms scale of any real key, any value in
+    * [0, 10^4) s prints in at most 6 characters, and full precision
+    * (every sample) stays in the bench_full.json detail. */
+  private[graft] def oneLine(results: Seq[(String, Double)], total: Double,
+      sfDir: String, calib: Double): String = {
+    val qs = results.map { case (n, b) => jstr(n) + ":" + short(b) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${short(total)},"unit":"sec","queries":$qs,"sf":${jstr(sfDir)},"calib_sec":${short(calib)}}"""
+  }
+
+  private def short(v: Double): String =
+    if (v == -1.0) "-1" else {
+      val b = BigDecimal(v)
+      val sig = b.round(new java.math.MathContext(4, java.math.RoundingMode.HALF_UP))
+      val r = if (sig.scale > 4) b.setScale(4, BigDecimal.RoundingMode.HALF_UP) else sig
+      r.bigDecimal.stripTrailingZeros.toPlainString
+    }
+
+  def main(args: Array[String]): Unit = Tables.withSession { spark =>
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // long-JVM hygiene: a 109-key × 3-sample run accumulates
-      // shuffle/broadcast state that ContextCleaner only drains after
-      // a GC, and the default periodic GC is 30 MIN — longer than the
-      // whole bench. Keys measured 5-10× slower at the END of the run
-      // than solo (etl_join_extract 0.5 s solo vs 6.5 s as key ~30 of
-      // 109) until the cleaner interval was dropped and the status
-      // stores bounded.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.ui.retainedExecutions", "10")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     // warm the page cache + codegen paths once so per-query numbers
     // measure the plan, not whichever query touches a table first
     Tables.all.foreach(t => Tables.load(spark, sfDir, t).count())
     // best-of-3 by default: the host shows transient multi-minute
     // contention windows (observed 0.8s -> 29s on an unchanged query,
     // both runs of a best-of-2 inside one window); a third sample
-    // spreads the measurements past most windows. The noop sink forces
-    // full materialization (a bare count() would let Catalyst prune
-    // the projections being benched).
+    // spreads the measurements past most windows.
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     // parsed ONCE, boolean-tolerant: "0"/"false"/"off" disable the
     // warm-up; a typo'd value must not abort a 327-key measurement run
@@ -113,12 +116,8 @@ object Bench {
         // the warm-up execution CRASHED (a real signal, distinct from
         // off), positive = its wall seconds.
         val warmSec: Option[Double] = if (!warm) None else Some {
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-          val t0 = System.nanoTime()
           try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            val sec = (System.nanoTime() - t0) / 1e9
+            val sec = SparkEntry.runNoop(spark, fn, sfDir)
             System.err.println(f"[bench] $name warm-up (untimed): $sec%.2f s")
             sec
           } catch { case e: Throwable =>
@@ -129,22 +128,8 @@ object Bench {
         // a throwing run poisons the whole query with a -1 sentinel —
         // a crash's fast failure time must never rank as a best time
         val times = (1 to runs).map { i =>
-          // drop stale persisted blocks BEFORE timing: every sample of
-          // a localCheckpoint-ing key (clusters, incremental, minhash)
-          // leaves its blocks pinned until ContextCleaner's periodic
-          // GC (default 30 min), and blocks under storageFraction are
-          // UNEVICTABLE by execution memory — measured at sf1: the
-          // accumulated garbage squeezed dedup_ngram_jaccard's shuffle
-          // into spill collapse (102/343/25 s samples vs 2.8 s in a
-          // 1-run-per-key probe of the same build). Each fn() call
-          // rebuilds its frames, so nothing persisted is ever reused
-          // across samples and the unpersist is semantically free.
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-          val t0 = System.nanoTime()
           try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            val sec = (System.nanoTime() - t0) / 1e9
+            val sec = SparkEntry.runNoop(spark, fn, sfDir)
             // live per-sample progress on stderr (stdout stays the
             // driver's one-line contract): a hung or thrashing run
             // must show WHICH key it is stuck on — the r7 sf1 family
@@ -164,22 +149,10 @@ object Bench {
     val calibAfter = calibrate()
     val stealAfter = stealTicks
     val calib = math.min(calibBefore, calibAfter)
-    val best = results.map { case (n, _, b, _) => n -> b }.toMap
-    // ONE-LINE values at 4 decimals (r14 verdict item 1): 333 keys at
-    // full Double precision made the line ~10 KB and the scrape window
-    // truncated it mid-line two rounds running. 0.1 ms granularity
-    // loses nothing at the >10 ms scale of any real key; full
-    // precision (every sample) stays in the bench_full.json detail.
-    def r4(v: Double): String =
-      if (v == -1.0) "-1" else BigDecimal(v)
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (n, _, b, _) => jstr(n) + ":" + r4(b) }
-      .mkString("{", ",", "}")
+    val best = results.map { case (n, _, b, _) => n -> b }
     // failed queries (-1 sentinel) are excluded from the total rather
     // than subtracting from it
-    val total = best.values.filter(_ >= 0).sum
-    val oneLine =
-      s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","calib_sec":${r4(calib)}}"""
+    val total = best.map(_._2).filter(_ >= 0).sum
     // The COMPLETE record goes to a file the driver can archive
     // verbatim: every key with EVERY sample (not just the min) plus
     // load-average stamps, so a contention spike is visible in the
@@ -199,20 +172,16 @@ object Bench {
          |"loadavg_before":${jstr(loadBefore)},"loadavg_after":${jstr(loadAfter)},
          |"calib_sec":$calib,"calib_sec_before":$calibBefore,"calib_sec_after":$calibAfter,
          |"steal_ticks_before":$stealBefore,"steal_ticks_after":$stealAfter,
-         |"queries":$qs,
+         |"queries":${best.map { case (n, b) => jstr(n) + ":" + b }.mkString("{", ",", "}")},
          |"detail":$fullQs}""".stripMargin.replace("\n", "")
     // stdout FIRST: the driver scrapes this line, and hours of
     // measurements must never be lost to an unwritable artifact path
-    println(oneLine)
+    println(oneLine(best, total, sfDir, calib))
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outPath), full + "\n")
     catch { case e: Exception =>
       System.err.println(s"[bench] full-record write failed ($outPath): $e")
     }
-    spark.stop()
-    // exit unconditionally: a leaked non-daemon thread must not hang
-    // the benchmarking harness after the JSON line is out (see Verify)
-    sys.exit(0)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for stress sweeps beyond the provided fixtures:
@@ -32,19 +32,12 @@ import org.apache.spark.sql.functions._
   */
 object GenScale {
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Tables.withSession { spark =>
     val Array(srcDir, outDir, factorStr) = args
     val factor = factorStr.toInt
     // the per-copy text rotations (below) are distinct only while
     // 13*i stays unique mod 35 — enough for any realistic sweep
     require(factor <= 35, s"factor $factor > 35 would repeat a text rotation")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     // raw reads: events must keep its int64 ts exactly as stored
     def raw(name: String): DataFrame =
@@ -144,8 +137,6 @@ object GenScale {
       d.withColumn("vec_id", col("vec_id") + i * shift)
         .withColumn("embedding", noised)
     })
-
-    spark.stop()
   }
 
   /** Spark writes directories; the driver fixtures are single FILES

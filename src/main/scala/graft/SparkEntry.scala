@@ -14,6 +14,29 @@ object SparkEntry {
       CorpusPipeline.queries ++ graft.streaming.StreamOps.queries ++
       StatsOps.queries ++ AnalyticsOps.queries ++ SeriesOps.queries ++
       SketchOps.queries ++ MatchRecognize.queries
+  /** Runs key `fn` on `sfDir` into the noop sink and returns its wall
+    * seconds.
+    *
+    * Stale persisted blocks are dropped BEFORE timing: every run of a
+    * localCheckpoint-ing key (clusters, incremental, minhash) leaves
+    * its blocks pinned until ContextCleaner's periodic GC, and blocks
+    * under storageFraction are UNEVICTABLE by execution memory —
+    * measured at sf1: the accumulated garbage squeezed
+    * dedup_ngram_jaccard's shuffle into spill collapse (102/343/25 s
+    * samples vs 2.8 s in a 1-run-per-key probe of the same build).
+    * Each `fn` call rebuilds its frames, so nothing persisted is ever
+    * reused across runs and the unpersist is semantically free.
+    *
+    * The noop sink forces full materialization (a bare count() would
+    * let Catalyst prune the projections being measured). */
+  def runNoop(spark: SparkSession, fn: (SparkSession, String) => DataFrame,
+      sfDir: String): Double = {
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    val t0 = System.nanoTime()
+    fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

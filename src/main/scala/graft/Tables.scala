@@ -40,6 +40,44 @@ object Tables {
       sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
 
+  /** The one local session every graft main runs in, then the JVM's
+    * exit: runs `body`, stops the session and exits 0, or, if `body`
+    * throws, prints the exception to stderr, stops the session and
+    * exits 1. The exit is unconditional because a leaked non-daemon
+    * thread anywhere (a library pool, an embedded DB engine) would
+    * otherwise keep the JVM alive after `main` returns and hang the
+    * harness waiting on it (seen once with migrate's executor pool).
+    * Prints nothing to stdout, so a main's own last line stays last.
+    *
+    * `local[n]` with n shuffle partitions, n = `SPARK_GRAFT_CPUS` (a
+    * deployment setting) or else the host's processor count. */
+  def withSession(body: SparkSession => Unit): Unit = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = configure(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      // long-JVM hygiene: a 109-key × 3-sample Bench run accumulates
+      // shuffle/broadcast state that ContextCleaner only drains after
+      // a GC, and the default periodic GC is 30 MIN — longer than the
+      // whole bench. Keys measured 5-10× slower at the END of the run
+      // than solo (etl_join_extract 0.5 s solo vs 6.5 s as key ~30 of
+      // 109) until the cleaner interval was dropped and the status
+      // stores bounded.
+      .config("spark.cleaner.periodicGC.interval", "30s")
+      .config("spark.sql.ui.retainedExecutions", "10")
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val code =
+      try { body(spark); 0 }
+      catch { case e: Throwable => e.printStackTrace(); 1 }
+      finally spark.stop()
+    sys.exit(code)
+  }
+
   /** Register every table as a temp view so the full engine surface
     * is reachable from spark.sql(...) too. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =

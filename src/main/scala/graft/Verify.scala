@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Paths}
@@ -40,15 +40,22 @@ object Verify {
     else s"SELECT * FROM (\n$sql\n) graft_pin ORDER BY " +
       ord.map(c => "\"" + c + "\" ASC NULLS FIRST").mkString(", ")
 
-  def main(args: Array[String]): Unit = {
+  /** A JSON string literal: backslash, quote and ALL control chars
+    * (<0x20) escaped — a tab or CR in an oracle SQL string would
+    * otherwise make the reader's json.load fail and silently drop
+    * every correctness result. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def main(args: Array[String]): Unit = Tables.withSession { spark =>
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset, for iterating on one key
     // locally (the driver runs the full map)
@@ -75,18 +82,6 @@ object Verify {
     // only inside string literals)
     def pinSql(name: String, sql: String): String =
       pinSqlFor(sql, pinned.getOrElse(name, Nil))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // __SFTAG__ lets a static oracle string reference per-corpus
     // side-channel files (e.g. the published IVF centroid model)
     // without cross-run clobbering — substituted with this run's tag
@@ -101,14 +96,8 @@ object Verify {
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) =>
-        s"${q(k)}: ${q(pinSql(k, v.replace("__SFTAG__", sfTag)))}" }
+        s"${jstr(k)}: ${jstr(pinSql(k, v.replace("__SFTAG__", sfTag)))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    // the driver gate needs this JVM to EXIT: a leaked non-daemon
-    // thread anywhere (a library pool, an embedded DB engine) would
-    // otherwise keep the process alive after main() returns and hang
-    // the harness (seen once with migrate's executor pool)
-    sys.exit(0)
   }
 }

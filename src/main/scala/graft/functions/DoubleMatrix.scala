@@ -10,7 +10,7 @@ package graft.functions
   * ONCE at construction, equality fast-paths on it, and toString
   * prints the shape instead of the data (a 141×64 matrix rendered
   * into every plan string is megabytes of noise). Same lesson as
-  * CentroidData, which the IvfSweep measured at 14 s of planning per
+  * CentroidData, which the IVF sweep measured at 14 s of planning per
   * query before the fix.
   *
   * OWNERSHIP CONTRACT: construction transfers ownership of `rows` to

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * constructor args CONSTANTLY during analysis (canonicalization,
   * semanticEquals, constraint propagation, argString) — naked
   * IndexedSeq args made every one of those walks O(k·dim), which the
-  * IvfSweep measured as 14 s of planning at IVF-correct k=141 (vs
+  * IVF sweep measured as 14 s of planning at IVF-correct k=141 (vs
   * 0.5 s at k=64). The content hash is folded ONCE at construction;
   * equality fast-paths on it; toString prints the shape, not the
   * matrix.

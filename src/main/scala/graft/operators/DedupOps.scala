@@ -340,7 +340,7 @@ object DedupOps {
     * many true near-dup pairs do the published minhash band buckets
     * propose (recall) and how much verify work do false candidates
     * cost (precision)? One row: truth/candidate/TP/FP/FN counts +
-    * precision/recall in exact ppm. LshSweep explores the banding
+    * precision/recall in exact ppm. `Inspect lsh` explores the banding
     * design space offline; this KEY regression-gates the shipped
     * 16×16 configuration — a signature or banding change that dents
     * recall fails loud in the board, not in a notebook.

@@ -301,7 +301,7 @@ object SimOps {
     * with the fixture-sized defaults; NearestCentroid carries the
     * centroid matrix as a reference object, so the expression TREE is
     * the same size at k=141 as at k=16 and planning cost stays O(1)
-    * in k (measured by graft.IvfSweep). */
+    * in k (measured by `graft.Inspect ivf`). */
   def ivfTopkParams(s: SparkSession, dir: String, k: Int, probes: Int,
       iters: Int = lloydIters): DataFrame =
     ivfTopkWith(s, dir, lloydCentroids(corpus(s, dir), k, iters), probes)
@@ -410,7 +410,7 @@ object SimOps {
   }
 
   /** Per-subspace L2 k-means codebooks for any (m, k) — the pqM/pqK
-    * defaults feed the published model; PqSweep drives other points
+    * defaults feed the published model; `Inspect pq` drives other points
     * of the recall/compression trade-off through the same build. */
   private[graft] def buildCodebooks(c: DataFrame, m: Int, k: Int): Array[Centroids] = {
     val subDim = embedDim / m
@@ -450,7 +450,7 @@ object SimOps {
     adcTopk(s, dir, publishedCodebooks(s, dir))
 
   /** Full-scan ADC top-k against an arbitrary codebook set — the
-    * embed_pq pipeline at any (m, k), also driven by PqSweep. */
+    * embed_pq pipeline at any (m, k), also driven by `Inspect pq`. */
   private[graft] def adcTopk(s: SparkSession, dir: String,
       books: Array[Centroids]): DataFrame = {
     val subDim = embedDim / books.length
@@ -858,8 +858,8 @@ object SimOps {
     * number: the eval every vector-store deployment runs after
     * (re)building an index, and the gate a probe/centroid change must
     * pass before rollout. Per query: how many of the exact top-k does
-    * the IVF answer recover. IvfSweep measures this across parameter
-    * settings in the suite; this key makes the deployed setting's
+    * the IVF answer recover. `Inspect ivf` measures this across
+    * parameter settings; this key makes the deployed setting's
     * recall hash-verifiable data.
     *
     * Scale shape: both inputs are the existing keys' plans (exact scan

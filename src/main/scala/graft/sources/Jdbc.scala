@@ -112,11 +112,13 @@ object Jdbc {
 
   val derbyDriver = "org.apache.derby.jdbc.EmbeddedDriver"
 
-  /** A fresh embedded Derby database under a temp dir. Derby writes
-    * its derby.log relative to derby.system.home — pin it to the temp
-    * tree so runs never litter the working directory. */
+  /** A fresh embedded Derby database under a temp dir, deleted at JVM
+    * exit (it lives as long as the caller's memoized connection).
+    * Derby writes its derby.log relative to derby.system.home — pin it
+    * to the temp tree so runs never litter the working directory. */
   def tempDerby(prefix: String): ConnInfo = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
+    graft.Artifacts.deleteAtExit(dir)
     if (System.getProperty("derby.system.home") == null)
       System.setProperty("derby.system.home", dir.toString)
     ConnInfo(s"jdbc:derby:$dir/db;create=true", "app", "app", derbyDriver)

@@ -17,14 +17,14 @@ import graft.streaming.StreamOps
 class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
   import TestSpark._
 
-  private val tmp = Files.createTempDirectory("graft_artifacts_spec")
+  private val tmp = tempDir("graft_artifacts_spec")
   override def afterAll(): Unit =
     org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
 
   /** A not-yet-existing artifact root (its `.lock` sibling lands in
-    * the spec's temp dir too). */
+    * the same scratch dir). */
   private def freshRoot(): String =
-    Files.createTempDirectory(tmp, "case").resolve("art").toString
+    tempDir("case").resolve("art").toString
 
   private def marker(root: String): Path = Paths.get(root, "_GRAFT_TAG")
 

@@ -43,10 +43,11 @@ class FixpointSpec extends AnyFunSuite {
     // under AQE one count() may be several jobs: measure one count of a
     // pinned frame of the same shape, then expect rounds + 1 of them
     val probe = xs(40).localCheckpoint(eager = false)
-    val (_, perCount) = JobCount.in(spark)(positive(probe).count())
-    val ((out, rounds), jobs) = JobCount.in(spark) {
+    val perCount = Probe.measure(spark)(positive(probe).count())._2.jobs
+    val ((out, rounds), counts) = Probe.measure(spark) {
       Fixpoint.converge(xs(40), 10, "shrink")(shrink)(positive)
     }
+    val jobs = counts.jobs
     assert(rounds == 3) // max x: 39 -> 23 -> 7 -> 0
     assert(perCount >= 1 && jobs == (rounds + 1) * perCount,
       s"$jobs jobs for $rounds rounds at $perCount jobs per count")
@@ -54,9 +55,10 @@ class FixpointSpec extends AnyFunSuite {
   }
 
   test("Fixpoint.unroll runs no job until the consumer's action") {
-    val (out, jobs) = JobCount.in(spark) {
+    val (out, counts) = Probe.measure(spark) {
       Fixpoint.unroll(xs(40), 2)((cur, _) => shrink(cur))
     }
+    val jobs = counts.jobs
     assert(jobs == 0)
     assert(out.agg(max("x")).head.getLong(0) == 7L)
   }

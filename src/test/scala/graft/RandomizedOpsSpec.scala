@@ -390,7 +390,7 @@ class RandomizedOpsSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     import org.apache.spark.sql.{Column, DataFrame}
-    val dir = java.nio.file.Files.createTempDirectory("graft_mv_prop").toString
+    val dir = tempDir("graft_mv_prop").toString
     val rows = (1 to 5000).map { _ =>
       (rnd.nextInt(7), rnd.nextInt(13), s"s${rnd.nextInt(5)}",
         rnd.nextInt(1000000).toLong)

@@ -8,11 +8,28 @@ object TestSpark {
   lazy val spark: SparkSession = Tables.configure(SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+    .config("spark.sql.warehouse.dir", tempDir("graft-wh").toString)
     .config("spark.ui.enabled", "false"))
     .getOrCreate()
   val sf: String = "/root/testdata/sf0.001"
+
+  /** One per-JVM root for every spec's scratch dirs, deleted when the
+    * test JVM exits. */
+  private lazy val scratch: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-suite")
+    Artifacts.deleteAtExit(root)
+    root
+  }
+
+  private val tempDirs = new java.util.concurrent.atomic.AtomicInteger
+
+  /** A fresh scratch dir `<prefix><n>` under the suite's root. The root
+    * is already unique, so the name takes a counter rather than a
+    * random long: a file path under it must stay short enough to show
+    * whole in a plan string's 100-character metadata field, which
+    * specs search for the file a scan reads. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createDirectory(scratch.resolve(prefix + tempDirs.incrementAndGet()))
 
   /** Every node of an executed plan, descending through the leaf-like
     * wrappers `collect` stops at: AdaptiveSparkPlanExec holds the

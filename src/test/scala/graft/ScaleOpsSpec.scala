@@ -252,8 +252,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       // under the join's Sort, and the interposed HashAggregate breaks
       // the pattern. Materialize the dim first (as a real workload's
       // dim table already is) and AQE handles the skew.
-      val dimPath = java.nio.file.Files
-        .createTempDirectory("graft-aqe-dim").resolve("dim").toString
+      val dimPath = tempDir("graft-aqe-dim").resolve("dim").toString
       li.groupBy("l_returnflag")
         .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
           .as("flag_total_qty"))
@@ -278,7 +277,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("regenerated corpus rebuilds the bucket layout (tag tracks content)") {
     import graft.operators.ScaleJoins
     import java.nio.file.{Files, Paths}
-    val tmp = Files.createTempDirectory("graft-bucket-tag").toString
+    val tmp = tempDir("graft-bucket-tag").toString
     for (t <- Seq("lineitem", "orders"))
       Files.copy(Paths.get(s"$sf/$t.parquet"), Paths.get(s"$tmp/$t.parquet"))
     val tag1 = ScaleJoins.corpusTag(tmp, Seq("lineitem", "orders"))
@@ -318,8 +317,7 @@ class ScaleOpsSpec extends AnyFunSuite {
         .agg((max(col("o_custkey")) - min(col("o_custkey"))).as("kspan"),
           (unix_date(to_date(max(col("o_orderdate")))) -
             unix_date(to_date(min(col("o_orderdate"))))).as("dspan"))
-    val linDir = java.nio.file.Files
-      .createTempDirectory("graft-linear-layout").resolve("orders").toString
+    val linDir = tempDir("graft-linear-layout").resolve("orders").toString
     Tables.load(spark, sf, "orders")
       .repartitionByRange(64, col("o_orderdate"))
       .sortWithinPartitions("o_orderdate")
@@ -874,8 +872,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       .groupBy(year(col("o_orderdate")).as("yr"),
         month(col("o_orderdate")).as("mo"))
       .agg(sum(expr(cents)).as("rev_cents"), count(lit(1)).as("n_orders"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_mv_filtered_def").toString
+    val dir = tempDir("graft_mv_filtered_def").toString
     val path = s"$dir/mv.parquet"
     defDf.write.mode("overwrite").parquet(path)
     defDf.queryExecution.analyzed match {

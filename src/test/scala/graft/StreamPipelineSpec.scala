@@ -113,7 +113,7 @@ class StreamPipelineSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // stage the events table as 4 parquet files
-    val work = Files.createTempDirectory("graft_ckpt")
+    val work = tempDir("graft_ckpt")
     val stage = work.resolve("stage")
     Tables.load(spark, sf, "events").repartition(4)
       .write.parquet(stage.toString)
@@ -379,7 +379,7 @@ class StreamPipelineSpec extends AnyFunSuite {
     // bucket; at 100 TB: O(affected buckets) written per batch)
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.types.IntegerType
-    val dir = Files.createTempDirectory("graft_bucket_store").toString
+    val dir = tempDir("graft_bucket_store").toString
     val store = s"$dir/store"
     val base = Tables.load(spark, sf, "customer")
       .select(col("c_custkey"), lit(0).as("eff_from_ver"),
@@ -445,7 +445,7 @@ class StreamPipelineSpec extends AnyFunSuite {
     // ever changes) holds through the compacting write too
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.types.IntegerType
-    val dir = Files.createTempDirectory("graft_compact_store").toString
+    val dir = tempDir("graft_compact_store").toString
     val store = s"$dir/store"
     val base = Tables.load(spark, sf, "customer")
       .select(col("c_custkey"), lit(0).as("eff_from_ver"),
@@ -512,7 +512,7 @@ class StreamPipelineSpec extends AnyFunSuite {
     // byte-identical (the append-only contract through replay)
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.types.IntegerType
-    val dir = Files.createTempDirectory("graft_compact_replay").toString
+    val dir = tempDir("graft_compact_replay").toString
     val store = s"$dir/store"
     val base = Tables.load(spark, sf, "customer")
       .select(col("c_custkey"), lit(0).as("eff_from_ver"),
@@ -568,7 +568,7 @@ class StreamPipelineSpec extends AnyFunSuite {
     // horizon is needed, unlike Delta/Iceberg VACUUM
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.types.IntegerType
-    val dir = Files.createTempDirectory("graft_vacuum_store").toString
+    val dir = tempDir("graft_vacuum_store").toString
     val store = s"$dir/store"
     val base = Tables.load(spark, sf, "customer")
       .select(col("c_custkey"), lit(0).as("eff_from_ver"),
@@ -638,9 +638,8 @@ class StreamPipelineSpec extends AnyFunSuite {
     // every one of them and wedged the stream permanently. The
     // horizon is READ from the checkpoint's commits/ log: batch b's
     // commit record is absent, so fullness is judged below g(b+1)
-    import java.nio.file.Files
     import org.apache.spark.sql.types.IntegerType
-    val dir = Files.createTempDirectory("graft_vacuum_replay").toString
+    val dir = tempDir("graft_vacuum_replay").toString
     val store = s"$dir/store"
     val base = Tables.load(spark, sf, "customer")
       .select(col("c_custkey"), lit(0).as("eff_from_ver"),
@@ -708,9 +707,8 @@ class StreamPipelineSpec extends AnyFunSuite {
     // fullness at g1 and reclaim nothing, where the old fixed
     // depth=1 constant would have judged at g2 and, had g2 been full,
     // deleted batch 1's inputs
-    import java.nio.file.Files
     import org.apache.spark.sql.types.IntegerType
-    val dir = Files.createTempDirectory("graft_vacuum_trail").toString
+    val dir = tempDir("graft_vacuum_trail").toString
     val store = s"$dir/store"
     val base = Tables.load(spark, sf, "customer")
       .select(col("c_custkey"), lit(0).as("eff_from_ver"),
@@ -750,9 +748,8 @@ class StreamPipelineSpec extends AnyFunSuite {
   }
 
   test("AS OF TIMESTAMP resolves between/at/before commits through the event-time manifests") {
-    import java.nio.file.Files
     import org.apache.spark.sql.types.IntegerType
-    val dir = Files.createTempDirectory("graft_asof_ts").toString
+    val dir = tempDir("graft_asof_ts").toString
     val store = s"$dir/store"
     val base = Tables.load(spark, sf, "customer")
       .select(col("c_custkey"), lit(0).as("eff_from_ver"),
@@ -816,9 +813,8 @@ class StreamPipelineSpec extends AnyFunSuite {
     // generation, it never rewrites history. Single-key waves make
     // g1/g2 deterministically partial, so batch 2 compacts at
     // cadence 2 and bounds 0..2 all read below the compaction.
-    import java.nio.file.Files
     import org.apache.spark.sql.types.IntegerType
-    val dir = Files.createTempDirectory("graft_asof_store").toString
+    val dir = tempDir("graft_asof_store").toString
     val store = s"$dir/store"
     val base = Tables.load(spark, sf, "customer")
       .select(col("c_custkey"), lit(0).as("eff_from_ver"),
@@ -861,9 +857,8 @@ class StreamPipelineSpec extends AnyFunSuite {
     // per micro-batch forever. Fullness is prefix-union coverage, so
     // a compaction over a 3-bucket dimension counts as full and the
     // next batch goes back to a bounded partial write.
-    import java.nio.file.Files
     import org.apache.spark.sql.types.IntegerType
-    val dir = Files.createTempDirectory("graft_sparse_store").toString
+    val dir = tempDir("graft_sparse_store").toString
     val store = s"$dir/store"
     val all = Tables.load(spark, sf, "customer")
       .select(col("c_custkey"), lit(0).as("eff_from_ver"),
@@ -1156,7 +1151,7 @@ class StreamPipelineSpec extends AnyFunSuite {
       (4L, Some("NULL"), Some(true)), // literal text, NOT a null
       (5L, Some("a,b"), Some(false))) // embedded delimiter
       .toDF("id", "name", "flag")
-    val path = java.nio.file.Files.createTempDirectory("pgcopy").toString
+    val path = tempDir("pgcopy").toString
     PgCopyWriter.write(df, path)
     val lines = spark.read.text(path).collect().map(_.getString(0)).sorted
     assert(lines.contains("1,'o''brien',true"))
@@ -1191,7 +1186,7 @@ class StreamPipelineSpec extends AnyFunSuite {
     // and through the writer (codegen'd column path), floats widening
     val df = Seq((1L, Some(1e-7), Some(0.25f)), (2L, None: Option[Double], None: Option[Float]))
       .toDF("id", "d", "f")
-    val path = java.nio.file.Files.createTempDirectory("pgfloat").toString
+    val path = tempDir("pgfloat").toString
     PgCopyWriter.write(df, path)
     val lines = spark.read.text(path).collect().map(_.getString(0)).sorted
     assert(lines.contains("1,1e-07,0.25"))
@@ -1273,7 +1268,7 @@ class StreamPipelineSpec extends AnyFunSuite {
   }
 
   test("Pipeline parquet-lake sink writes partitioned output") {
-    val out = java.nio.file.Files.createTempDirectory("lake").toString
+    val out = tempDir("lake").toString
     val res = Pipeline.migrate(spark, sf, out,
       tables = Seq("orders"), changes = SchemaChanges(),
       pks = Map("orders" -> Seq("o_orderkey")),
@@ -1293,20 +1288,20 @@ class StreamPipelineSpec extends AnyFunSuite {
 
   test("Pipeline.migrate counts rows, not dump lines, for an embedded newline") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("newline_src").toString
+    val src = tempDir("newline_src").toString
     Seq((1L, "two\nlines"), (2L, "one")).toDF("id", "note")
       .write.parquet(s"$src/notes.parquet")
-    val out = java.nio.file.Files.createTempDirectory("newline_out").toString
+    val out = tempDir("newline_out").toString
     val res = Pipeline.migrate(spark, src, out, Seq("notes"), SchemaChanges())
     assert(res.tables.map(_.rows) == Seq(2L))
     assert(spark.read.text(s"$out/notes").count() == 3)
   }
 
   test("Pipeline.migrate runs one load and one write job per table") {
-    val out = java.nio.file.Files.createTempDirectory("migrate_jobs").toString
-    val (_, jobs) = JobCount.in(spark) {
+    val out = tempDir("migrate_jobs").toString
+    val jobs = Probe.measure(spark) {
       Pipeline.migrate(spark, sf, out, Seq("nation", "region"), SchemaChanges())
-    }
+    }._2.jobs
     assert(jobs == 4, s"$jobs jobs for 2 tables")
   }
 
@@ -1314,22 +1309,23 @@ class StreamPipelineSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths}
     // sf0.001 with every tenth customer and part key removed, so both
     // rules drop rows; neither parent table is in the migrated list
-    val src = Files.createTempDirectory("migrate_lookups_src")
+    val src = tempDir("migrate_lookups_src")
     Seq("orders", "lineitem").foreach(t => Files.createSymbolicLink(
       src.resolve(s"$t.parquet"), Paths.get(sf, s"$t.parquet").toRealPath()))
     Seq("customer" -> "c_custkey", "part" -> "p_partkey").foreach { case (t, k) =>
       Tables.load(spark, sf, t).filter(col(k) % 10 =!= 0)
         .write.parquet(src.resolve(s"$t.parquet").toString)
     }
-    val out = Files.createTempDirectory("migrate_lookups").toString
+    val out = tempDir("migrate_lookups").toString
     val changes = SchemaChanges(Map(
       "orders" -> TableChange(
         dropOrphans = Seq(OrphanRule("o_custkey", "customer", "c_custkey"))),
       "lineitem" -> TableChange(
         joins = Seq(JoinRule("part", "l_partkey", "p_partkey")))))
-    val (res, jobs) = JobCount.in(spark) {
+    val (res, counts) = Probe.measure(spark) {
       Pipeline.migrate(spark, src.toString, out, Seq("orders", "lineitem"), changes)
     }
+    val jobs = counts.jobs
     def semi(t: String, fk: String, parent: String, key: String): Long = {
       val kept = Tables.load(spark, src.toString, t)
         .join(Tables.load(spark, src.toString, parent).select(key),
@@ -1346,7 +1342,7 @@ class StreamPipelineSpec extends AnyFunSuite {
   }
 
   test("Pipeline.migrateAll migrates multiple databases with prefix filter") {
-    val out = java.nio.file.Files.createTempDirectory("multidb").toString
+    val out = tempDir("multidb").toString
     val dbs = Map(
       "client_a" -> "/root/testdata/sf0.001",
       "client_b" -> "/root/testdata/sf0.001",
@@ -1360,7 +1356,7 @@ class StreamPipelineSpec extends AnyFunSuite {
   }
 
   test("Pipeline.writeArtifacts emits the reference's bundle") {
-    val out = java.nio.file.Files.createTempDirectory("artifacts").toString
+    val out = tempDir("artifacts").toString
     val changes = SchemaChanges(Map(
       "customer" -> TableChange(rename = Some("clients"),
         columns = Map("c_acctbal" -> ColumnChange(skip = true)))))
@@ -1372,10 +1368,10 @@ class StreamPipelineSpec extends AnyFunSuite {
       IndexDef("by_nation_seg", Seq("c_nationkey", "c_mktsegment"))))
     val res = Pipeline.migrate(spark, sf, out, tables, changes, pks = pks,
       indexes = idx)
-    val (_, bundleJobs) = JobCount.in(spark) {
+    val bundleJobs = Probe.measure(spark) {
       Pipeline.writeArtifacts(spark, sf, out, tables, changes, res, pks = pks,
         indexes = idx)
-    }
+    }._2.jobs
     assert(bundleJobs == 0, s"the bundle ran $bundleJobs jobs")
     def read(f: String) =
       new String(java.nio.file.Files.readAllBytes(
@@ -1407,7 +1403,7 @@ class StreamPipelineSpec extends AnyFunSuite {
     * writes no file. */
   private def bundleMismatch(tables: Seq[String], pks: Map[String, Seq[String]],
       indexes: Map[String, Seq[IndexDef]] = Map.empty): String = {
-    val out = java.nio.file.Files.createTempDirectory("mismatch").toString
+    val out = tempDir("mismatch").toString
     val res = Pipeline.migrate(spark, sf, out, Seq("nation"), SchemaChanges(),
       pks = Map("nation" -> Seq("n_nationkey")))
     val e = intercept[IllegalArgumentException](Pipeline.writeArtifacts(spark,
@@ -1434,14 +1430,14 @@ class StreamPipelineSpec extends AnyFunSuite {
   }
 
   test("Pipeline.convertMysqlDump rewrites a dump file distributively") {
-    val in = java.nio.file.Files.createTempDirectory("dump_in")
+    val in = tempDir("dump_in")
     java.nio.file.Files.writeString(in.resolve("dump.sql"),
       """-- MySQL dump
         |INSERT INTO "reservation_reminder" ("id", "resa_id") VALUES (1, '0000-00-00');
         |INSERT INTO "tmp_table" ("a") VALUES (1);
         |INSERT INTO "keep" ("x") VALUES ('it\'s');
         |""".stripMargin)
-    val out = java.nio.file.Files.createTempDirectory("dump_out").toString + "/pg"
+    val out = tempDir("dump_out").toString + "/pg"
     val changes = SchemaChanges(Map(
       "reservation_reminder" -> TableChange(rename = Some("reminder"),
         columns = Map("resa_id" -> ColumnChange(rename = Some("reservation_id")))),
@@ -1455,7 +1451,7 @@ class StreamPipelineSpec extends AnyFunSuite {
   }
 
   test("Pipeline.migrate: end-to-end rules -> extract -> dump -> DDL") {
-    val out = java.nio.file.Files.createTempDirectory("migrate").toString
+    val out = tempDir("migrate").toString
     val changes = SchemaChanges(Map(
       "customer" -> TableChange(
         rename = Some("clients"),
@@ -1576,10 +1572,10 @@ class StreamPipelineSpec extends AnyFunSuite {
     val finalKth = bigHashes.take(SketchOps.kmvK).max
     assert(wave0.map(_._2).max < finalKth,
       "trap precondition: early kth strictly below the final kth")
-    val logDir = java.nio.file.Files.createTempDirectory("kmvlog")
+    val logDir = tempDir("kmvlog")
     import spark.implicits._
     Seq(wave0.toSeq, evs.toSeq).zipWithIndex.foreach { case (w, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"kmvw$i").toString
+      val tmp = tempDir(s"kmvw$i").toString
       spark.createDataset(w).toDF("event_type", "h")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()

@@ -17,14 +17,16 @@ cd "$(dirname "$0")/.."
 P="${1:-/tmp/gate}"
 
 echo "== suite =="
-run_dirs() { ls -d /tmp/graft_*_run_* 2>/dev/null | sort; }
+run_dirs() { ls -d /tmp/graft_*_run_* /tmp/graft-suite* /tmp/graft-derby-* 2>/dev/null | sort; }
 runs_before="$(run_dirs)"
 sbt -batch test > "$P.suite.log" 2>&1 || { grep -E "Tests:|\*\*\*" "$P.suite.log" | tail -5; exit 1; }
 grep -E "Tests:" "$P.suite.log" | tail -1
 # every scratch run dir is deleted in a finally (Artifacts.withRunDir),
-# so one the suite left behind is a leak, failing keys included
+# and the specs' scratch root and the Derby dirs at JVM exit
+# (Artifacts.deleteAtExit), so one the suite left behind is a leak,
+# failing keys included
 leaked="$(comm -13 <(echo "$runs_before") <(run_dirs))"
-if [ -n "$leaked" ]; then echo "suite left run dirs:"; echo "$leaked"; exit 1; fi
+if [ -n "$leaked" ]; then echo "suite left scratch dirs:"; echo "$leaked"; exit 1; fi
 
 # perfbench compiles graft's sources together with its own, so a
 # signature change in a module it calls breaks the benchmark while the
