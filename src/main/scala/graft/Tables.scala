@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables
   * (see TESTDATA.md). All queries take the sf directory as a
@@ -83,8 +88,18 @@ object Tables {
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     all.foreach(t => load(spark, sfDir, t).createOrReplaceTempView(t))
 
+  /** One table of a corpus dir. The schema is read in this JVM from
+    * the parquet footer Spark's own inference would read
+    * ([[footerSchema]]) and handed to the reader, so a load runs no
+    * Spark job: inference alone is a one-task job per call that
+    * deserializes a broadcast Hadoop conf to read one footer. Nothing
+    * is cached across calls: every load reads the footer again, so a
+    * rewritten table never gets a stale schema and a timed load times
+    * the read, not a lookup. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val df = footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
     // driver fixtures store ts as TIMESTAMP(NANOS) (read as int64 under
     // nanosAsLong → truncate to micros here); GenScale'd corpora write
     // ts as a real TIMESTAMP(MICROS) already — branch on the type
@@ -92,6 +107,41 @@ object Tables {
         df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     else df
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, read from the file
+    * that inference touches: the path itself if it is a file, else,
+    * among the directory's entries not named `_*` or `.*`,
+    * `_common_metadata`, then `_metadata`, then the first data file by
+    * path. Its footer goes through Spark's own footer-to-schema
+    * conversion under the session conf, so Spark's row metadata and
+    * the nanos/NTZ settings apply exactly as in inference. None for a
+    * layout this does not cover (subdirectories, which inference reads
+    * as partitions, or no data file): the caller infers. A missing
+    * path throws `FileNotFoundException`. */
+  def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val top = fs.getFileStatus(root)
+    val entries =
+      if (top.isFile) Seq(top)
+      else fs.listStatus(root).toSeq.sortBy(_.getPath.toString)
+    def named(n: String) = entries.find(_.getPath.getName == n)
+    val visible = entries.filterNot { s =>
+      val n = s.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+    if (visible.exists(_.isDirectory)) None
+    else named("_common_metadata").orElse(named("_metadata"))
+      .orElse(visible.headOption)
+      .map { file =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+        val footer =
+          try new Footer(file.getPath, reader.getFooter) finally reader.close()
+        ParquetFileFormat.readSchemaFromFooter(footer,
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
   }
 
   /** Corpus-dir tag for one-time /tmp artifact paths AND the oracle

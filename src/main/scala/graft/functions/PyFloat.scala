@@ -1,15 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
-
 /** Python-3 `str(float)` rendering of a double.
   *
   * The reference dumps every numeric cell through Python's str()
-  * (/root/reference/libs/PsqlParser.py:375-384 `_supaFilta` falls
+  * (the reference's PsqlParser.py:375-384 `_supaFilta` falls
   * through to `str(value)`), whose float formatting differs from
   * Java/Spark's in notation, not digits: fixed form for decimal
   * exponents in [-4, 16), otherwise `1e-07`-style scientific with a
@@ -67,34 +61,4 @@ object PyFloat {
     }
     sb.toString
   }
-}
-
-/** Codegen'd column form of [[PyFloat.repr]] — a static call inside
-  * whole-stage codegen, so the dump projection stays fused (the same
-  * native-Expression-over-UDF preference as DotProductD). */
-case class PyFloatRepr(child: Expression) extends UnaryExpression {
-
-  // strict DoubleType only (the package's validation discipline): an
-  // int or float child would render with silently different text
-  // under codegen's implicit widening and ClassCastException in the
-  // interpreted path
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_py_float expects double, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = StringType
-
-  override def prettyName: String = "graft_py_float"
-
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(PyFloat.repr(v.asInstanceOf[Double]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.PyFloat.repr($c))")
-
-  override protected def withNewChildInternal(newChild: Expression): PyFloatRepr =
-    copy(child = newChild)
 }

@@ -490,7 +490,7 @@ object Etl {
     * orchestration, quote doubling, NULL cells or numeric text breaks
     * hash parity. (Float text round-trips exactly here because the
     * node rules cast double -> decimal(18,2) before rendering — raw
-    * doubles would be bounded by PyFloatRepr's Python-2 12-significant-
+    * doubles would be bounded by PyFloat.repr's Python-2 12-significant-
     * digit str(), which is the reference's own lossy contract.) */
   def etlPipelineDump(s: SparkSession, dir: String): DataFrame = {
     val outDir = pipelineDumpDir(dir)

@@ -1,26 +1,26 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.types._
 
-import graft.rules.ValueRules
+import graft.functions.PgCopyLine
 
 /** PG `\copy`-compatible CSV dump of a DataFrame — the distributed
   * twin of the reference's per-row CSV writer
-  * (/root/reference/libs/PsqlParser.py:135-146 plus _supaFilta:375-384):
+  * (PsqlParser.py:135-146 plus _supaFilta:375-384):
   * NULL literal for nulls, true/false booleans, strings ALWAYS
   * single-quoted with '' doubling, numbers raw.
   *
-  * Every cell is rendered by a Column expression and the line joined
-  * with commas, then written via the text sink — the engine renders
+  * Each line is one codegen'd expression, [[PgCopyLine]], over all of
+  * the row's columns, written via the text sink — the engine renders
   * exactly the reference's bytes with no CSV-writer quoting policy in
-  * between. That unconditional string quoting matters: a writer that
-  * only quotes "when needed" (Spark's csv default) emits a cell whose
-  * value is the literal string "NULL" unquoted, and `\copy ... NULL
-  * 'NULL'` then corrupts it into SQL NULL on load; _supaFilta always
-  * quotes, so the literal text survives. Embedded delimiters and
-  * newlines are likewise safe inside the quotes.
+  * between, and no per-cell expression tree or regex. That
+  * unconditional string quoting matters: a writer that only quotes
+  * "when needed" (Spark's csv default) emits a cell whose value is the
+  * literal string "NULL" unquoted, and `\copy ... NULL 'NULL'` then
+  * corrupts it into SQL NULL on load; _supaFilta always quotes, so the
+  * literal text survives. Embedded delimiters and newlines are likewise
+  * safe inside the quotes.
   *
   * Spark's text sink renders each partition in parallel — the
   * reference's single cursor loop becomes N writers; the \copy
@@ -29,50 +29,27 @@ import graft.rules.ValueRules
   */
 object PgCopyWriter {
 
-  /** One cell rendered to its final dump text, per _supaFilta:
-    * null -> NULL, boolean -> true/false, string -> 'quoted''',
-    * timestamp -> the reference's str(datetime) shape, floats ->
-    * Python str(float) notation (PyFloat: 1e-07, not Spark's 1.0E-7),
-    * remaining scalars raw. Non-scalar columns throw loudly: the
-    * reference dumps only scalar MySQL types (blob/bytea is emptied
-    * by ValueRules.applyRawDump BEFORE rendering), and Spark's
-    * toString for array/map/struct/binary is engine-specific text
-    * that would silently corrupt a dump. */
-  def renderCell(name: String, dt: DataType): Column = dt match {
-    case BooleanType => ValueRules.pgEscapeBoolean(col(name))
-    case StringType => ValueRules.pgEscapeString(col(name))
-    case TimestampType =>
-      when(col(name).isNull, lit("NULL"))
-        .otherwise(date_format(col(name), "yyyy-MM-dd HH:mm:ss"))
-    case FloatType | DoubleType =>
-      // MySQLdb hands the reference a Python float (a double) — so
-      // floats widen first, then render with Python's notation
-      when(col(name).isNull, lit("NULL"))
-        .otherwise(org.apache.spark.sql.GraftSqlBridge.column(
-          graft.functions.PyFloatRepr(
-            org.apache.spark.sql.GraftSqlBridge.expression(
-              col(name).cast(DoubleType)))))
-    case _: ArrayType | _: MapType | _: StructType | BinaryType =>
-      throw new UnsupportedOperationException(
-        s"PgCopyWriter: no dump rendering for non-scalar column " +
-          s"'$name' (${dt.simpleString}) — convert upstream " +
-          "(ValueRules.applyRawDump empties bytea; others have no " +
-          "reference dump shape)")
-    case _ =>
-      when(col(name).isNull, lit("NULL"))
-        .otherwise(col(name).cast(StringType))
-  }
-
-  /** All columns rendered to dump cells (kept for callers that want
-    * the per-column form rather than joined lines). */
-  def normalized(df: DataFrame): DataFrame =
-    df.select(df.schema.fields.map(f =>
-      renderCell(f.name, f.dataType).as(f.name)).toSeq: _*)
-
-  def write(df: DataFrame, path: String): Unit =
-    df.select(concat_ws(",", df.schema.fields.map(f =>
-        renderCell(f.name, f.dataType)).toSeq: _*).as("line"))
+  /** Non-scalar columns throw loudly: the reference dumps only scalar
+    * MySQL types (blob/bytea is emptied by ValueRules.applyRawDump
+    * BEFORE rendering), and Spark's toString for array/map/struct/
+    * binary is engine-specific text that would silently corrupt a
+    * dump. */
+  def write(df: DataFrame, path: String): Unit = {
+    val columns = df.queryExecution.analyzed.output
+    columns.foreach { a =>
+      a.dataType match {
+        case _: ArrayType | _: MapType | _: StructType | BinaryType =>
+          throw new UnsupportedOperationException(
+            s"PgCopyWriter: no dump rendering for non-scalar column " +
+              s"'${a.name}' (${a.dataType.simpleString}) — convert upstream " +
+              "(ValueRules.applyRawDump empties bytea; others have no " +
+              "reference dump shape)")
+        case _ =>
+      }
+    }
+    df.select(GraftSqlBridge.column(PgCopyLine.of(columns)).as("line"))
       .write
       .mode("overwrite")
       .text(path)
+  }
 }

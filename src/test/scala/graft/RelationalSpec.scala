@@ -5,12 +5,18 @@ import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = Tables.configure(SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", tempDir("graft-wh").toString)
-    .config("spark.ui.enabled", "false"))
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = Tables.configure(SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.warehouse.dir", tempDir("graft-wh").toString)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    // as in Tables.withSession: Spark's INFO records would bury the
+    // suite's results
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
   val sf: String = "/root/testdata/sf0.001"
 
   /** One per-JVM root for every spec's scratch dirs, deleted when the
