@@ -37,25 +37,6 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }.min
 
-  /** Adjudicated per-key variance annotations, carried INTO the
-    * artifact so a known-wide sampling distribution reads as itself
-    * instead of as a round-over-round regression. Added only after a
-    * measured diagnosis (see SURVEY §8 for the evidence). */
-  private val varianceNotes: Map[String, String] = Map(
-    "sim_hybrid_bm25" -> ("intrinsic ~1.6x sample spread (r13 diagnosis: " +
-      "12 back-to-back runs 1.7-2.9 s with the AQE-final plan " +
-      "bit-identical across samples and gc<60 ms/run; the 11-exchange " +
-      "two-arm pipeline converges slowly under JIT, so 1-warm+3 samples " +
-      "lands anywhere in the tail - not a plan or data regression)"),
-    "q_rolling_corr" -> ("intrinsic JIT-convergence spread (r14 " +
-      "diagnosis: solo 12 back-to-back runs 1.15-1.88 s converging to " +
-      "~1.3 with warm-up 4.8 s and the attr-normalized physical plan " +
-      "bit-identical across independent compilations, 6 exchanges; " +
-      "the historical full-board 2.7-4.4 s band is the same slow " +
-      "convergence sampled at 1-warm+3 inside a long JVM - the plan " +
-      "is frozen and the sort/window shape already shares its one " +
-      "nation exchange, so the spread is compile-state, not data)"))
-
   /** Bench's one stdout line, scraped as bare JSON of at most 8 KB:
     * every key's best seconds (`-1` for a failed key), their total and
     * the calibration seconds. Values carry at most 4 significant
@@ -159,8 +140,11 @@ object Bench {
     // artifact itself instead of masquerading as the round's number —
     // and a truncated log tail can never silently drop keys again
     // (r6's official artifact lost 8 keys to a tail scrape).
+    // A key's varianceNote rides along, so a known-wide sampling
+    // distribution reads as itself instead of as a round-over-round
+    // regression.
     val fullQs = results.map { case (n, samples, b, w) =>
-      val note = varianceNotes.get(n)
+      val note = SparkEntry.keys(n).varianceNote
         .map(v => s""","variance_note":${jstr(v)}""").getOrElse("")
       jstr(n) + ":{\"samples\":[" + samples.mkString(",") +
         s"],\"best\":$b,\"warm_sec\":${w.fold("null")(_.toString)}$note}"

@@ -6,14 +6,15 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q5StarJoin(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Etl.queries ++ TextOps.queries ++
-      DedupOps.queries ++ SimOps.queries ++ MultimodalOps.queries ++
-      AsOfJoin.queries ++ RangeJoin.queries ++ ScaleJoins.queries ++
-      CorpusPipeline.queries ++ graft.streaming.StreamOps.queries ++
-      StatsOps.queries ++ AnalyticsOps.queries ++ SeriesOps.queries ++
-      SketchOps.queries ++ MatchRecognize.queries
+  /** Every operator module's keys by name, one per implemented
+    * operator from SURVEY.md §2. A name declared twice throws. */
+  lazy val keys: Map[String, Key] = Key.byName(Seq(
+    Relational.keys, Etl.keys, TextOps.keys, DedupOps.keys, SimOps.keys,
+    MultimodalOps.keys, AsOfJoin.keys, RangeJoin.keys, ScaleJoins.keys,
+    CorpusPipeline.keys, graft.streaming.StreamOps.keys, StatsOps.keys,
+    AnalyticsOps.keys, SeriesOps.keys, SketchOps.keys,
+    MatchRecognize.keys).flatten)
+  def queries: Map[String, Key.Run] = keys.map { case (n, k) => n -> k.run }
   /** Runs key `fn` on `sfDir` into the noop sink and returns its wall
     * seconds.
     *
@@ -37,13 +38,8 @@ object SparkEntry {
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     (System.nanoTime() - t0) / 1e9
   }
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+  /** For each key declared with an `Oracle`, equivalent ANSI SQL
+    * runnable by DuckDB on the same parquet tables. */
   def oracleSql: Map[String, String] =
-    Relational.oracles ++ Etl.oracles ++ TextOps.oracles ++
-      DedupOps.oracles ++ SimOps.oracles ++ AsOfJoin.oracles ++
-      RangeJoin.oracles ++ ScaleJoins.oracles ++ CorpusPipeline.oracles ++
-      graft.streaming.StreamOps.oracles ++ MultimodalOps.oracles ++
-      StatsOps.oracles ++ AnalyticsOps.oracles ++ SeriesOps.oracles ++
-      SketchOps.oracles ++ MatchRecognize.oracles
+    keys.collect { case (n, Key(_, _, Oracle(sql), _)) => n -> sql }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Key, Oracle, Tables}
 import graft.plans.GlobalRank
 
 /** Second-wave analytic keys: exact re-aggregatable distinct
@@ -3236,111 +3236,59 @@ object AnalyticsOps {
        |FROM b ORDER BY bracket""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tax_brackets" -> (qTaxBrackets _),
-    "q_dataset_drift" -> (qDatasetDrift _),
-    "q_trigram_search" -> (qTrigramSearch _),
-    "q_discount_scenarios" -> (qDiscountScenarios _),
-    "q_double_billing" -> (qDoubleBilling _),
-    "q_degree_dist" -> (qDegreeDist _),
-    "q_adoption" -> (qAdoption _),
-    "q_price_index" -> (qPriceIndex _),
-    "q_winsorize" -> (qWinsorize _),
-    "q_ab_bucketing" -> (qAbBucketing _),
-    "q_promo_lift" -> (qPromoLift _),
-    "q_top_movers" -> (qTopMovers _),
-    "q_fulfillment_lag" -> (qFulfillmentLag _),
-    "q_concentration" -> (qConcentration _),
-    "q_order_intervals" -> (qOrderIntervals _),
-    "q_assoc_rules" -> (qAssocRules _),
-    "q_revenue_bridge" -> (qRevenueBridge _),
-    "q_growth_accounting" -> (qGrowthAccounting _),
-    "q_forecast_backtest" -> (qForecastBacktest _),
-    "q_dau_mau" -> (qDauMau _),
-    "q_cohort_ltv" -> (qCohortLtv _),
-    "q_equidepth_hist" -> (qEquidepthHist _),
-    "q_decile_lift" -> (qDecileLift _),
-    "q_audience_overlap" -> (qAudienceOverlap _),
-    "q_mad" -> (qMad _),
-    "q_streaks" -> (qStreaks _),
-    "q_debounce" -> (qDebounce _),
-    "q_benford" -> (qBenford _),
-    "q_yoy" -> (qYoy _),
-    "q_rfm" -> (qRfm _),
-    "q_transition_matrix" -> (qTransitionMatrix _),
-    "q_basket_pairs" -> (qBasketPairs _),
-    "q_attribution" -> (qAttribution _),
-    "q_hopping_window" -> (qHoppingWindow _),
-    "q_rolling_median" -> (qRollingMedian _),
-    "q_pareto_share" -> (qParetoShare _),
-    "q_bitmap_distinct" -> (qBitmapDistinct _),
-    "q_event_pattern" -> (qEventPattern _),
-    "q_skyline" -> (qSkyline _),
-    "q_concurrency" -> (qConcurrency _),
-    "q_geo_join" -> (qGeoJoin _),
-    "q_cum_distinct" -> (qCumDistinct _),
-    "q_decay_score" -> (qDecayScore _),
-    "q_gini" -> (qGini _),
-    "q_changepoint" -> (qChangepoint _),
-    "q_survival" -> (qSurvival _),
-    "q_stock_ledger" -> (qStockLedger _),
-    "q_top_paths" -> (qTopPaths _),
-    "q_fifo_cogs" -> (qFifoCogs _),
-    "q_twab" -> (qTwab _),
-    "q_weighted_percentile" -> (qWeightedPercentile _),
-    "q_anomaly_bands" -> (qAnomalyBands _))
+  val keys: Seq[Key] = Seq(
+    Key("q_tax_brackets", qTaxBrackets, Oracle(qTaxBracketsSql)),
+    Key("q_dataset_drift", qDatasetDrift, Oracle(qDatasetDriftSql)),
+    Key("q_trigram_search", qTrigramSearch, Oracle(qTrigramSearchSql)),
+    Key("q_discount_scenarios", qDiscountScenarios, Oracle(qDiscountScenariosSql)),
+    Key("q_double_billing", qDoubleBilling, Oracle(qDoubleBillingSql)),
+    Key("q_degree_dist", qDegreeDist, Oracle(qDegreeDistSql)),
+    Key("q_adoption", qAdoption, Oracle(qAdoptionSql)),
+    Key("q_price_index", qPriceIndex, Oracle(qPriceIndexSql)),
+    Key("q_winsorize", qWinsorize, Oracle(qWinsorizeSql)),
+    Key("q_ab_bucketing", qAbBucketing, Oracle(qAbBucketingSql)),
+    Key("q_promo_lift", qPromoLift, Oracle(qPromoLiftSql)),
+    Key("q_top_movers", qTopMovers, Oracle(qTopMoversSql)),
+    Key("q_fulfillment_lag", qFulfillmentLag, Oracle(qFulfillmentLagSql)),
+    Key("q_concentration", qConcentration, Oracle(qConcentrationSql)),
+    Key("q_order_intervals", qOrderIntervals, Oracle(qOrderIntervalsSql)),
+    Key("q_assoc_rules", qAssocRules, Oracle(qAssocRulesSql)),
+    Key("q_revenue_bridge", qRevenueBridge, Oracle(qRevenueBridgeSql)),
+    Key("q_growth_accounting", qGrowthAccounting, Oracle(qGrowthAccountingSql)),
+    Key("q_forecast_backtest", qForecastBacktest, Oracle(qForecastBacktestSql)),
+    Key("q_dau_mau", qDauMau, Oracle(qDauMauSql)),
+    Key("q_cohort_ltv", qCohortLtv, Oracle(qCohortLtvSql)),
+    Key("q_equidepth_hist", qEquidepthHist, Oracle(qEquidepthHistSql)),
+    Key("q_decile_lift", qDecileLift, Oracle(qDecileLiftSql)),
+    Key("q_audience_overlap", qAudienceOverlap, Oracle(qAudienceOverlapSql)),
+    Key("q_mad", qMad, Oracle(qMadSql)),
+    Key("q_streaks", qStreaks, Oracle(qStreaksSql)),
+    Key("q_debounce", qDebounce, Oracle(qDebounceSql)),
+    Key("q_benford", qBenford, Oracle(qBenfordSql)),
+    Key("q_yoy", qYoy, Oracle(qYoySql)),
+    Key("q_rfm", qRfm, Oracle(qRfmSql)),
+    Key("q_transition_matrix", qTransitionMatrix, Oracle(qTransitionMatrixSql)),
+    Key("q_basket_pairs", qBasketPairs, Oracle(qBasketPairsSql)),
+    Key("q_attribution", qAttribution, Oracle(qAttributionSql)),
+    Key("q_hopping_window", qHoppingWindow, Oracle(qHoppingWindowSql)),
+    Key("q_rolling_median", qRollingMedian, Oracle(qRollingMedianSql)),
+    Key("q_pareto_share", qParetoShare, Oracle(qParetoShareSql)),
+    Key("q_bitmap_distinct", qBitmapDistinct, Oracle(qBitmapDistinctSql)),
+    Key("q_event_pattern", qEventPattern, Oracle(qEventPatternSql)),
+    Key("q_skyline", qSkyline, Oracle(qSkylineSql)),
+    Key("q_concurrency", qConcurrency, Oracle(qConcurrencySql)),
+    Key("q_geo_join", qGeoJoin, Oracle(qGeoJoinSql)),
+    Key("q_cum_distinct", qCumDistinct, Oracle(qCumDistinctSql)),
+    Key("q_decay_score", qDecayScore, Oracle(qDecayScoreSql)),
+    Key("q_gini", qGini, Oracle(qGiniSql)),
+    Key("q_changepoint", qChangepoint, Oracle(qChangepointSql)),
+    Key("q_survival", qSurvival, Oracle(qSurvivalSql)),
+    Key("q_stock_ledger", qStockLedger, Oracle(qStockLedgerSql)),
+    Key("q_top_paths", qTopPaths, Oracle(qTopPathsSql)),
+    Key("q_fifo_cogs", qFifoCogs, Oracle(qFifoCogsSql)),
+    Key("q_twab", qTwab, Oracle(qTwabSql)),
+    Key("q_weighted_percentile", qWeightedPercentile, Oracle(qWeightedPercentileSql)),
+    Key("q_anomaly_bands", qAnomalyBands, Oracle(qAnomalyBandsSql)))
 
-  val oracles: Map[String, String] = Map(
-    "q_tax_brackets" -> qTaxBracketsSql,
-    "q_dataset_drift" -> qDatasetDriftSql,
-    "q_trigram_search" -> qTrigramSearchSql,
-    "q_discount_scenarios" -> qDiscountScenariosSql,
-    "q_double_billing" -> qDoubleBillingSql,
-    "q_degree_dist" -> qDegreeDistSql,
-    "q_adoption" -> qAdoptionSql,
-    "q_price_index" -> qPriceIndexSql,
-    "q_rfm" -> qRfmSql,
-    "q_yoy" -> qYoySql,
-    "q_benford" -> qBenfordSql,
-    "q_debounce" -> qDebounceSql,
-    "q_streaks" -> qStreaksSql,
-    "q_mad" -> qMadSql,
-    "q_audience_overlap" -> qAudienceOverlapSql,
-    "q_equidepth_hist" -> qEquidepthHistSql,
-    "q_decile_lift" -> qDecileLiftSql,
-    "q_cohort_ltv" -> qCohortLtvSql,
-    "q_dau_mau" -> qDauMauSql,
-    "q_forecast_backtest" -> qForecastBacktestSql,
-    "q_growth_accounting" -> qGrowthAccountingSql,
-    "q_revenue_bridge" -> qRevenueBridgeSql,
-    "q_assoc_rules" -> qAssocRulesSql,
-    "q_order_intervals" -> qOrderIntervalsSql,
-    "q_concentration" -> qConcentrationSql,
-    "q_fulfillment_lag" -> qFulfillmentLagSql,
-    "q_top_movers" -> qTopMoversSql,
-    "q_promo_lift" -> qPromoLiftSql,
-    "q_ab_bucketing" -> qAbBucketingSql,
-    "q_winsorize" -> qWinsorizeSql,
-    "q_bitmap_distinct" -> qBitmapDistinctSql,
-    "q_event_pattern" -> qEventPatternSql,
-    "q_skyline" -> qSkylineSql,
-    "q_concurrency" -> qConcurrencySql,
-    "q_geo_join" -> qGeoJoinSql,
-    "q_cum_distinct" -> qCumDistinctSql,
-    "q_decay_score" -> qDecayScoreSql,
-    "q_pareto_share" -> qParetoShareSql,
-    "q_rolling_median" -> qRollingMedianSql,
-    "q_hopping_window" -> qHoppingWindowSql,
-    "q_attribution" -> qAttributionSql,
-    "q_transition_matrix" -> qTransitionMatrixSql,
-    "q_basket_pairs" -> qBasketPairsSql,
-    "q_gini" -> qGiniSql,
-    "q_changepoint" -> qChangepointSql,
-    "q_survival" -> qSurvivalSql,
-    "q_stock_ledger" -> qStockLedgerSql,
-    "q_top_paths" -> qTopPathsSql,
-    "q_fifo_cogs" -> qFifoCogsSql,
-    "q_twab" -> qTwabSql,
-    "q_weighted_percentile" -> qWeightedPercentileSql,
-    "q_anomaly_bands" -> qAnomalyBandsSql)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

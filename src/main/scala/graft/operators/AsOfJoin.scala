@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Key, Oracle, Tables}
 
 /** As-of (point-in-time) join: for every left row, the right row with
   * the greatest timestamp ≤ the left timestamp within the same key —
@@ -224,13 +224,10 @@ object AsOfJoin {
       |  CAST(CASE WHEN back THEN db ELSE df END AS BIGINT) AS lag_us
       |FROM j ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_asof_join" -> (qAsofJoin _),
-    "q_asof_bcast" -> (qAsofBcast _),
-    "q_asof_nearest" -> (qAsofNearest _))
+  val keys: Seq[Key] = Seq(
+    Key("q_asof_join", qAsofJoin, Oracle(qAsofJoinSql)),
+    Key("q_asof_bcast", qAsofBcast, Oracle(qAsofJoinSql)),
+    Key("q_asof_nearest", qAsofNearest, Oracle(qAsofNearestSql)))
 
-  val oracles: Map[String, String] = Map(
-    "q_asof_join" -> qAsofJoinSql,
-    "q_asof_bcast" -> qAsofJoinSql,
-    "q_asof_nearest" -> qAsofNearestSql)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Key, Oracle, Tables}
 
 /** The full training-corpus assembly as ONE composed declarative
   * plan — the flagship shape every other key is a piece of:
@@ -1382,51 +1382,32 @@ object CorpusPipeline {
        |    - cast(true_count as double) AS err
        |FROM g""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_dp_count" -> (pipelineDpCount _),
-    "pipeline_anneal_phase" -> (pipelineAnnealPhase _),
-    "pipeline_attention_spans" -> (pipelineAttentionSpans _),
-    "pipeline_chat_format" -> (pipelineChatFormat _),
-    "pipeline_pack_stats" -> (pipelinePackStats _),
-    "pipeline_span_corruption" -> (pipelineSpanCorruption _),
-    "pipeline_annotator_agreement" -> (pipelineAnnotatorAgreement _),
-    "pipeline_temp_sampling" -> (pipelineTempSampling _),
-    "pipeline_filter_cascade" -> (pipelineFilterCascade _),
-    "pipeline_length_buckets" -> (pipelineLengthBuckets _),
-    "pipeline_pref_pairs" -> (pipelinePrefPairs _),
-    "pipeline_curriculum" -> (pipelineCurriculum _),
-    "pipeline_weighted_sample" -> (pipelineWeightedSample _),
-    "pipeline_epoch_shuffle" -> (pipelineEpochShuffle _),
-    "pipeline_dataset_card" -> (pipelineDatasetCard _),
-    "pipeline_train_corpus" -> (pipelineTrainCorpus _),
-    "pipeline_split_safe" -> (pipelineSplitSafe _),
-    "pipeline_stratified_sample" -> (pipelineStratifiedSample _),
-    "pipeline_decontaminate" -> (pipelineDecontaminate _),
-    "pipeline_repetition_budget" -> (pipelineRepetitionBudget _),
-    "pipeline_rag_ingest" -> (pipelineRagIngest _),
-    "pipeline_safety_filter" -> (pipelineSafetyFilter _))
+  val keys: Seq[Key] = Seq(
+    Key("pipeline_dp_count", pipelineDpCount, Oracle(pipelineDpCountSql)),
+    Key("pipeline_anneal_phase", pipelineAnnealPhase, Oracle(pipelineAnnealPhaseSql)),
+    Key("pipeline_attention_spans", pipelineAttentionSpans, Oracle(pipelineAttentionSpansSql)),
+    Key("pipeline_chat_format", pipelineChatFormat, Oracle(pipelineChatFormatSql)),
+    Key("pipeline_pack_stats", pipelinePackStats, Oracle(pipelinePackStatsSql)),
+    Key("pipeline_span_corruption", pipelineSpanCorruption, Oracle(pipelineSpanCorruptionSql)),
+    Key("pipeline_annotator_agreement", pipelineAnnotatorAgreement,
+      Oracle(pipelineAnnotatorAgreementSql)),
+    Key("pipeline_temp_sampling", pipelineTempSampling, Oracle(pipelineTempSamplingSql)),
+    Key("pipeline_filter_cascade", pipelineFilterCascade, Oracle(pipelineFilterCascadeSql)),
+    Key("pipeline_length_buckets", pipelineLengthBuckets, Oracle(pipelineLengthBucketsSql)),
+    Key("pipeline_pref_pairs", pipelinePrefPairs, Oracle(pipelinePrefPairsSql)),
+    Key("pipeline_curriculum", pipelineCurriculum, Oracle(pipelineCurriculumSql)),
+    Key("pipeline_weighted_sample", pipelineWeightedSample, Oracle(pipelineWeightedSampleSql)),
+    Key("pipeline_epoch_shuffle", pipelineEpochShuffle, Oracle(pipelineEpochShuffleSql)),
+    Key("pipeline_dataset_card", pipelineDatasetCard, Oracle(pipelineDatasetCardSql)),
+    Key("pipeline_train_corpus", pipelineTrainCorpus, Oracle(pipelineTrainCorpusSql)),
+    Key("pipeline_split_safe", pipelineSplitSafe, Oracle(pipelineSplitSafeSql)),
+    Key("pipeline_stratified_sample", pipelineStratifiedSample,
+      Oracle(pipelineStratifiedSampleSql)),
+    Key("pipeline_decontaminate", pipelineDecontaminate, Oracle(pipelineDecontaminateSql)),
+    Key("pipeline_repetition_budget", pipelineRepetitionBudget,
+      Oracle(pipelineRepetitionBudgetSql)),
+    Key("pipeline_rag_ingest", pipelineRagIngest, Oracle(pipelineRagIngestSql)),
+    Key("pipeline_safety_filter", pipelineSafetyFilter, Oracle(pipelineSafetyFilterSql)))
 
-  val oracles: Map[String, String] = Map(
-    "pipeline_dp_count" -> pipelineDpCountSql,
-    "pipeline_anneal_phase" -> pipelineAnnealPhaseSql,
-    "pipeline_attention_spans" -> pipelineAttentionSpansSql,
-    "pipeline_chat_format" -> pipelineChatFormatSql,
-    "pipeline_pack_stats" -> pipelinePackStatsSql,
-    "pipeline_span_corruption" -> pipelineSpanCorruptionSql,
-    "pipeline_annotator_agreement" -> pipelineAnnotatorAgreementSql,
-    "pipeline_pref_pairs" -> pipelinePrefPairsSql,
-    "pipeline_length_buckets" -> pipelineLengthBucketsSql,
-    "pipeline_filter_cascade" -> pipelineFilterCascadeSql,
-    "pipeline_temp_sampling" -> pipelineTempSamplingSql,
-    "pipeline_curriculum" -> pipelineCurriculumSql,
-    "pipeline_weighted_sample" -> pipelineWeightedSampleSql,
-    "pipeline_epoch_shuffle" -> pipelineEpochShuffleSql,
-    "pipeline_dataset_card" -> pipelineDatasetCardSql,
-    "pipeline_train_corpus" -> pipelineTrainCorpusSql,
-    "pipeline_split_safe" -> pipelineSplitSafeSql,
-    "pipeline_stratified_sample" -> pipelineStratifiedSampleSql,
-    "pipeline_decontaminate" -> pipelineDecontaminateSql,
-    "pipeline_repetition_budget" -> pipelineRepetitionBudgetSql,
-    "pipeline_rag_ingest" -> pipelineRagIngestSql,
-    "pipeline_safety_filter" -> pipelineSafetyFilterSql)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

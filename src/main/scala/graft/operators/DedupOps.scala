@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Key, Oracle, Tables}
 import graft.functions.VectorFunctions._
 
 /** Deduplication operators for LLM training-data pipelines: exact
@@ -1166,31 +1166,19 @@ object DedupOps {
        |SELECT g.url_canonical, g.n_docs, g.n_variants, k.keep_id, k.keep_chars
        |FROM g JOIN k USING (url_canonical)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_url" -> (dedupUrl _),
-    "dedup_keep_best" -> (dedupKeepBest _),
-    "dedup_soft_cap" -> (dedupSoftCap _),
-    "dedup_cluster_stats" -> (dedupClusterStats _),
-    "dedup_exact" -> (dedupExact _),
-    "dedup_clusters" -> (dedupClusters _),
-    "dedup_incremental" -> (dedupIncremental _),
-    "dedup_ngram_jaccard" -> (dedupNgramJaccard _),
-    "dedup_minhash" -> (dedupMinhash _),
-    "dedup_lsh_eval" -> (dedupLshEval _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_embed_cosine" -> (dedupEmbedCosine _))
+  val keys: Seq[Key] = Seq(
+    Key("dedup_url", dedupUrl, Oracle(dedupUrlSql)),
+    Key("dedup_keep_best", dedupKeepBest, Oracle(dedupKeepBestSql)),
+    Key("dedup_soft_cap", dedupSoftCap, Oracle(dedupSoftCapSql)),
+    Key("dedup_cluster_stats", dedupClusterStats, Oracle(dedupClusterStatsSql)),
+    Key("dedup_exact", dedupExact, Oracle(dedupExactSql)),
+    Key("dedup_clusters", dedupClusters, Oracle(dedupClustersSql)),
+    Key("dedup_incremental", dedupIncremental, Oracle(dedupIncrementalSql)),
+    Key("dedup_ngram_jaccard", dedupNgramJaccard, Oracle(dedupNgramJaccardSql)),
+    Key("dedup_minhash", dedupMinhash, Oracle(dedupMinhashSql)),
+    Key("dedup_lsh_eval", dedupLshEval, Oracle(dedupLshEvalSql)),
+    Key("dedup_simhash", dedupSimhash, Oracle(dedupSimhashSql)),
+    Key("dedup_embed_cosine", dedupEmbedCosine, Oracle(dedupEmbedCosineSql)))
 
-  val oracles: Map[String, String] = Map(
-    "dedup_url" -> dedupUrlSql,
-    "dedup_cluster_stats" -> dedupClusterStatsSql,
-    "dedup_soft_cap" -> dedupSoftCapSql,
-    "dedup_keep_best" -> dedupKeepBestSql,
-    "dedup_exact" -> dedupExactSql,
-    "dedup_clusters" -> dedupClustersSql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "dedup_ngram_jaccard" -> dedupNgramJaccardSql,
-    "dedup_minhash" -> dedupMinhashSql,
-    "dedup_lsh_eval" -> dedupLshEvalSql,
-    "dedup_simhash" -> dedupSimhashSql,
-    "dedup_embed_cosine" -> dedupEmbedCosineSql)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

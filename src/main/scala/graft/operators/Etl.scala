@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Key, Oracle, Tables}
 import graft.rules._
 import graft.schema._
 
@@ -2859,111 +2859,59 @@ object Etl {
       |  COUNT(*) AS n_docs
       |FROM m GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "etl_reshard_plan" -> (etlReshardPlan _),
-    "etl_currency_normalize" -> (etlCurrencyNormalize _),
-    "etl_pk_discovery" -> (etlPkDiscovery _),
-    "etl_backfill_plan" -> (etlBackfillPlan _),
-    "etl_freshness" -> (etlFreshness _),
-    "etl_partition_skew" -> (etlPartitionSkew _),
-    "etl_csv_sniff" -> (etlCsvSniff _),
-    "etl_type_infer" -> (etlTypeInfer _),
-    "etl_reconcile" -> (etlReconcile _),
-    "etl_gdpr_erase" -> (etlGdprErase _),
-    "etl_late_dim" -> (etlLateArrivingDim _),
-    "etl_wap" -> (etlWap _),
-    "etl_scd2_lookup" -> (etlScd2Lookup _),
-    "etl_survivorship" -> (etlSurvivorship _),
-    "etl_id_gaps" -> (etlIdGaps _),
-    "etl_fk_inference" -> (etlFkInference _),
-    "etl_table_checksum" -> (etlTableChecksum _),
-    "etl_anonymize" -> (etlAnonymize _),
-    "etl_scd2" -> (etlScd2 _),
-    "etl_rename_project" -> (etlRenameProject _),
-    "etl_where_extract" -> (etlWhereExtract _),
-    "etl_join_extract" -> (etlJoinExtract _),
-    "etl_utc_shift" -> (etlUtcShift _),
-    "etl_fk_orphans" -> (etlFkOrphans _),
-    "etl_pre_sql" -> (etlPreSql _),
-    "etl_ref_nullable" -> (etlRefNullable _),
-    "etl_bool_convert" -> (etlBoolConvert _),
-    "etl_zero_date" -> (etlZeroDate _),
-    "etl_type_cast" -> (etlTypeCast _),
-    "etl_seq_setval" -> (etlSeqSetval _),
-    "etl_pg_escape" -> (etlPgEscape _),
-    "etl_jdbc_roundtrip" -> (etlJdbcRoundtrip _),
-    "etl_orc_roundtrip" -> (etlOrcRoundtrip _),
-    "etl_pg_users" -> (etlPgUsers _),
-    "pipeline_jsonl_roundtrip" -> (pipelineJsonlRoundtrip _),
-    "etl_pipeline_dump" -> (etlPipelineDump _),
-    "etl_cdc_upsert" -> (etlCdcUpsert _),
-    "etl_cdc_deletes" -> (etlCdcDeletes _),
-    "etl_merge_all" -> (etlMergeAll _),
-    "etl_bitemporal" -> (etlBitemporal _),
-    "etl_time_travel" -> (etlTimeTravel _),
-    "etl_vacuum" -> (etlVacuum _),
-    "etl_bad_records" -> (etlBadRecords _),
-    "etl_partition_evolution" -> (etlPartitionEvolution _),
-    "etl_dq_report" -> (etlDqReport _),
-    "etl_incremental_agg" -> (etlIncrementalAgg _),
-    "etl_shard_export" -> (etlShardExport _),
-    "etl_profile" -> (etlProfile _),
-    "etl_schema_evolution" -> (etlSchemaEvolution _),
-    "etl_compact" -> (etlCompact _),
-    "etl_manifest_prune" -> (etlManifestPrune _),
-    "etl_snapshot_diff" -> (etlSnapshotDiff _))
+  val keys: Seq[Key] = Seq(
+    Key("etl_reshard_plan", etlReshardPlan, Oracle(etlReshardPlanSql)),
+    Key("etl_currency_normalize", etlCurrencyNormalize, Oracle(etlCurrencyNormalizeSql)),
+    Key("etl_pk_discovery", etlPkDiscovery, Oracle(etlPkDiscoverySql)),
+    Key("etl_backfill_plan", etlBackfillPlan, Oracle(etlBackfillPlanSql)),
+    Key("etl_freshness", etlFreshness, Oracle(etlFreshnessSql)),
+    Key("etl_partition_skew", etlPartitionSkew, Oracle(etlPartitionSkewSql)),
+    Key("etl_csv_sniff", etlCsvSniff, Oracle(etlCsvSniffSql)),
+    Key("etl_type_infer", etlTypeInfer, Oracle(etlTypeInferSql)),
+    Key("etl_reconcile", etlReconcile, Oracle(etlReconcileSql)),
+    Key("etl_gdpr_erase", etlGdprErase, Oracle(etlGdprEraseSql)),
+    Key("etl_late_dim", etlLateArrivingDim, Oracle(etlLateArrivingDimSql)),
+    Key("etl_wap", etlWap, Oracle(etlWapSql)),
+    Key("etl_scd2_lookup", etlScd2Lookup, Oracle(etlScd2LookupSql)),
+    Key("etl_survivorship", etlSurvivorship, Oracle(etlSurvivorshipSql)),
+    Key("etl_id_gaps", etlIdGaps, Oracle(etlIdGapsSql)),
+    Key("etl_fk_inference", etlFkInference, Oracle(etlFkInferenceSql)),
+    Key("etl_table_checksum", etlTableChecksum, Oracle(etlTableChecksumSql)),
+    Key("etl_anonymize", etlAnonymize, Oracle(etlAnonymizeSql)),
+    Key("etl_scd2", etlScd2, Oracle(etlScd2Sql)),
+    Key("etl_rename_project", etlRenameProject, Oracle(etlRenameProjectSql)),
+    Key("etl_where_extract", etlWhereExtract, Oracle(etlWhereExtractSql)),
+    Key("etl_join_extract", etlJoinExtract, Oracle(etlJoinExtractSql)),
+    Key("etl_utc_shift", etlUtcShift, Oracle(etlUtcShiftSql)),
+    Key("etl_fk_orphans", etlFkOrphans, Oracle(etlFkOrphansSql)),
+    Key("etl_pre_sql", etlPreSql, Oracle(etlPreSqlSql)),
+    Key("etl_ref_nullable", etlRefNullable, Oracle(etlRefNullableSql)),
+    Key("etl_bool_convert", etlBoolConvert, Oracle(etlBoolConvertSql)),
+    Key("etl_zero_date", etlZeroDate, Oracle(etlZeroDateSql)),
+    Key("etl_type_cast", etlTypeCast, Oracle(etlTypeCastSql)),
+    Key("etl_seq_setval", etlSeqSetval, Oracle(etlSeqSetvalSql)),
+    Key("etl_pg_escape", etlPgEscape, Oracle(etlPgEscapeSql)),
+    Key("etl_jdbc_roundtrip", etlJdbcRoundtrip, Oracle(etlJdbcRoundtripSql)),
+    Key("etl_orc_roundtrip", etlOrcRoundtrip, Oracle(etlOrcRoundtripSql)),
+    Key("etl_pg_users", etlPgUsers, Oracle(etlPgUsersSql)),
+    Key("pipeline_jsonl_roundtrip", pipelineJsonlRoundtrip, Oracle(pipelineJsonlRoundtripSql)),
+    Key("etl_pipeline_dump", etlPipelineDump, Oracle(etlPipelineDumpSql)),
+    Key("etl_cdc_upsert", etlCdcUpsert, Oracle(etlCdcUpsertSql)),
+    Key("etl_cdc_deletes", etlCdcDeletes, Oracle(etlCdcDeletesSql)),
+    Key("etl_merge_all", etlMergeAll, Oracle(etlMergeAllSql)),
+    Key("etl_bitemporal", etlBitemporal, Oracle(etlBitemporalSql)),
+    Key("etl_time_travel", etlTimeTravel, Oracle(etlTimeTravelSql)),
+    Key("etl_vacuum", etlVacuum, Oracle(etlVacuumSql)),
+    Key("etl_bad_records", etlBadRecords, Oracle(etlBadRecordsSql)),
+    Key("etl_partition_evolution", etlPartitionEvolution, Oracle(etlPartitionEvolutionSql)),
+    Key("etl_dq_report", etlDqReport, Oracle(etlDqReportSql)),
+    Key("etl_incremental_agg", etlIncrementalAgg, Oracle(etlIncrementalAggSql)),
+    Key("etl_shard_export", etlShardExport, Oracle(etlShardExportSql)),
+    Key("etl_profile", etlProfile, Oracle(etlProfileSql)),
+    Key("etl_schema_evolution", etlSchemaEvolution, Oracle(etlSchemaEvolutionSql)),
+    Key("etl_compact", etlCompact, Oracle(etlCompactSql)),
+    Key("etl_manifest_prune", etlManifestPrune, Oracle(etlManifestPruneSql)),
+    Key("etl_snapshot_diff", etlSnapshotDiff, Oracle(etlSnapshotDiffSql)))
 
-  val oracles: Map[String, String] = Map(
-    "etl_reshard_plan" -> etlReshardPlanSql,
-    "etl_currency_normalize" -> etlCurrencyNormalizeSql,
-    "etl_late_dim" -> etlLateArrivingDimSql,
-    "etl_gdpr_erase" -> etlGdprEraseSql,
-    "etl_reconcile" -> etlReconcileSql,
-    "etl_type_infer" -> etlTypeInferSql,
-    "etl_csv_sniff" -> etlCsvSniffSql,
-    "etl_pk_discovery" -> etlPkDiscoverySql,
-    "etl_backfill_plan" -> etlBackfillPlanSql,
-    "etl_freshness" -> etlFreshnessSql,
-    "etl_partition_skew" -> etlPartitionSkewSql,
-    "etl_wap" -> etlWapSql,
-    "etl_scd2_lookup" -> etlScd2LookupSql,
-    "etl_survivorship" -> etlSurvivorshipSql,
-    "etl_id_gaps" -> etlIdGapsSql,
-    "etl_fk_inference" -> etlFkInferenceSql,
-    "etl_table_checksum" -> etlTableChecksumSql,
-    "etl_anonymize" -> etlAnonymizeSql,
-    "etl_scd2" -> etlScd2Sql,
-    "etl_rename_project" -> etlRenameProjectSql,
-    "etl_where_extract" -> etlWhereExtractSql,
-    "etl_join_extract" -> etlJoinExtractSql,
-    "etl_utc_shift" -> etlUtcShiftSql,
-    "etl_fk_orphans" -> etlFkOrphansSql,
-    "etl_pre_sql" -> etlPreSqlSql,
-    "etl_ref_nullable" -> etlRefNullableSql,
-    "etl_bool_convert" -> etlBoolConvertSql,
-    "etl_zero_date" -> etlZeroDateSql,
-    "etl_type_cast" -> etlTypeCastSql,
-    "etl_seq_setval" -> etlSeqSetvalSql,
-    "etl_pg_escape" -> etlPgEscapeSql,
-    "etl_jdbc_roundtrip" -> etlJdbcRoundtripSql,
-    "etl_orc_roundtrip" -> etlOrcRoundtripSql,
-    "etl_pg_users" -> etlPgUsersSql,
-    "pipeline_jsonl_roundtrip" -> pipelineJsonlRoundtripSql,
-    "etl_pipeline_dump" -> etlPipelineDumpSql,
-    "etl_cdc_upsert" -> etlCdcUpsertSql,
-    "etl_cdc_deletes" -> etlCdcDeletesSql,
-    "etl_merge_all" -> etlMergeAllSql,
-    "etl_bitemporal" -> etlBitemporalSql,
-    "etl_time_travel" -> etlTimeTravelSql,
-    "etl_vacuum" -> etlVacuumSql,
-    "etl_bad_records" -> etlBadRecordsSql,
-    "etl_partition_evolution" -> etlPartitionEvolutionSql,
-    "etl_dq_report" -> etlDqReportSql,
-    "etl_incremental_agg" -> etlIncrementalAggSql,
-    "etl_shard_export" -> etlShardExportSql,
-    "etl_profile" -> etlProfileSql,
-    "etl_schema_evolution" -> etlSchemaEvolutionSql,
-    "etl_compact" -> etlCompactSql,
-    "etl_manifest_prune" -> etlManifestPruneSql,
-    "etl_snapshot_diff" -> etlSnapshotDiffSql)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

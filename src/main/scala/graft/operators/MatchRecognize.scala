@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Key, Oracle, Tables}
 
 /** Row-pattern matching — the SQL:2016 MATCH_RECOGNIZE capability
   * Spark has no native operator for (and DuckDB doesn't either, so
@@ -817,19 +817,13 @@ object MatchRecognize {
        |QUALIFY ROW_NUMBER() OVER (PARTITION BY grp, seg ORDER BY alt) = 1
        |ORDER BY grp, start_day""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_match_recognize" -> (qMatchRecognize _),
-    "q_match_w" -> (qMatchW _),
-    "q_match_hs" -> (qMatchHs _),
-    "q_match_define" -> (qMatchDefine _),
-    "q_match_quant" -> (qMatchQuant _),
-    "q_match_alt" -> (qMatchAlt _))
+  val keys: Seq[Key] = Seq(
+    Key("q_match_recognize", qMatchRecognize, Oracle(qMatchRecognizeSql)),
+    Key("q_match_w", qMatchW, Oracle(qMatchWSql)),
+    Key("q_match_hs", qMatchHs, Oracle(qMatchHsSql)),
+    Key("q_match_define", qMatchDefine, Oracle(qMatchDefineSql)),
+    Key("q_match_quant", qMatchQuant, Oracle(qMatchQuantSql)),
+    Key("q_match_alt", qMatchAlt, Oracle(qMatchAltSql)))
 
-  val oracles: Map[String, String] = Map(
-    "q_match_recognize" -> qMatchRecognizeSql,
-    "q_match_w" -> qMatchWSql,
-    "q_match_hs" -> qMatchHsSql,
-    "q_match_define" -> qMatchDefineSql,
-    "q_match_quant" -> qMatchQuantSql,
-    "q_match_alt" -> qMatchAltSql)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

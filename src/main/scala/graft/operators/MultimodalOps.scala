@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
-import graft.Tables
+import graft.{Key, Oracle, Tables}
 
 /** Multimodal column plumbing: media payloads as opaque `binary`
   * columns with typed metadata, batch-decoded per partition.
@@ -1111,29 +1111,19 @@ object MultimodalOps {
       |  n_frames
       |FROM f WHERE frame_idx % s = 0""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_scene_cuts" -> (mmSceneCuts _),
-    "mm_channel_stats" -> (mmChannelStats _),
-    "mm_aspect_buckets" -> (mmAspectBuckets _),
-    "mm_pack_shards" -> (mmPackShards _),
-    "mm_dedup" -> (mmDedup _),
-    "mm_binary_meta" -> (mmBinaryMeta _),
-    "mm_decode" -> (mmDecode _),
-    "mm_audio_frames" -> (mmAudioFrames _),
-    "mm_patches" -> (mmPatches _),
-    "mm_embed_fusion" -> (mmEmbedFusion _))
-
-  val oracles: Map[String, String] = Map(
-    "mm_scene_cuts" -> mmSceneCutsSql,
-    "mm_channel_stats" -> mmChannelStatsSql,
-    "mm_aspect_buckets" -> mmAspectBucketsSql,
-    "mm_pack_shards" -> mmPackShardsSql,
-    "mm_dedup" -> mmDedupSql,
-    "mm_decode" -> mmDecodeSql,
-    "mm_audio_frames" -> mmAudioFramesSql,
-    "mm_patches" -> mmPatchesSql,
-    "mm_embed_fusion" -> mmEmbedFusionSql,
+  val keys: Seq[Key] = Seq(
+    Key("mm_scene_cuts", mmSceneCuts, Oracle(mmSceneCutsSql)),
+    Key("mm_channel_stats", mmChannelStats, Oracle(mmChannelStatsSql)),
+    Key("mm_aspect_buckets", mmAspectBuckets, Oracle(mmAspectBucketsSql)),
+    Key("mm_pack_shards", mmPackShards, Oracle(mmPackShardsSql)),
+    Key("mm_dedup", mmDedup, Oracle(mmDedupSql)),
     // [T]→[O] r12: the meta audit replays from the published payload
     // artifact (octet_length/hex measured on the BLOBs by DuckDB)
-    "mm_binary_meta" -> mmBinaryMetaSql)
+    Key("mm_binary_meta", mmBinaryMeta, Oracle(mmBinaryMetaSql)),
+    Key("mm_decode", mmDecode, Oracle(mmDecodeSql)),
+    Key("mm_audio_frames", mmAudioFrames, Oracle(mmAudioFramesSql)),
+    Key("mm_patches", mmPatches, Oracle(mmPatchesSql)),
+    Key("mm_embed_fusion", mmEmbedFusion, Oracle(mmEmbedFusionSql)))
+
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Key, Oracle, Tables}
 
 /** Range (interval) join: points joined to the ranges containing
   * them. A naive inequality join plans as BroadcastNestedLoopJoin —
@@ -77,9 +77,8 @@ object RangeJoin {
       |GROUP BY event_id
       |ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_range_join" -> (qRangeJoin _))
+  val keys: Seq[Key] = Seq(
+    Key("q_range_join", qRangeJoin, Oracle(qRangeJoinSql)))
 
-  val oracles: Map[String, String] = Map(
-    "q_range_join" -> qRangeJoinSql)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

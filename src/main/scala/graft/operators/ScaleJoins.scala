@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Key, Oracle, Tables}
 import graft.sources.Bucketing
 
 /** Driver-checked query keys for the two scale-layout strategies —
@@ -899,42 +899,26 @@ object ScaleJoins {
       |FROM b, g2
       |ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_mv_auto" -> (qMvAuto _),
-    "q_mv_advisor" -> (qMvAdvisor _),
-    "q_mv_star_refresh" -> (qMvStarRefresh _),
-    "q_mv_having" -> (qMvHaving _),
-    "q_mv_choice" -> (qMvChoice _),
-    "q_mv_retract" -> (qMvRetract _),
-    "q_mv_star" -> (qMvStar _),
-    "q_mv_rewrite" -> (qMvRewrite _),
-    "q_mv_rollup" -> (qMvRollup _),
-    "q_mv_filter" -> (qMvFilter _),
-    "q_mv_refresh" -> (qMvRefresh _),
-    "q_skew_join" -> (qSkewJoin _),
-    "q_bucket_join" -> (qBucketJoin _),
-    "q_partition_prune" -> (qPartitionPrune _),
-    "q_zorder_prune" -> (qZorderPrune _),
-    "q_bloom_join" -> (qBloomJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "q_mv_auto" -> qMvAutoSql,
-    "q_mv_advisor" -> qMvAdvisorSql,
-    "q_mv_star_refresh" -> qMvStarRefreshSql,
-    "q_mv_having" -> qMvHavingSql,
+  val keys: Seq[Key] = Seq(
+    Key("q_mv_auto", qMvAuto, Oracle(qMvAutoSql)),
+    Key("q_mv_advisor", qMvAdvisor, Oracle(qMvAdvisorSql)),
+    Key("q_mv_star_refresh", qMvStarRefresh, Oracle(qMvStarRefreshSql)),
+    Key("q_mv_having", qMvHaving, Oracle(qMvHavingSql)),
     // whichever registered summary the cost choice answers from, the
     // result must equal the raw year-grain aggregate — q_mv_rollup's
     // oracle covers it by design
-    "q_mv_choice" -> qMvRollupSql,
-    "q_mv_retract" -> qMvRetractSql,
-    "q_mv_star" -> qMvStarSql,
-    "q_mv_rewrite" -> qMvRewriteSql,
-    "q_mv_rollup" -> qMvRollupSql,
-    "q_mv_filter" -> qMvFilterSql,
-    "q_mv_refresh" -> qMvRefreshSql,
-    "q_skew_join" -> qSkewJoinSql,
-    "q_bucket_join" -> qBucketJoinSql,
-    "q_partition_prune" -> qPartitionPruneSql,
-    "q_zorder_prune" -> qZorderPruneSql,
-    "q_bloom_join" -> qBloomJoinSql)
+    Key("q_mv_choice", qMvChoice, Oracle(qMvRollupSql)),
+    Key("q_mv_retract", qMvRetract, Oracle(qMvRetractSql)),
+    Key("q_mv_star", qMvStar, Oracle(qMvStarSql)),
+    Key("q_mv_rewrite", qMvRewrite, Oracle(qMvRewriteSql)),
+    Key("q_mv_rollup", qMvRollup, Oracle(qMvRollupSql)),
+    Key("q_mv_filter", qMvFilter, Oracle(qMvFilterSql)),
+    Key("q_mv_refresh", qMvRefresh, Oracle(qMvRefreshSql)),
+    Key("q_skew_join", qSkewJoin, Oracle(qSkewJoinSql)),
+    Key("q_bucket_join", qBucketJoin, Oracle(qBucketJoinSql)),
+    Key("q_partition_prune", qPartitionPrune, Oracle(qPartitionPruneSql)),
+    Key("q_zorder_prune", qZorderPrune, Oracle(qZorderPruneSql)),
+    Key("q_bloom_join", qBloomJoin, Oracle(qBloomJoinSql)))
+
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

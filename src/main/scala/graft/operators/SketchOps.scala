@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Key, Oracle, Tables}
 
 /** Oracle-checkable distinct sketches: KMV (k-minimum-values) bottom-k
   * summaries over a PORTABLE integer hash.
@@ -485,15 +485,11 @@ object SketchOps {
        |FROM ex JOIN samp USING (grp)""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_kmv_distinct" -> (qKmvDistinct _),
-    "q_kmv_jaccard" -> (qKmvJaccard _),
-    "q_kmv_quantile" -> (qKmvQuantile _),
-    "q_join_cardest" -> (qJoinCardest _))
+  val keys: Seq[Key] = Seq(
+    Key("q_kmv_distinct", qKmvDistinct, Oracle(qKmvDistinctSql)),
+    Key("q_kmv_jaccard", qKmvJaccard, Oracle(qKmvJaccardSql)),
+    Key("q_kmv_quantile", qKmvQuantile, Oracle(qKmvQuantileSql)),
+    Key("q_join_cardest", qJoinCardest, Oracle(qJoinCardestSql)))
 
-  val oracles: Map[String, String] = Map(
-    "q_kmv_distinct" -> qKmvDistinctSql,
-    "q_kmv_jaccard" -> qKmvJaccardSql,
-    "q_kmv_quantile" -> qKmvQuantileSql,
-    "q_join_cardest" -> qJoinCardestSql)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Key, Oracle, Tables}
 
 /** Statistical / similarity-analysis query keys.
   *
@@ -1636,47 +1636,27 @@ object StatsOps {
        |LEFT JOIN brd ON brd.pid = p.pid""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dbscan_grid" -> (qDbscanGrid _),
-    "q_welch_ttest" -> (qWelchTtest _),
-    "q_cramers_v" -> (qCramersV _),
-    "q_proportion_test" -> (qProportionTest _),
-    "q_bfs_reach" -> (qBfsReach _),
-    "q_shortest_path" -> (qShortestPath _),
-    "q_link_predict" -> (qLinkPredict _),
-    "q_multireg" -> (qMultireg _),
-    "q_spearman" -> (qSpearman _),
-    "q_kendall_tau" -> (qKendallTau _),
-    "q_ks_test" -> (qKsTest _),
-    "q_mannwhitney" -> (qMannWhitney _),
-    "q_diversity" -> (qDiversity _),
-    "q_cov_matrix" -> (qCovMatrix _),
-    "q_return_rates" -> (qReturnRates _),
-    "q_moments" -> (qMoments _),
-    "q_stats_funcs" -> (qStatsFuncs _),
-    "q_fuzzy_join" -> (qFuzzyJoin _),
-    "q_triangle_count" -> (qTriangleCount _),
-    "q_chi2" -> (qChi2 _))
+  val keys: Seq[Key] = Seq(
+    Key("q_dbscan_grid", qDbscanGrid, Oracle(qDbscanGridSql)),
+    Key("q_welch_ttest", qWelchTtest, Oracle(qWelchTtestSql)),
+    Key("q_cramers_v", qCramersV, Oracle(qCramersVSql)),
+    Key("q_proportion_test", qProportionTest, Oracle(qProportionTestSql)),
+    Key("q_bfs_reach", qBfsReach, Oracle(qBfsReachSql)),
+    Key("q_shortest_path", qShortestPath, Oracle(qShortestPathSql)),
+    Key("q_link_predict", qLinkPredict, Oracle(qLinkPredictSql)),
+    Key("q_multireg", qMultireg, Oracle(qMultiregSql)),
+    Key("q_spearman", qSpearman, Oracle(qSpearmanSql)),
+    Key("q_kendall_tau", qKendallTau, Oracle(qKendallTauSql)),
+    Key("q_ks_test", qKsTest, Oracle(qKsTestSql)),
+    Key("q_mannwhitney", qMannWhitney, Oracle(qMannWhitneySql)),
+    Key("q_diversity", qDiversity, Oracle(qDiversitySql)),
+    Key("q_cov_matrix", qCovMatrix, Oracle(qCovMatrixSql)),
+    Key("q_return_rates", qReturnRates, Oracle(qReturnRatesSql)),
+    Key("q_moments", qMoments, Oracle(qMomentsSql)),
+    Key("q_stats_funcs", qStatsFuncs, Oracle(qStatsFuncsSql)),
+    Key("q_fuzzy_join", qFuzzyJoin, Oracle(qFuzzyJoinSql)),
+    Key("q_triangle_count", qTriangleCount, Oracle(qTriangleCountSql)),
+    Key("q_chi2", qChi2, Oracle(qChi2Sql)))
 
-  val oracles: Map[String, String] = Map(
-    "q_dbscan_grid" -> qDbscanGridSql,
-    "q_welch_ttest" -> qWelchTtestSql,
-    "q_cramers_v" -> qCramersVSql,
-    "q_proportion_test" -> qProportionTestSql,
-    "q_bfs_reach" -> qBfsReachSql,
-    "q_shortest_path" -> qShortestPathSql,
-    "q_link_predict" -> qLinkPredictSql,
-    "q_multireg" -> qMultiregSql,
-    "q_spearman" -> qSpearmanSql,
-    "q_kendall_tau" -> qKendallTauSql,
-    "q_ks_test" -> qKsTestSql,
-    "q_mannwhitney" -> qMannWhitneySql,
-    "q_diversity" -> qDiversitySql,
-    "q_cov_matrix" -> qCovMatrixSql,
-    "q_return_rates" -> qReturnRatesSql,
-    "q_moments" -> qMomentsSql,
-    "q_stats_funcs" -> qStatsFuncsSql,
-    "q_fuzzy_join" -> qFuzzyJoinSql,
-    "q_triangle_count" -> qTriangleCountSql,
-    "q_chi2" -> qChi2Sql)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Key, Oracle, Tables}
 
 /** Text-analysis operators for LLM training-data pipelines: token
   * stats, quality scoring, language ID, rolling-hash fingerprints.
@@ -1875,69 +1875,38 @@ object TextOps {
       |WHERE rank <= $bm25TopK
       |ORDER BY q_id, rank""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_bm25" -> (textBm25 _),
-    "text_source_overlap" -> (textSourceOverlap _),
-    "text_zipf" -> (textZipf _),
-    "text_ttr" -> (textTtr _),
-    "text_concordance" -> (textConcordance _),
-    "text_html_strip" -> (textHtmlStrip _),
-    "text_url_canon" -> (textUrlCanon _),
-    "text_ngram_novelty" -> (textNgramNovelty _),
-    "text_readability" -> (textReadability _),
-    "text_bpe_pairs" -> (textBpePairs _),
-    "text_bpe_train" -> (textBpeTrain _),
-    "text_bpe_apply" -> (textBpeApply _),
-    "text_dup_spans" -> (textDupSpans _),
-    "text_collocations" -> (textCollocations _),
-    "text_ngram_lm" -> (textNgramLm _),
-    "text_vocab_oov" -> (textVocabOov _),
-    "text_paragraph_dedup" -> (textParagraphDedup _),
-    "text_boilerplate" -> (textBoilerplate _),
-    "text_tfidf" -> (textTfidf _),
-    "text_domain_mix" -> (textDomainMix _),
-    "text_train_split" -> (textTrainSplit _),
-    "text_pack_sequences" -> (textPackSequences _),
-    "text_chunk" -> (textChunk _),
-    "text_tokens" -> (textTokens _),
-    "text_quality" -> (textQuality _),
-    "text_langid" -> (textLangid _),
-    "text_lang_confusion" -> (textLangConfusion _),
-    "text_fingerprint" -> (textFingerprint _),
-    "text_normalize" -> (textNormalize _),
-    "text_pii_scrub" -> (textPiiScrub _),
-    "text_repetition" -> (textRepetition _))
+  val keys: Seq[Key] = Seq(
+    Key("text_bm25", textBm25, Oracle(textBm25Sql)),
+    Key("text_source_overlap", textSourceOverlap, Oracle(textSourceOverlapSql)),
+    Key("text_zipf", textZipf, Oracle(textZipfSql)),
+    Key("text_ttr", textTtr, Oracle(textTtrSql)),
+    Key("text_concordance", textConcordance, Oracle(textConcordanceSql)),
+    Key("text_html_strip", textHtmlStrip, Oracle(textHtmlStripSql)),
+    Key("text_url_canon", textUrlCanon, Oracle(textUrlCanonSql)),
+    Key("text_ngram_novelty", textNgramNovelty, Oracle(textNgramNoveltySql)),
+    Key("text_readability", textReadability, Oracle(textReadabilitySql)),
+    Key("text_bpe_pairs", textBpePairs, Oracle(textBpePairsSql)),
+    Key("text_bpe_train", textBpeTrain, Oracle(textBpeTrainSql)),
+    Key("text_bpe_apply", textBpeApply, Oracle(textBpeApplySql)),
+    Key("text_dup_spans", textDupSpans, Oracle(textDupSpansSql)),
+    Key("text_collocations", textCollocations, Oracle(textCollocationsSql)),
+    Key("text_ngram_lm", textNgramLm, Oracle(textNgramLmSql)),
+    Key("text_vocab_oov", textVocabOov, Oracle(textVocabOovSql)),
+    Key("text_paragraph_dedup", textParagraphDedup, Oracle(textParagraphDedupSql)),
+    Key("text_boilerplate", textBoilerplate, Oracle(textBoilerplateSql)),
+    Key("text_tfidf", textTfidf, Oracle(textTfidfSql)),
+    Key("text_domain_mix", textDomainMix, Oracle(textDomainMixSql)),
+    Key("text_train_split", textTrainSplit, Oracle(textTrainSplitSql)),
+    Key("text_pack_sequences", textPackSequences, Oracle(textPackSequencesSql)),
+    Key("text_chunk", textChunk, Oracle(textChunkSql)),
+    Key("text_tokens", textTokens, Oracle(textTokensSql)),
+    Key("text_quality", textQuality, Oracle(textQualitySql)),
+    Key("text_langid", textLangid, Oracle(textLangidSql)),
+    Key("text_lang_confusion", textLangConfusion, Oracle(textLangConfusionSql)),
+    Key("text_fingerprint", textFingerprint, Oracle(textFingerprintSql)),
+    Key("text_normalize", textNormalize, Oracle(textNormalizeSql)),
+    Key("text_pii_scrub", textPiiScrub, Oracle(textPiiScrubSql)),
+    Key("text_repetition", textRepetition, Oracle(textRepetitionSql)))
 
-  val oracles: Map[String, String] = Map(
-    "text_bm25" -> textBm25Sql,
-    "text_readability" -> textReadabilitySql,
-    "text_ngram_novelty" -> textNgramNoveltySql,
-    "text_url_canon" -> textUrlCanonSql,
-    "text_html_strip" -> textHtmlStripSql,
-    "text_ttr" -> textTtrSql,
-    "text_concordance" -> textConcordanceSql,
-    "text_bpe_pairs" -> textBpePairsSql,
-    "text_bpe_train" -> textBpeTrainSql,
-    "text_bpe_apply" -> textBpeApplySql,
-    "text_collocations" -> textCollocationsSql,
-    "text_ngram_lm" -> textNgramLmSql,
-    "text_vocab_oov" -> textVocabOovSql,
-    "text_zipf" -> textZipfSql,
-    "text_source_overlap" -> textSourceOverlapSql,
-    "text_dup_spans" -> textDupSpansSql,
-    "text_paragraph_dedup" -> textParagraphDedupSql,
-    "text_boilerplate" -> textBoilerplateSql,
-    "text_tfidf" -> textTfidfSql,
-    "text_domain_mix" -> textDomainMixSql,
-    "text_train_split" -> textTrainSplitSql,
-    "text_pack_sequences" -> textPackSequencesSql,
-    "text_chunk" -> textChunkSql,
-    "text_tokens" -> textTokensSql,
-    "text_quality" -> textQualitySql,
-    "text_langid" -> textLangidSql,
-    "text_lang_confusion" -> textLangConfusionSql,
-    "text_fingerprint" -> textFingerprintSql,
-    "text_normalize" -> textNormalizeSql,
-    "text_pii_scrub" -> textPiiScrubSql,
-    "text_repetition" -> textRepetitionSql)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

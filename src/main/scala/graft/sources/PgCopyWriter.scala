@@ -23,9 +23,10 @@ import graft.functions.PgCopyLine
   * safe inside the quotes.
   *
   * Spark's text sink renders each partition in parallel — the
-  * reference's single cursor loop becomes N writers; the \copy
-  * statement (PgSqlGen.copyStatement) can then point at the whole
-  * output directory since psql \copy accepts a program/cat glob.
+  * reference's single cursor loop becomes N writers. psql's \copy
+  * cannot read a directory, so the \copy statement
+  * (PgSqlGen.copyStatement) reads the part files through
+  * `FROM PROGRAM 'cat "<dir>"/part-*'`.
   */
 object PgCopyWriter {
 

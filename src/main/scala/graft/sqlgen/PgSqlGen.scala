@@ -83,10 +83,18 @@ object PgSqlGen {
     }.mkString("\n")
 
   /** PsqlParser.generate_dump_from_raw:135-137 — the \copy line the
-    * psql loader executes against the per-table CSV. */
-  def copyStatement(t: TableDef, csvPath: String): String = {
+    * psql loader executes against a table's dump. `csvDir` is the
+    * directory Spark wrote, which psql cannot open: the line has the
+    * client's shell `cat` its `part-*` files, a glob that never matches
+    * `_SUCCESS` or the hidden `.crc` files. The line names no part
+    * file, whose names change on every write, so a bundle's text
+    * stays the same from write to write. A dir that the single- and
+    * double-quoted command cannot carry verbatim throws. */
+  def copyStatement(t: TableDef, csvDir: String): String = {
+    require(!csvDir.exists(c => "'\"\\$`".contains(c) || c.isControl),
+      s"cannot quote the dump directory for psql's FROM PROGRAM: $csvDir")
     val cols = t.liveColumns.map(_.name).mkString("\", \"")
-    s"""\\copy "${t.name}" ("$cols") FROM '$csvPath' WITH (FORMAT CSV, QUOTE '''', DELIMITER ',', NULL 'NULL');"""
+    s"""\\copy "${t.name}" ("$cols") FROM PROGRAM 'cat "$csvDir"/part-*' WITH (FORMAT CSV, QUOTE '''', DELIMITER ',', NULL 'NULL');"""
   }
 
   /** PsqlParser.generate_psql_views: v1-compat views exposing the old

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
+import graft.{Key, NoOracle, Oracle}
 
 /** Structured Streaming surface: the `events` table replayed as a
   * file stream through a watermarked windowed aggregation — the
@@ -2195,65 +2196,48 @@ object StreamOps {
        |FROM sk ORDER BY event_type""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_kmv" -> (streamKmv _),
-    "stream_mv_retract" -> (streamMvRetract _),
-    "stream_mv_maintain" -> (streamMvMaintain _),
-    "stream_anomaly" -> (streamAnomaly _),
-    "stream_ohlc" -> (streamOhlc _),
-    "stream_late_data" -> (streamLateData _),
-    "stream_bitmap_distinct" -> (streamBitmapDistinct _),
-    "stream_heavy_hitters" -> (streamHeavyHitters _),
-    "stream_events" -> (streamEventsWindow _),
-    "stream_user_state" -> (streamUserState _),
-    "q_session_window" -> (qSessionWindow _),
-    "stream_sessions" -> (streamSessions _),
-    "stream_dedup" -> (streamDedup _),
-    "stream_enrich" -> (streamEnrich _),
-    "stream_join" -> (streamJoin _),
-    "stream_funnel_timeout" -> (streamFunnelTimeout _),
-    "stream_cdc_apply" -> (streamCdcApply _),
-    "stream_scd2" -> (streamScd2 _),
-    "stream_dim_vacuum" -> (streamDimVacuum _),
-    "stream_dim_asof" -> (streamDimAsof _),
-    "stream_dim_asof_ts" -> (streamDimAsofTs _))
-
-  val oracles: Map[String, String] = Map(
-    "stream_kmv" -> streamKmvSql,
-    // stream/batch convergence: streaming maintenance must land on
-    // the same summary q_mv_refresh's one-shot repair lands on — the
-    // full-recompute SQL covers both
-    "stream_mv_maintain" -> graft.operators.ScaleJoins.qMvRefreshSql,
+  val keys: Seq[Key] = Seq(
+    Key("stream_kmv", streamKmv, Oracle(streamKmvSql)),
     // stream/batch convergence under deletes: streamed retraction
     // maintenance must land on the same survivors-summary
     // q_mv_retract's one-shot subtract-and-patch lands on — the
     // full-recompute-over-survivors SQL covers both, deliberately
-    "stream_mv_retract" -> graft.operators.ScaleJoins.qMvRetractSql,
-    "stream_anomaly" -> streamAnomalySql,
+    Key("stream_mv_retract", streamMvRetract, Oracle(graft.operators.ScaleJoins.qMvRetractSql)),
+    // stream/batch convergence: streaming maintenance must land on
+    // the same summary q_mv_refresh's one-shot repair lands on — the
+    // full-recompute SQL covers both
+    Key("stream_mv_maintain", streamMvMaintain, Oracle(graft.operators.ScaleJoins.qMvRefreshSql)),
+    Key("stream_anomaly", streamAnomaly, Oracle(streamAnomalySql)),
     // stream/batch parity: the batch key's SQL covers the stream twin
-    "stream_ohlc" -> graft.operators.Relational.qOhlcBarsSql,
-    "stream_late_data" -> streamLateDataSql,
+    Key("stream_ohlc", streamOhlc, Oracle(graft.operators.Relational.qOhlcBarsSql)),
+    Key("stream_late_data", streamLateData, Oracle(streamLateDataSql)),
     // same word layout as the batch key -> same oracle covers both
-    "stream_bitmap_distinct" -> graft.operators.AnalyticsOps.qBitmapDistinctSql,
-    "q_session_window" -> qSessionWindowSql,
-    "stream_events" -> streamEventsSql,
-    "stream_sessions" -> streamSessionsSql,
-    "stream_user_state" -> streamUserStateSql,
-    "stream_dedup" -> streamDedupSql,
-    "stream_enrich" -> streamEnrichSql,
-    "stream_join" -> streamJoinSql,
-    "stream_funnel_timeout" -> streamFunnelSql,
+    Key("stream_bitmap_distinct", streamBitmapDistinct,
+      Oracle(graft.operators.AnalyticsOps.qBitmapDistinctSql)),
+    Key("stream_heavy_hitters", streamHeavyHitters,
+      NoOracle("the same Misra-Gries contract as q_heavy_hitters, " +
+        "maintained as streaming state")),
+    Key("stream_events", streamEventsWindow, Oracle(streamEventsSql)),
+    Key("stream_user_state", streamUserState, Oracle(streamUserStateSql)),
+    Key("q_session_window", qSessionWindow, Oracle(qSessionWindowSql)),
+    Key("stream_sessions", streamSessions, Oracle(streamSessionsSql)),
+    Key("stream_dedup", streamDedup, Oracle(streamDedupSql)),
+    Key("stream_enrich", streamEnrich, Oracle(streamEnrichSql)),
+    Key("stream_join", streamJoin, Oracle(streamJoinSql)),
+    Key("stream_funnel_timeout", streamFunnelTimeout, Oracle(streamFunnelSql)),
     // the streamed, incrementally-merged store must equal the
     // one-shot batch MERGE of the same change set
-    "stream_cdc_apply" -> graft.operators.Etl.etlCdcUpsertSql,
+    Key("stream_cdc_apply", streamCdcApply, Oracle(graft.operators.Etl.etlCdcUpsertSql)),
     // the incrementally-maintained type-2 history must equal the
     // one-shot batch SCD2 build over the same change images
-    "stream_scd2" -> graft.operators.Etl.etlScd2Sql,
+    Key("stream_scd2", streamScd2, Oracle(graft.operators.Etl.etlScd2Sql)),
     // the VACUUMED generation store must still equal the one-shot
     // batch MERGE: compaction + retention GC invisible in the answer
-    "stream_dim_vacuum" -> graft.operators.Etl.etlCdcUpsertSql,
+    Key("stream_dim_vacuum", streamDimVacuum, Oracle(graft.operators.Etl.etlCdcUpsertSql)),
     // every retained generation bound must read as the progressive
     // one-shot fold at that bound — including below the compaction
-    "stream_dim_asof" -> streamDimAsofSql,
-    "stream_dim_asof_ts" -> streamDimAsofTsSql)
+    Key("stream_dim_asof", streamDimAsof, Oracle(streamDimAsofSql)),
+    Key("stream_dim_asof_ts", streamDimAsofTs, Oracle(streamDimAsofTsSql)))
+
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

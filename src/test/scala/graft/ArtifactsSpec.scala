@@ -147,4 +147,21 @@ class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(offenders.isEmpty,
       s"artifact lifecycle code outside Artifacts: ${offenders.mkString(", ")}")
   }
+
+  test("the suite's only temp-dir root is TestSpark's scratch root") {
+    // spelled in two parts so this file does not match itself
+    val token = "createTemp" + "Directory"
+    val test = Paths.get("src/test/scala")
+    val uses = Files.walk(test).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.filter(_.contains(token))
+          .map(l => s"${test.relativize(p)}: ${l.trim}")
+      }.toSeq
+    // every other spec takes a dir under that root (TestSpark.tempDir),
+    // which is deleted when the test JVM exits
+    assert(uses == Seq("graft/RelationalSpec.scala: val root = " +
+      "java.nio.file.Files." + token + "(\"graft-suite\")"),
+      s"temp dirs made outside TestSpark's scratch root: $uses")
+  }
 }

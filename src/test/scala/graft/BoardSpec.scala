@@ -2,16 +2,21 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.{Relational, SketchOps}
+
 /** Mechanical board-consistency guard (VERDICT r7 #4): every key the
   * engine ships must be documented in SURVEY §2, and every SURVEY §2
   * key row must be a real registered query — keys can no longer land
-  * in code without a SURVEY row, or linger in SURVEY after removal.
+  * in code without a SURVEY row, or linger in SURVEY after removal,
+  * and a row's check cell must name the key's declared check.
   * The committed bench artifact runs SparkEntry.queries directly, so
   * queries == SURVEY rows implies bench coverage too.
   */
 class BoardSpec extends AnyFunSuite {
 
-  private def surveyKeys: Set[String] = {
+  /** SURVEY §2's key rows: each key with its `check` cell, the row's
+    * second-to-last cell (`\|` inside a cell is escaped). */
+  private def surveyChecks: Map[String, String] = {
     val lines = scala.io.Source.fromFile("SURVEY.md", "UTF-8").getLines().toSeq
     val sec2 = lines.dropWhile(l => !l.startsWith("## §2"))
       .takeWhile(l => !l.startsWith("## §3"))
@@ -19,24 +24,42 @@ class BoardSpec extends AnyFunSuite {
     // "component") and infra component names (spaces, capitals,
     // hyphens) don't match
     val keyRe = """^\| ([a-z][a-z0-9_]*) \|""".r
-    sec2.flatMap(l => keyRe.findFirstMatchIn(l).map(_.group(1)))
-      .filterNot(Set("key", "component")).toSet
+    sec2.flatMap { l =>
+      keyRe.findFirstMatchIn(l).map(_.group(1))
+        .filterNot(Set("key", "component"))
+        .map { k =>
+          val cells = l.trim.stripSuffix("|").split("""(?<!\\)\|""")
+          k -> cells(cells.length - 2).trim
+        }
+    }.toMap
   }
 
   test("SURVEY §2 key rows and SparkEntry.queries are the same set") {
-    val survey = surveyKeys
+    val survey = surveyChecks
     val code = SparkEntry.queries.keySet
-    val undocumented = code -- survey
-    val stale = survey -- code
+    val undocumented = code -- survey.keySet
+    val stale = survey.keySet -- code
     assert(undocumented.isEmpty,
       s"keys implemented but missing a SURVEY §2 row: ${undocumented.toSeq.sorted}")
     assert(stale.isEmpty,
       s"SURVEY §2 rows with no implementation: ${stale.toSeq.sorted}")
+    // each row's check cell names the key's declared check
+    val declared = SparkEntry.keys.map { case (n, k) =>
+      n -> (k.check match { case _: Oracle => "[O]"; case _: NoOracle => "[T]" })
+    }
+    val wrong = survey.filter { case (k, c) => declared(k) != c }
+    assert(wrong.isEmpty,
+      "SURVEY §2 check cells that disagree with the key's declared check: " +
+        wrong.toSeq.sorted.map { case (k, c) => s"$k=$c (declared ${declared(k)})" })
   }
 
-  test("every oracle belongs to a registered query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without queries: ${orphans.toSeq.sorted}")
+  test("SparkEntry's key builder throws on a name declared twice, naming it") {
+    val dup = SketchOps.keys.head
+    val e = intercept[IllegalArgumentException](
+      Key.byName(Relational.keys ++ SketchOps.keys :+ dup))
+    assert(e.getMessage.contains(dup.name), e.getMessage)
+    assert(Key.byName(Relational.keys ++ SketchOps.keys).size ==
+      Relational.keys.size + SketchOps.keys.size)
   }
 
   test("the verify-boundary pin: orderable columns only, identical list on both sides") {
@@ -67,15 +90,8 @@ class BoardSpec extends AnyFunSuite {
 
   test("keys without an oracle are the declared [T]-by-design set") {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    // sketch internals (HLL, quantile digest) are engine-specific by
-    // contract; q_heavy_hitters joins the sketch family: Misra-Gries
-    // counters are merge-order-dependent within the guaranteed error
-    // bound; stream_heavy_hitters carries the same Misra-Gries
-    // contract as q_heavy_hitters, maintained as streaming state
-    // (dedup_lsh_eval left this set in r11, mm_binary_meta in r12:
-    // both rebuild from a PUBLISHED artifact, making the whole audit
-    // DuckDB-replayable — the four genuinely engine-internal sketch
-    // keys are what remains)
+    // the four engine-internal sketch keys; each declaration's
+    // NoOracle says why
     val declared = Set("q_approx_distinct", "q_approx_percentile",
       "q_heavy_hitters", "stream_heavy_hitters")
     assert(noOracle == declared,

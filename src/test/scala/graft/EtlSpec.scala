@@ -186,9 +186,15 @@ class EtlSpec extends AnyFunSuite {
     assert(PgSqlGen.indexes(td).contains(
       "CREATE INDEX child_by_parent_x ON child (\"parent_id\");"))
     assert(PgSqlGen.setval(td).contains("SELECT setval('child_id_seq', 42, false);"))
-    assert(PgSqlGen.copyStatement(td, "/tmp/child.sql").contains(
-      "\\copy \"child\" (\"id\", \"parent_id\") FROM '/tmp/child.sql' " +
-        "WITH (FORMAT CSV, QUOTE '''', DELIMITER ',', NULL 'NULL');"))
+    assert(PgSqlGen.copyStatement(td, "/tmp/out dir/child") ==
+      "\\copy \"child\" (\"id\", \"parent_id\") FROM PROGRAM " +
+        "'cat \"/tmp/out dir/child\"/part-*' " +
+        "WITH (FORMAT CSV, QUOTE '''', DELIMITER ',', NULL 'NULL');")
+    // a dir the quoted command cannot carry verbatim throws
+    Seq("/tmp/o'dir", "/tmp/o\"dir", "/tmp/$HOME", "/tmp/`id`", "/tmp/a\\b",
+      "/tmp/a\nb").foreach { dir =>
+      intercept[IllegalArgumentException](PgSqlGen.copyStatement(td, dir))
+    }
   }
 
   test("PgSqlGen.compatView: renamed cols mapped, skipped cols NULL") {

@@ -64,10 +64,6 @@ class RelationalSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every declared query has an oracle or is marked oracle-free") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
-  }
-
   test("all queries run non-empty at sf0.001 with stable schemas") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sf)

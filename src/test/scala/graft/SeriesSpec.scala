@@ -274,8 +274,8 @@ class SeriesSpec extends AnyFunSuite {
   }
 
   test("q_rolling_corr's physical plan matches the frozen fingerprint behind its bench waiver") {
-    // The bench carries a variance waiver for this key (Bench
-    // varianceNotes: solo-run JIT-convergence spread diagnosed in r14
+    // The bench carries a variance waiver for this key (its Key's
+    // varianceNote: solo-run JIT-convergence spread diagnosed in r14
     // with the plan bit-identical across compilations). A waiver can
     // mask a REAL future plan regression, so the diagnosed plan is
     // frozen here as the operator sequence of the executed plan

@@ -1343,6 +1343,32 @@ class StreamPipelineSpec extends AnyFunSuite {
     assert(jobs == 4, s"$jobs jobs")
   }
 
+  test("Pipeline.migrate: each \\copy line reads part files that parse to the table's rows") {
+    val out = tempDir("copy_glob").toString
+    // region's filter drops every row: its dump still needs a part file
+    // for the glob to match, or `cat` fails and psql stops
+    val changes = SchemaChanges(Map(
+      "region" -> TableChange(where = Some("r_regionkey < 0"))))
+    val res = Pipeline.migrate(spark, sf, out,
+      Seq("customer", "nation", "region", "orders"), changes)
+    val glob = """FROM PROGRAM 'cat "([^"]+)"/part-\*' """.r
+    res.tables.foreach { t =>
+      val dir = glob.findFirstMatchIn(t.copySql).map(_.group(1)).getOrElse(
+        fail(s"${t.outputName}: no part-file glob in ${t.copySql}"))
+      // the shell's expansion of `part-*`, in the JVM
+      val parts = new java.io.File(dir).listFiles().toSeq
+        .filter(_.getName.startsWith("part-"))
+      assert(parts.nonEmpty && parts.forall(_.isFile),
+        s"${t.outputName}: `part-*` matches no regular file in $dir")
+      // PG's CSV rules: ' quotes, '' escapes it, newlines inside quotes
+      val parsed = spark.read.option("quote", "'").option("escape", "'")
+        .option("multiLine", "true").csv(parts.map(_.getPath): _*).count()
+      assert(parsed == t.rows, s"${t.outputName}: parsed $parsed rows, reported ${t.rows}")
+    }
+    assert(res.tables.find(_.originalName == "region").map(_.rows).contains(0L))
+    assert(res.tables.forall(t => t.originalName == "region" || t.rows > 0))
+  }
+
   test("Pipeline.migrateAll migrates multiple databases with prefix filter") {
     val out = tempDir("multidb").toString
     val dbs = Map(
