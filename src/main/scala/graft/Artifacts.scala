@@ -2,9 +2,29 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.operators.ScaleJoins
+
 /** The lifecycle of every on-disk artifact graft writes under /tmp:
   * published artifacts (indexes, summaries, logs, layouts, dumps) and
   * per-run scratch directories.
+  *
+  * NAMING AND TAGGING ([[publishFor]]). A per-corpus artifact `name`
+  * built from corpus dir `dir` lives at [[root]]`(name, dir)` =
+  * `/tmp/graft_<name>_<Tables.sfTag(dir)>`, and its marker holds
+  * [[contentTag]]`(dir, inputs)` = `ScaleJoins.corpusTag(dir,
+  * inputs)`, the digest of the input tables' sizes and mtimes.
+  *   - The DIR digest names the root: the static oracle SQL must
+  *     spell the path before any corpus is seen, so it carries
+  *     [[oracleRoot]]`(name)` and Verify substitutes the dir's tag
+  *     ([[oracleSqlFor]]). A content digest cannot appear there.
+  *   - The CONTENT digest decides staleness: a regenerated fixture at
+  *     the same path changes the tag, so the artifact rebuilds in
+  *     place instead of serving the old corpus's answers or leaving
+  *     one directory per content version behind.
+  * Every root contains `sfTag(dir)`, so a caller that ran a corpus
+  * alias can find and delete all that alias's artifacts by that
+  * substring. [[publishFrozen]] is the one exception to content
+  * tracking, for a model that must never be rebuilt.
   *
   * PUBLISH PROTOCOL ([[publish]]). A published artifact is a directory
   * `root` built once per content tag and reused until the tag changes.
@@ -42,26 +62,63 @@ import java.nio.file.{Files, Paths}
   *     `*.txt`, so `_GRAFT_TAG` can sit inside a parquet directory.
   *   - `tag = None` publishes build-once-forever: the frozen-model
   *     convention, for artifacts that must NOT be rebuilt (a model
-  *     the already-dumped oracle SQL ranks against). A tag makes the
-  *     artifact track its inputs: callers pass a content fingerprint
-  *     (`ScaleJoins.corpusTag`), so a regenerated fixture at the same
-  *     path rebuilds instead of serving a stale artifact. A tag
+  *     the already-dumped oracle SQL ranks against). A content tag
   *     tracks content only; after changing an artifact's layout, a
-  *     caller extends its tag (see `StreamOps.writeCdcLog`).
+  *     caller passes a `layout` to [[publishFor]] (see
+  *     `StreamOps.writeCdcLog`).
   *
   * SCRATCH ([[withRunDir]]). A run directory is unique per call and
   * deleted in `finally`, so a key that throws leaves no store or
   * checkpoint behind. A directory that outlives any one call is
   * deleted at JVM exit ([[deleteAtExit]]).
   *
-  * The root is `/tmp`, fixed: the static oracle SQL reads
-  * `/tmp/graft_<artifact>___SFTAG__` paths, and artifact paths carry
-  * corpus tags, so concurrent runs over different corpora stay
-  * apart. */
+  * The root is `/tmp`, fixed: the static oracle SQL reads these
+  * paths, and artifact paths carry corpus tags, so concurrent runs
+  * over different corpora stay apart. */
 object Artifacts {
 
   private val marker = "_GRAFT_TAG"
   private val untagged = "published"
+
+  private val sfTagSlot = "__SFTAG__"
+
+  private def at(name: String, tag: String): String = s"/tmp/graft_${name}_$tag"
+
+  /** Where artifact `name` of corpus `dir` lives. */
+  def root(name: String, dir: String): String = at(name, Tables.sfTag(dir))
+
+  /** [[root]] as the static oracle SQL spells it, before any corpus is
+    * known; [[oracleSqlFor]] makes it the root of one corpus. */
+  def oracleRoot(name: String): String = at(name, sfTagSlot)
+
+  /** `sql` with every [[oracleRoot]] made the [[root]] for `dir`. */
+  def oracleSqlFor(sql: String, dir: String): String =
+    sql.replace(sfTagSlot, Tables.sfTag(dir))
+
+  /** The digest of `dir`'s `inputs` tables that decides whether an
+    * artifact built from them is stale; `layout`, when given, names a
+    * version of the artifact's own layout. */
+  def contentTag(dir: String, inputs: Seq[String], layout: String = ""): String =
+    ScaleJoins.corpusTag(dir, inputs) + (if (layout.isEmpty) "" else s"|layout=$layout")
+
+  /** Publish artifact `name` of corpus `dir`, rebuilt whenever the
+    * [[contentTag]] of `inputs` (and `layout`) changes: `build` writes
+    * into the root it is given. Returns the root. */
+  def publishFor(name: String, dir: String, inputs: Seq[String], layout: String = "")(
+      build: String => Unit): String = {
+    val r = root(name, dir)
+    publish(r, Some(contentTag(dir, inputs, layout)))(build(r))
+    r
+  }
+
+  /** Publish artifact `name` of corpus `dir` once and never rebuild it
+    * (`tag = None`): for a model whose rebuild would not reproduce the
+    * doubles an already-dumped oracle reads. Returns the root. */
+  def publishFrozen(name: String, dir: String)(build: String => Unit): String = {
+    val r = root(name, dir)
+    publish(r, None)(build(r))
+    r
+  }
 
   /** Run `body` holding an OS `FileLock` on `root + ".lock"`. Not
     * reentrant within one JVM (see the protocol above). */
@@ -75,7 +132,7 @@ object Artifacts {
   /** Publish `root` per the protocol above: `build` writes into `root`
     * and runs only when the marker is missing or carries another
     * tag. */
-  def publish(root: String, tag: Option[String])(build: => Unit): Unit =
+  private[graft] def publish(root: String, tag: Option[String])(build: => Unit): Unit =
     withLock(root)(publishHeld(root, tag)(build))
 
   /** [[publish]] for a caller that already holds [[withLock]] on

@@ -20,15 +20,6 @@ import graft.sqlgen.PgSqlGen
   */
 object Pipeline {
 
-  /** Output sink for extracted tables: the reference's PG \copy CSV
-    * dialect, or a partitioned parquet lake (the modern migration
-    * target — partition columns become directory pruning keys for
-    * every downstream scan). */
-  sealed trait Sink
-  case object PgCsv extends Sink
-  case class ParquetLake(partitionBy: Map[String, Seq[String]] = Map.empty)
-      extends Sink
-
   case class TableResult(originalName: String, outputName: String,
       rows: Long, ddl: String, copySql: String)
 
@@ -79,7 +70,6 @@ object Pipeline {
       node: NodeRules = NodeRules.mysqlToPg,
       pks: Map[String, Seq[String]] = Map.empty,
       skipPreSql: Boolean = false,
-      sink: Sink = PgCsv,
       indexes: Map[String, Seq[IndexDef]] = Map.empty): MigrationResult = {
 
     // one lazy cell per table: concurrent loads of different tables
@@ -101,14 +91,7 @@ object Pipeline {
       orig -> SchemaRules(Seq(orig), changes, node).headOption.map { td =>
         val converted = convert(src, orig, td, changes, node, skipPreSql, load)
         val outPath = s"$outDir/${td.name}"
-        val rows = countWritten(converted)(df => sink match {
-          case PgCsv => PgCopyWriter.write(df, outPath)
-          case ParquetLake(partitionBy) =>
-            val w = df.write.mode("overwrite")
-            partitionBy.get(t).filter(_.nonEmpty)
-              .fold(w)(cols => w.partitionBy(cols: _*))
-              .parquet(outPath)
-        })
+        val rows = countWritten(converted)(PgCopyWriter.write(_, outPath))
         td -> TableResult(t, td.name,
           rows = rows,
           ddl = PgSqlGen.dropTable(td) + "\n" + PgSqlGen.createTable(td),

@@ -83,11 +83,6 @@ object Tables {
     sys.exit(code)
   }
 
-  /** Register every table as a temp view so the full engine surface
-    * is reachable from spark.sql(...) too. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(t => load(spark, sfDir, t).createOrReplaceTempView(t))
-
   /** One table of a corpus dir. The schema is read in this JVM from
     * the parquet footer Spark's own inference would read
     * ([[footerSchema]]) and handed to the reader, so a load runs no
@@ -144,9 +139,10 @@ object Tables {
       }
   }
 
-  /** Corpus-dir tag for one-time /tmp artifact paths AND the oracle
-    * side's `__SFTAG__` substitution (Verify) — the two must agree
-    * byte-for-byte, so this is the ONLY derivation. Truncated SHA-256
+  /** Corpus-dir tag that names every published artifact's root, on
+    * the Spark side and in the oracle SQL Verify dumps
+    * (`Artifacts.root`) — the two must agree byte-for-byte, so this
+    * is the ONLY derivation. Truncated SHA-256
     * of the dir string, not 32-bit String.hashCode: two colliding dir
     * strings would share one artifact directory, and a concurrent
     * Verify on corpus A could clobber published payloads between

@@ -82,12 +82,6 @@ object Verify {
     // only inside string literals)
     def pinSql(name: String, sql: String): String =
       pinSqlFor(sql, pinned.getOrElse(name, Nil))
-    // __SFTAG__ lets a static oracle string reference per-corpus
-    // side-channel files (e.g. the published IVF centroid model)
-    // without cross-run clobbering — substituted with this run's tag
-    // (the SAME truncated-SHA-256 derivation every publisher uses;
-    // see Tables.sfTag for why not 32-bit String.hashCode)
-    val sfTag = Tables.sfTag(sfDir)
     // under SPARK_GRAFT_ONLY, emit oracle entries ONLY for keys that
     // ran: an entry for a key outside the subset would lack its
     // canonical ORDER BY wrap (pinned has no row for it), and running
@@ -96,7 +90,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) =>
-        s"${jstr(k)}: ${jstr(pinSql(k, v.replace("__SFTAG__", sfTag)))}" }
+        // a static oracle names published artifacts by
+        // Artifacts.oracleRoot; this run's corpus fills in their roots
+        s"${jstr(k)}: ${jstr(pinSql(k, Artifacts.oracleSqlFor(v, sfDir)))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }

@@ -20,8 +20,4 @@ object ExprUtils {
   /** let v = e in body(v) — e evaluated exactly once per row. */
   def bind(e: Column)(body: Column => Column): Column =
     element_at(transform(array(e), v => body(v)), 1)
-
-  /** let v1 = e1, v2 = e2 in body(v1, v2). */
-  def bind2(e1: Column, e2: Column)(body: (Column, Column) => Column): Column =
-    element_at(zip_with(array(e1), array(e2), (a, b) => body(a, b)), 1)
 }

@@ -2409,8 +2409,7 @@ object AnalyticsOps {
       |  CAST(MAX(CASE WHEN rk = 1 THEN -pm END) AS BIGINT) AS lost_units
       |FROM r GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Path length and report size for q_top_paths. */
-  private val pathLen = 3
+  /** Report size for q_top_paths. */
   private val pathTopK = 20
 
   /** Top user paths — the Sankey/flow-report primitive one level

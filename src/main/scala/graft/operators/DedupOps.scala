@@ -65,8 +65,6 @@ object DedupOps {
     * array is let-bound (ExprUtils.bind) so the split+filter runs once
     * per row — inlined references would re-tokenize inside every
     * element_at, turning this O(tokens) expression into O(tokens²). */
-  private[graft] def shinglesProbe(text: Column): Column = shingles(text)
-
   private[operators] def shingles(text: Column): Column =
     graft.functions.ExprUtils.bind(
       filter(split(text, " "), x => x =!= "")) { t =>
@@ -282,9 +280,6 @@ object DedupOps {
   val minhashK = 16
   val minhashBands = 4
 
-  private[graft] def minhashIdxDir(dir: String): String =
-    s"/tmp/graft_minhash_${graft.Tables.sfTag(dir)}"
-
   /** Signature index published once per corpus fingerprint (the same
     * discipline as dedup_incremental's corpus index); the pair search
     * reads the PUBLISHED buckets/sets back, so the DuckDB oracle
@@ -292,25 +287,20 @@ object DedupOps {
     * the exact-Jaccard verify are all oracle-checked ([T]→[O] in r8).
     * The stored band buckets ARE the contract: DuckDB never needs
     * xxhash64. In production this index is the durable artifact a
-    * nightly ingest (dedup_incremental) joins new batches against. */
-  /** Publishes (or freshness-checks) the minhash signature index for
-    * `dir`; returns its location. Idempotent per corpus fingerprint. */
-  private[graft] def minhashPublish(s: SparkSession, dir: String): String = {
-    val idxDir = minhashIdxDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("documents"))
-    graft.Artifacts.publish(idxDir, Some(tag)) {
+    * nightly ingest (dedup_incremental) joins new batches against.
+    * Returns the index's root. */
+  private[graft] def minhashPublish(s: SparkSession, dir: String): String =
+    graft.Artifacts.publishFor("minhash", dir, Seq("documents")) { out =>
       // LAZY: the two segment writes are sequential full-
       // materializing actions — the first computes and caches every
       // partition, the second reads the cache (r14)
       val sigs = minhashSignatures(dupDocs(s, dir))
         .localCheckpoint(eager = false)
       sigs.select("doc_id", "sh").write.mode("overwrite")
-        .parquet(s"$idxDir/sets")
+        .parquet(s"$out/sets")
       bandBuckets(sigs).write.mode("overwrite")
-        .parquet(s"$idxDir/buckets")
+        .parquet(s"$out/buckets")
     }
-    idxDir
-  }
 
   /** Unverified LSH candidate pairs (a < b) from the published band
     * buckets — the recall-side raw material dedup_minhash verifies
@@ -393,8 +383,8 @@ object DedupOps {
        |    >= $jaccardTau),
        |cand AS (
        |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-       |  FROM read_parquet('/tmp/graft_minhash___SFTAG__/buckets/*.parquet') x
-       |  JOIN read_parquet('/tmp/graft_minhash___SFTAG__/buckets/*.parquet') y
+       |  FROM read_parquet('${graft.Artifacts.oracleRoot("minhash")}/buckets/*.parquet') x
+       |  JOIN read_parquet('${graft.Artifacts.oracleRoot("minhash")}/buckets/*.parquet') y
        |    USING (band, bucket)
        |  WHERE x.doc_id < y.doc_id),
        |c AS (SELECT
@@ -410,19 +400,19 @@ object DedupOps {
   /** Candidates and Jaccard rebuilt entirely from the published
     * signature index — same contract as dedupIncrementalSql. */
   val dedupMinhashSql: String =
-    """WITH cand AS (
+    s"""WITH cand AS (
       |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      |  FROM read_parquet('/tmp/graft_minhash___SFTAG__/buckets/*.parquet') x
-      |  JOIN read_parquet('/tmp/graft_minhash___SFTAG__/buckets/*.parquet') y
+      |  FROM read_parquet('${graft.Artifacts.oracleRoot("minhash")}/buckets/*.parquet') x
+      |  JOIN read_parquet('${graft.Artifacts.oracleRoot("minhash")}/buckets/*.parquet') y
       |    USING (band, bucket)
       |  WHERE x.doc_id < y.doc_id)
       |SELECT a, b,
       |  CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
       |    / len(list_distinct(sa.sh || sb.sh)) AS jaccard
       |FROM cand
-      |JOIN read_parquet('/tmp/graft_minhash___SFTAG__/sets/*.parquet') sa
+      |JOIN read_parquet('${graft.Artifacts.oracleRoot("minhash")}/sets/*.parquet') sa
       |  ON sa.doc_id = a
-      |JOIN read_parquet('/tmp/graft_minhash___SFTAG__/sets/*.parquet') sb
+      |JOIN read_parquet('${graft.Artifacts.oracleRoot("minhash")}/sets/*.parquet') sb
       |  ON sb.doc_id = b
       |WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
       |    / len(list_distinct(sa.sh || sb.sh)) >= 0.5
@@ -509,18 +499,13 @@ object DedupOps {
   // sign-sum per bit), candidates via 4 16-bit bands, verified by
   // hamming distance <= 3 (bit_count of xor).
   // ---------------------------------------------------------------
-  private[graft] def simhashIdxDir(dir: String): String =
-    s"/tmp/graft_simhash_${graft.Tables.sfTag(dir)}"
-
   /** Published-signature variant (the dedup_minhash discipline): the
     * 64-bit signatures and their 16-bit band buckets publish once per
     * corpus fingerprint; banding, candidate generation and the
     * hamming verify all read the published bytes, so the DuckDB
     * oracle recomputes them with its own bit_count(xor) ([T]→[O] r8). */
   def dedupSimhash(s: SparkSession, dir: String): DataFrame = {
-    val idxDir = simhashIdxDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("documents"))
-    graft.Artifacts.publish(idxDir, Some(tag)) {
+    val idxDir = graft.Artifacts.publishFor("simhash", dir, Seq("documents")) { out =>
       // no checkpoint (r14): sigs has exactly ONE consumer (the
       // bucket-segment write) — the pin bought a whole extra job
       // for lineage nobody re-read
@@ -535,7 +520,7 @@ object DedupOps {
                 .as("bucket"))
           }: _*)).as("bb"))
         .select(col("doc_id"), col("sig"), col("bb.band"), col("bb.bucket"))
-        .write.mode("overwrite").parquet(s"$idxDir/buckets")
+        .write.mode("overwrite").parquet(s"$out/buckets")
     }
     // corpus-sized band frame: never broadcast (see jaccardPairs)
     val banded = s.read.parquet(s"$idxDir/buckets").hint("shuffle_hash")
@@ -549,11 +534,11 @@ object DedupOps {
   }
 
   val dedupSimhashSql: String =
-    """WITH cand AS (
+    s"""WITH cand AS (
       |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
       |    CAST(bit_count(xor(x.sig, y.sig)) AS INT) AS hamming
-      |  FROM read_parquet('/tmp/graft_simhash___SFTAG__/buckets/*.parquet') x
-      |  JOIN read_parquet('/tmp/graft_simhash___SFTAG__/buckets/*.parquet') y
+      |  FROM read_parquet('${graft.Artifacts.oracleRoot("simhash")}/buckets/*.parquet') x
+      |  JOIN read_parquet('${graft.Artifacts.oracleRoot("simhash")}/buckets/*.parquet') y
       |    USING (band, bucket)
       |  WHERE x.doc_id < y.doc_id)
       |SELECT a, b, hamming FROM cand WHERE hamming <= 3
@@ -713,9 +698,6 @@ object DedupOps {
       .orderBy("doc_id")
   }
 
-  private[graft] def labelsDir(dir: String): String =
-    s"/tmp/graft_labels_${graft.Tables.sfTag(dir)}"
-
   /** The near-dup cluster labels as a PUBLISHED artifact (once per
     * corpus fingerprint): dedup_clusters stays the computation key —
     * it runs the full jaccard+propagation chain every time and the
@@ -727,12 +709,10 @@ object DedupOps {
     * independently (recursive CTE), so the published labels are
     * verified, not trusted. */
   def publishedLabels(s: SparkSession, dir: String): DataFrame = {
-    val root = labelsDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("documents"))
-    graft.Artifacts.publish(root, Some(tag)) {
+    val root = graft.Artifacts.publishFor("labels", dir, Seq("documents")) { out =>
       val docs = dupDocs(s, dir)
       clusterLabels(docs, jaccardPairs(docs, jaccardTau))._1
-        .write.mode("overwrite").parquet(root)
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(root)
   }
@@ -858,15 +838,11 @@ object DedupOps {
   // Jaccard from the stored sets — any defect in the persisted
   // layout, the bucket join, or the verify math breaks parity.
   // ---------------------------------------------------------------
-  private[graft] def dedupIndexDir(dir: String): String =
-    s"/tmp/graft_dedup_idx_${graft.Tables.sfTag(dir)}"
-
   /** The "corpus" is documents; the "batch" replays every 10th doc
     * under a shifted id (dupDocs' planted clones) — a nightly crawl
     * whose re-fetched pages must match their corpus originals. */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val idxDir = dedupIndexDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("documents"))
+    val idxDir = graft.Artifacts.root("dedup_idx", dir)
     // per-run work: hash ONLY the batch; publish its segment (the
     // oracle reads it, and in production tonight's segment compacts
     // into tomorrow's corpus index)
@@ -885,7 +861,8 @@ object DedupOps {
     // build guards against. One locked section: publish's own lock on
     // the same root would throw OverlappingFileLockException here
     graft.Artifacts.withLock(idxDir) {
-      graft.Artifacts.publishHeld(idxDir, Some(tag)) {
+      graft.Artifacts.publishHeld(idxDir,
+          Some(graft.Artifacts.contentTag(dir, Seq("documents")))) {
         val corpusSigs =
           minhashSignatures(Tables.load(s, dir, "documents"))
             .localCheckpoint(eager = false) // sequential writes, as above
@@ -920,18 +897,18 @@ object DedupOps {
     * segments (no xxhash64 needed DuckDB-side — the stored buckets
     * and hashed sets ARE the contract). */
   val dedupIncrementalSql: String =
-    """WITH cand AS (
+    s"""WITH cand AS (
       |  SELECT DISTINCT c.doc_id AS a, b.doc_id AS b
-      |  FROM read_parquet('/tmp/graft_dedup_idx___SFTAG__/corpus_buckets/*.parquet') c
-      |  JOIN read_parquet('/tmp/graft_dedup_idx___SFTAG__/batch_buckets/*.parquet') b
+      |  FROM read_parquet('${graft.Artifacts.oracleRoot("dedup_idx")}/corpus_buckets/*.parquet') c
+      |  JOIN read_parquet('${graft.Artifacts.oracleRoot("dedup_idx")}/batch_buckets/*.parquet') b
       |    USING (band, bucket))
       |SELECT a, b,
       |  CAST(len(list_intersect(cs.sh, bs.sh)) AS DOUBLE)
       |    / len(list_distinct(cs.sh || bs.sh)) AS jaccard
       |FROM cand
-      |JOIN read_parquet('/tmp/graft_dedup_idx___SFTAG__/corpus_sets/*.parquet') cs
+      |JOIN read_parquet('${graft.Artifacts.oracleRoot("dedup_idx")}/corpus_sets/*.parquet') cs
       |  ON cs.doc_id = a
-      |JOIN read_parquet('/tmp/graft_dedup_idx___SFTAG__/batch_sets/*.parquet') bs
+      |JOIN read_parquet('${graft.Artifacts.oracleRoot("dedup_idx")}/batch_sets/*.parquet') bs
       |  ON bs.doc_id = b
       |WHERE CAST(len(list_intersect(cs.sh, bs.sh)) AS DOUBLE)
       |    / len(list_distinct(cs.sh || bs.sh)) >= 0.5

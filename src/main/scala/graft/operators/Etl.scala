@@ -293,7 +293,7 @@ object Etl {
   def etlJdbcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val cust = Tables.load(s, dir, "customer")
     val conn = derbyByCorpus.computeIfAbsent(
-      ScaleJoins.corpusTag(dir, Seq("customer")), { _ =>
+      graft.Artifacts.contentTag(dir, Seq("customer")), { _ =>
         val c = graft.sources.Jdbc.tempDerby("graft-derby-key")
         graft.sources.Jdbc.write(cust, c, "CUSTOMER_RT")
         c
@@ -406,9 +406,6 @@ object Etl {
        |FROM f ORDER BY 1""".stripMargin
   }
 
-  private val orcByCorpus =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** ORC round-trip of the customer dim — the second columnar
     * interchange format beside parquet (warehouses that standardized
     * on Hive/Trino hand over ORC): write once per corpus, then
@@ -418,20 +415,13 @@ object Etl {
     * with the oracle reading the original parquet. */
   def etlOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val cust = Tables.load(s, dir, "customer")
-    val path = orcByCorpus.computeIfAbsent(
-      ScaleJoins.corpusTag(dir, Seq("customer")), { tag =>
-        val p = s"/tmp/graft_orc_$tag"
-        cust.write.mode("overwrite").orc(p)
-        p
-      })
+    val path = graft.Artifacts.publishFor("orc", dir, Seq("customer"))(
+      cust.write.mode("overwrite").orc(_))
     s.read.orc(path).select(cust.columns.map(col): _*)
   }
 
   val etlOrcRoundtripSql: String =
     "SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment FROM customer"
-
-  private val jsonlByCorpus =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** JSONL round-trip of the documents corpus — THE interchange
     * format of LLM training data (every public corpus ships as
@@ -443,12 +433,8 @@ object Etl {
   def pipelineJsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
       .select("doc_id", "lang", "source", "text")
-    val path = jsonlByCorpus.computeIfAbsent(
-      ScaleJoins.corpusTag(dir, Seq("documents")), { tag =>
-        val p = s"/tmp/graft_jsonl_$tag"
-        docs.write.mode("overwrite").json(p)
-        p
-      })
+    val path = graft.Artifacts.publishFor("jsonl", dir, Seq("documents"))(
+      docs.write.mode("overwrite").json(_))
     s.read.schema(docs.schema).json(path)
       .select(docs.columns.map(col): _*)
   }
@@ -471,14 +457,6 @@ object Etl {
         "c_nationkey" -> ColumnChange(nullable = Some(true),
           reference = Some(Reference("nation", "n_nationkey")))))))
 
-  /** The dump location the static oracle SQL reads: keyed by the same
-    * dir-hash tag Verify substitutes for __SFTAG__. It is published
-    * under the corpus CONTENT fingerprint, so a regenerated fixture at
-    * the same path re-runs the migration instead of letting the oracle
-    * read a stale dump. */
-  private[graft] def pipelineDumpDir(dir: String): String =
-    s"/tmp/graft_pipeline_dump_${graft.Tables.sfTag(dir)}"
-
   /** End-to-end migration dump parity — the whole orchestrated path
     * (Pipeline.migrate: rules -> extract -> value convert ->
     * PgCopyWriter CSV render) byte-round-trips, not just per-cell
@@ -493,10 +471,8 @@ object Etl {
     * doubles would be bounded by PyFloat.repr's Python-2 12-significant-
     * digit str(), which is the reference's own lossy contract.) */
   def etlPipelineDump(s: SparkSession, dir: String): DataFrame = {
-    val outDir = pipelineDumpDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("customer", "nation"))
-    graft.Artifacts.publish(outDir, Some(tag)) {
-      val res = graft.Pipeline.migrate(s, dir, outDir,
+    graft.Artifacts.publishFor("pipeline_dump", dir, Seq("customer", "nation")) { out =>
+      val res = graft.Pipeline.migrate(s, dir, out,
         Seq("customer", "nation"), pipelineDumpChanges,
         pks = Map("customer" -> Seq("c_custkey"),
           "nation" -> Seq("n_nationkey")))
@@ -511,8 +487,8 @@ object Etl {
   }
 
   val etlPipelineDumpSql: String =
-    """SELECT c_custkey, full_name, c_nationkey, c_acctbal
-      |FROM read_csv('/tmp/graft_pipeline_dump___SFTAG__/clients/*.txt',
+    s"""SELECT c_custkey, full_name, c_nationkey, c_acctbal
+      |FROM read_csv('${graft.Artifacts.oracleRoot("pipeline_dump")}/clients/*.txt',
       |  columns={'c_custkey': 'BIGINT', 'full_name': 'VARCHAR',
       |           'c_nationkey': 'INTEGER', 'c_acctbal': 'DOUBLE'},
       |  header=false, delim=',', quote='''', escape='''',
@@ -765,12 +741,6 @@ object Etl {
       |UNION ALL SELECT * FROM ins
       |ORDER BY c_custkey""".stripMargin
 
-  /** Root of the stored per-segment aggregate etl_incremental_agg
-    * maintains (one-time per corpus fingerprint, like the bucket
-    * layout and the Derby db). */
-  private[graft] def baseAggDir(dir: String): String =
-    s"/tmp/graft_baseagg_${ScaleJoins.corpusTag(dir, Seq("customer"))}"
-
   /** Incremental aggregate maintenance — the materialized-view twin
     * of etl_cdc_upsert: keep a stored per-group aggregate current
     * under the SAME deterministic change batch by merging retractable
@@ -787,14 +757,12 @@ object Etl {
     * corpus) hash-matches. A group whose count reaches 0 drops from
     * the view, exactly as GROUP BY would. */
   def etlIncrementalAgg(s: SparkSession, dir: String): DataFrame = {
-    val layout = baseAggDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("customer"))
-    graft.Artifacts.publish(layout, Some(tag)) {
+    val layout = graft.Artifacts.publishFor("baseagg", dir, Seq("customer")) { out =>
       Tables.load(s, dir, "customer")
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_customers"),
           sum(col("c_acctbal").cast(DecimalType(18, 2))).as("sum_bal"))
-        .write.mode("overwrite").parquet(layout)
+        .write.mode("overwrite").parquet(out)
     }
     val base = Tables.load(s, dir, "customer")
     def dec(c: Column) = c.cast(DecimalType(18, 2))
@@ -845,8 +813,6 @@ object Etl {
     * order); the oracle proves content parity of the re-read shards
     * against the source table. Export is one-time per corpus
     * fingerprint, like the bucket layout and the Derby db. */
-  private[graft] def shardExportDir(dir: String): String =
-    s"/tmp/graft_shard_export_${graft.Tables.sfTag(dir)}"
 
   /** Shard count is a deployment parameter (graft.shard.export.count;
     * fixture default 8): at 100 TB it is sized to downstream reader
@@ -862,13 +828,11 @@ object Etl {
       .sortWithinPartitions("o_orderdate", "o_orderkey")
 
   def etlShardExport(s: SparkSession, dir: String): DataFrame = {
-    val outDir = shardExportDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    graft.Artifacts.publish(outDir, Some(tag)) {
+    val outDir = graft.Artifacts.publishFor("shard_export", dir, Seq("orders")) { out =>
       shardExportFrame(s, dir)
         .write.mode("overwrite")
         .option("maxRecordsPerFile", 2000)
-        .parquet(outDir)
+        .parquet(out)
     }
     // the oracle-checked result is the re-read shards: any loss,
     // duplication or value corruption in the export breaks parity
@@ -876,12 +840,6 @@ object Etl {
   }
 
   val etlShardExportSql: String = "SELECT * FROM orders"
-
-  /** Root for the schema-evolution fixture batches (one-time per
-    * corpus fingerprint; path keyed by the same dir hash the oracle's
-    * __SFTAG__ substitutes). */
-  private[graft] def schemaEvoDir(dir: String): String =
-    s"/tmp/graft_schema_evo_${graft.Tables.sfTag(dir)}"
 
   /** Schema evolution — the lake-ingest reality the reference's
     * drop-and-recreate never faces: batches written MONTHS apart carry
@@ -897,18 +855,16 @@ object Etl {
     * bug (lost rows, wrong filter) and a merge bug (misaligned
     * columns, wrong null fill) both break parity. */
   def etlSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    val root = schemaEvoDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    graft.Artifacts.publish(root, Some(tag)) {
+    val root = graft.Artifacts.publishFor("schema_evo", dir, Seq("orders")) { out =>
       val ord = Tables.load(s, dir, "orders")
       ord.filter(year(col("o_orderdate")) < 1995)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
-        .write.mode("overwrite").parquet(s"$root/b1")
+        .write.mode("overwrite").parquet(s"$out/b1")
       ord.filter(year(col("o_orderdate")) >= 1995)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderdate"),
           substring(col("o_orderpriority"), 1, 1).as("o_prio_class"))
-        .write.mode("overwrite").parquet(s"$root/b2")
+        .write.mode("overwrite").parquet(s"$out/b2")
     }
     s.read.option("mergeSchema", "true").parquet(s"$root/b1", s"$root/b2")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate",
@@ -921,11 +877,6 @@ object Etl {
       |  CASE WHEN year(o_orderdate) >= 1995
       |       THEN substr(o_orderpriority, 1, 1) END AS o_prio_class
       |FROM orders ORDER BY o_orderkey""".stripMargin
-
-  /** Root for the compaction fixture layouts (one-time per corpus
-    * fingerprint). */
-  private[graft] def compactDir(dir: String): String =
-    s"/tmp/graft_compact_${graft.Tables.sfTag(dir)}"
 
   /** Small-file compaction — the maintenance job every streaming or
     * incremental ingest forces on a lake: thousands of tiny
@@ -942,15 +893,13 @@ object Etl {
     * so any row lost or duplicated by either rewrite breaks parity.
     * EtlSpec proves the file count actually collapsed. */
   def etlCompact(s: SparkSession, dir: String): DataFrame = {
-    val root = compactDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    graft.Artifacts.publish(root, Some(tag)) {
+    val root = graft.Artifacts.publishFor("compact", dir, Seq("orders")) { out =>
       Tables.load(s, dir, "orders")
         .repartition(64)
-        .write.mode("overwrite").parquet(s"$root/frag")
-      s.read.parquet(s"$root/frag")
+        .write.mode("overwrite").parquet(s"$out/frag")
+      s.read.parquet(s"$out/frag")
         .coalesce(2)
-        .write.mode("overwrite").parquet(s"$root/compact")
+        .write.mode("overwrite").parquet(s"$out/compact")
     }
     s.read.parquet(s"$root/compact").orderBy("o_orderkey")
   }
@@ -1054,9 +1003,6 @@ object Etl {
       |     GROUP BY 1 HAVING COUNT(*) > 1)) = 0
       |ORDER BY rule""".stripMargin
 
-  private[graft] def partEvoDir(dir: String): String =
-    s"/tmp/graft_partevo_${ScaleJoins.corpusTag(dir, Seq("orders"))}"
-
   /** Partition-spec evolution — the layout change etl_schema_evolution
     * is to columns: a table's partitioning gets FINER as it grows
     * (year → year/month is the canonical arc: early data was small
@@ -1076,18 +1022,16 @@ object Etl {
     * The oracle is plain SQL over the raw table — two eras, one
     * answer, layout invisible. */
   def etlPartitionEvolution(s: SparkSession, dir: String): DataFrame = {
-    val root = partEvoDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    graft.Artifacts.publish(root, Some(tag)) {
+    val root = graft.Artifacts.publishFor("partevo", dir, Seq("orders")) { out =>
       val base = Tables.load(s, dir, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
         .withColumn("o_month", month(col("o_orderdate")))
       base.filter(col("o_year") <= 1997)
         .write.mode("overwrite").partitionBy("o_year")
-        .parquet(s"$root/era_year")
+        .parquet(s"$out/era_year")
       base.filter(col("o_year") >= 1998)
         .write.mode("overwrite").partitionBy("o_year", "o_month")
-        .parquet(s"$root/era_month")
+        .parquet(s"$out/era_month")
     }
     val uni = s.read.parquet(s"$root/era_year")
       .unionByName(s.read.parquet(s"$root/era_month"))
@@ -1105,9 +1049,6 @@ object Etl {
       |FROM orders
       |WHERE YEAR(o_orderdate) IN (1996, 1999) AND MONTH(o_orderdate) = 2
       |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  private[graft] def badRecordsDir(dir: String): String =
-    s"/tmp/graft_badrec_${ScaleJoins.corpusTag(dir, Seq("orders"))}"
 
   /** Quarantine ingest — the malformed-input reality every production
     * loader faces and the reference handles row-by-row in Python
@@ -1127,9 +1068,7 @@ object Etl {
     * round-trip (to_json → corrupt-aware from_json) on the price
     * sums of surviving rows. */
   def etlBadRecords(s: SparkSession, dir: String): DataFrame = {
-    val root = badRecordsDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    graft.Artifacts.publish(root, Some(tag)) {
+    val root = graft.Artifacts.publishFor("badrec", dir, Seq("orders")) { out =>
       Tables.load(s, dir, "orders")
         .select(col("o_orderkey"),
           to_json(struct(col("o_orderkey"), col("o_orderstatus"),
@@ -1137,7 +1076,7 @@ object Etl {
         .select(when(col("o_orderkey") % 13 === 0,
             expr("substring(line, 1, length(line) - 1)"))
           .otherwise(col("line")).as("value"))
-        .write.mode("overwrite").text(s"$root/jsonl")
+        .write.mode("overwrite").text(s"$out/jsonl")
     }
     val parsed = s.read
       .schema("o_orderkey LONG, o_orderstatus STRING, " +
@@ -1170,9 +1109,6 @@ object Etl {
       |FROM orders WHERE o_orderkey % 13 = 0
       |ORDER BY s""".stripMargin
 
-  private[graft] def manifestRoot(dir: String): String =
-    s"/tmp/graft_manifest_${ScaleJoins.corpusTag(dir, Seq("orders"))}"
-
   /** The pruning predicate's key bounds: dense keys from 0 keep the
     * slice non-empty at every sf, and its selectivity SHARPENS as the
     * corpus grows (47% of keys at sf0.001, 0.5% at sf0.1) — the
@@ -1200,20 +1136,18 @@ object Etl {
     * table. EtlSpec proves the manifest actually prunes (selected
     * files a strict subset) and that pruning loses no rows. */
   def etlManifestPrune(s: SparkSession, dir: String): DataFrame = {
-    val root = manifestRoot(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    graft.Artifacts.publish(root, Some(tag)) {
+    val root = graft.Artifacts.publishFor("manifest", dir, Seq("orders")) { out =>
       Tables.load(s, dir, "orders")
         .repartitionByRange(16, col("o_orderkey"))
         .sortWithinPartitions("o_orderkey")
-        .write.mode("overwrite").parquet(s"$root/data")
-      s.read.parquet(s"$root/data")
+        .write.mode("overwrite").parquet(s"$out/data")
+      s.read.parquet(s"$out/data")
         .groupBy(input_file_name().as("file"))
         .agg(min(col("o_orderkey")).as("key_min"),
           max(col("o_orderkey")).as("key_max"),
           count(lit(1)).as("n_rows"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/manifest")
+        .write.mode("overwrite").parquet(s"$out/manifest")
     }
     s.read.parquet(manifestSelectedFiles(s, root): _*)
       .filter(col("o_orderkey").between(manifestLo, manifestHi))
@@ -1647,8 +1581,6 @@ object Etl {
     * of stored values, and the brand vote picks max-count-then-
     * lexicographic via one struct-ordered min_by, so every output
     * cell is engine-exact. */
-  private[graft] def partLabelsDir(dir: String): String =
-    s"/tmp/graft_part_labels_${graft.Tables.sfTag(dir)}"
 
   /** Part entity-resolution labels as a PUBLISHED artifact (once per
     * corpus fingerprint) — the same split publishedLabels makes for
@@ -1658,15 +1590,13 @@ object Etl {
     * still rebuilds components independently, so the artifact is
     * verified, never trusted. */
   def publishedPartLabels(s: SparkSession, dir: String): DataFrame = {
-    val root = partLabelsDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("part"))
-    graft.Artifacts.publish(root, Some(tag)) {
+    val root = graft.Artifacts.publishFor("part_labels", dir, Seq("part")) { out =>
       val ids = Tables.load(s, dir, "part")
         .select(col("p_partkey").as("doc_id"))
       val pairs = StatsOps.qFuzzyJoin(s, dir)
         .select(col("a_key").as("a"), col("b_key").as("b"))
       DedupOps.clusterLabels(ids, pairs)._1
-        .write.mode("overwrite").parquet(root)
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(root)
   }

@@ -61,9 +61,6 @@ object MultimodalOps {
     * checksum pin the EXACT sampled index set: a decoder that re-read
     * frame 0 n times would no longer match the oracle. */
   def frameChan(base: Int, frame: Int): Int = (base + 29 * frame) % 256
-  def frameRgbSum(id: Long, frame: Int): Long =
-    frameChan(redFor(id), frame) + frameChan(greenFor(id), frame) +
-      frameChan(blueFor(id), frame)
 
   private def solidImage(id: Long, frame: Int = 0): BufferedImage = {
     val img = new BufferedImage(widthFor(id), heightFor(id),
@@ -377,9 +374,6 @@ object MultimodalOps {
        |  CAST(MAX(ABS(v)) AS INTEGER) AS peak
        |FROM v GROUP BY doc_id, n_samples, frame_idx""".stripMargin
 
-  private[graft] def mediaMetaDir(dir: String): String =
-    s"/tmp/graft_media_meta_${graft.Tables.sfTag(dir)}"
-
   /** Publish the binary payloads once per corpus fingerprint (the
     * dedup_lsh_eval / minhashPublish discipline): the codec bytes are
     * the one thing no SQL engine can re-derive, so they become a
@@ -390,16 +384,12 @@ object MultimodalOps {
     * payload_crc rides in the artifact (DuckDB has no CRC32); the
     * suite closes that last column by recomputing CRC32 from the
     * published bytes driver-side (MultimodalSpec). */
-  private[graft] def mediaMetaPublish(s: SparkSession, dir: String): String = {
-    val outDir = mediaMetaDir(dir)
-    val tag = graft.operators.ScaleJoins.corpusTag(dir, Seq("documents"))
-    graft.Artifacts.publish(outDir, Some(tag)) {
+  private[graft] def mediaMetaPublish(s: SparkSession, dir: String): String =
+    graft.Artifacts.publishFor("media_meta", dir, Seq("documents")) { out =>
       mediaRows(s, dir).toDF()
         .select("doc_id", "payload", "payload_crc")
-        .write.mode("overwrite").parquet(s"$outDir/payloads")
+        .write.mode("overwrite").parquet(s"$out/payloads")
     }
-    outDir
-  }
 
   /** Binary payload + metadata extraction + partition-batched decode
     * — [T]→[O] in r12: the payloads publish once per corpus and the
@@ -488,7 +478,7 @@ object MultimodalOps {
     s"""$geomCte,
        |p AS (
        |  SELECT doc_id, payload, payload_crc
-       |  FROM read_parquet('/tmp/graft_media_meta___SFTAG__/payloads/*.parquet'))
+       |  FROM read_parquet('${graft.Artifacts.oracleRoot("media_meta")}/payloads/*.parquet'))
        |SELECT r.doc_id,
        |  CAST(octet_length(p.payload) AS INTEGER) AS n_bytes,
        |  hex(p.payload)[1:8] AS magic_hex,

@@ -62,18 +62,11 @@ object ScaleJoins {
       |GROUP BY 1, 2
       |ORDER BY 1, 2""".stripMargin
 
-  /** Bucketed co-located join: lineitem and orders are written ONCE
-    * as 8-bucket tables on the order key, then joined exchange-free —
-    * the recurring O(data) shuffle of a fact-fact join becomes a
-    * one-time layout cost (at 100 TB, THE strategy when the same join
-    * key repeats across a workload). The merge hint forces the
-    * sort-merge path so the bucket layout, not a broadcast, carries
-    * the join at every scale; the only Exchange in the plan is the
-    * 3-group final aggregate. */
-  /** Corpus identity for the one-time layout: path PLUS the source
+  /** Content identity of `tables` in `dir`: path PLUS the source
     * files' byte sizes and mtimes — a regenerated fixture at the same
-    * path must rebuild the bucketed tables, not silently reuse a
-    * stale layout persisted in the warehouse by an earlier session.
+    * path must rebuild the bucketed tables and every published
+    * artifact (`Artifacts.contentTag`), not silently reuse a stale
+    * layout persisted by an earlier session.
     * Digested with the shared 64-bit SHA-256 tag (Tables.digest64),
     * not String.hashCode: a 32-bit collision on this freshness token
     * would read as a false "fresh" after a fixture regeneration. */
@@ -88,6 +81,14 @@ object ScaleJoins {
     Tables.digest64(dir + "|" + sig)
   }
 
+  /** Bucketed co-located join: lineitem and orders are written ONCE
+    * as 8-bucket tables on the order key, then joined exchange-free —
+    * the recurring O(data) shuffle of a fact-fact join becomes a
+    * one-time layout cost (at 100 TB, THE strategy when the same join
+    * key repeats across a workload). The merge hint forces the
+    * sort-merge path so the bucket layout, not a broadcast, carries
+    * the join at every scale; the only Exchange in the plan is the
+    * 3-group final aggregate. */
   def qBucketJoin(s: SparkSession, dir: String): DataFrame = {
     // layout is ONE-TIME per corpus: table names carry the corpus
     // fingerprint, and an already-laid-out table is reused — repeated
@@ -115,10 +116,6 @@ object ScaleJoins {
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Root of the one-time hive-partitioned orders layout. */
-  private[graft] def partLayoutDir(dir: String): String =
-    s"/tmp/graft_part_orders_${corpusTag(dir, Seq("orders"))}"
-
   /** Partition-pruned scan — the THIRD scale-layout strategy beside
     * salting and bucketing, and the dominant one at 100 TB: facts land
     * hive-partitioned by a time key, and a query over one period
@@ -132,13 +129,11 @@ object ScaleJoins {
     * invisible in the answer — the oracle is plain SQL over the raw
     * table. */
   def qPartitionPrune(s: SparkSession, dir: String): DataFrame = {
-    val layout = partLayoutDir(dir)
-    val tag = corpusTag(dir, Seq("orders"))
-    graft.Artifacts.publish(layout, Some(tag)) {
+    val layout = graft.Artifacts.publishFor("part_orders", dir, Seq("orders")) { out =>
       Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"),
           year(col("o_orderdate")).as("o_year"))
-        .write.mode("overwrite").partitionBy("o_year").parquet(layout)
+        .write.mode("overwrite").partitionBy("o_year").parquet(out)
     }
     s.read.parquet(layout)
       .filter(col("o_year") === 1996)
@@ -155,10 +150,6 @@ object ScaleJoins {
       |FROM orders
       |WHERE YEAR(o_orderdate) = 1996
       |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Root of the one-time z-ordered orders layout. */
-  private[graft] def zLayoutDir(dir: String): String =
-    s"/tmp/graft_zorder_orders_${corpusTag(dir, Seq("orders"))}"
 
   /** Morton/z-value of two 16-bit lanes: bit i of `a` lands at 2i,
     * bit i of `b` at 2i+1 — points close in BOTH dimensions get
@@ -216,13 +207,11 @@ object ScaleJoins {
     * layout is invisible in the answer: the oracle is plain SQL over
     * the raw table. */
   def qZorderPrune(s: SparkSession, dir: String): DataFrame = {
-    val layout = zLayoutDir(dir)
-    val tag = corpusTag(dir, Seq("orders"))
-    graft.Artifacts.publish(layout, Some(tag)) {
+    val layout = graft.Artifacts.publishFor("zorder_orders", dir, Seq("orders")) { out =>
       zorderFrame(Tables.load(s, dir, "orders"))
         .write.mode("overwrite")
         .option("maxRecordsPerFile", 2000)
-        .parquet(layout)
+        .parquet(out)
     }
     s.read.parquet(layout)
       .filter(zQueryFilter)
@@ -306,9 +295,8 @@ object ScaleJoins {
     * re-registration is skipped when analysis already rewrites the
     * definition (same-session repeat). */
   private[graft] def ensureMv(s: SparkSession, dir: String): String = {
-    val tag = corpusTag(dir, Seq("orders"))
-    val path = s"/tmp/graft_mv_orders_year_$tag.parquet"
-    graft.Artifacts.publish(path, None)(mvDefinition(s, dir).write.parquet(path))
+    val path = graft.Artifacts.publishFor("mv_orders_year", dir, Seq("orders"))(
+      mvDefinition(s, dir).write.parquet(_))
     val defPlan = mvDefinition(s, dir).queryExecution.analyzed
     defPlan match {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
@@ -362,9 +350,8 @@ object ScaleJoins {
   /** One-time (year, month) MV build per corpus fingerprint +
     * catalog registration — same contract as [[ensureMv]]. */
   private[graft] def ensureMonthMv(s: SparkSession, dir: String): String = {
-    val tag = corpusTag(dir, Seq("orders"))
-    val path = s"/tmp/graft_mv_orders_month_$tag.parquet"
-    graft.Artifacts.publish(path, None)(mvMonthDefinition(s, dir).write.parquet(path))
+    val path = graft.Artifacts.publishFor("mv_orders_month", dir, Seq("orders"))(
+      mvMonthDefinition(s, dir).write.parquet(_))
     mvMonthDefinition(s, dir).queryExecution.analyzed match {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
         graft.plans.MvCatalog.register(a, path)
@@ -461,14 +448,11 @@ object ScaleJoins {
     * newest arrivals landed, published once per corpus fingerprint
     * like every layout artifact. */
   private[graft] def ensureStaleMv(s: SparkSession, dir: String): String = {
-    val tag = corpusTag(dir, Seq("orders"))
-    val path = s"/tmp/graft_mv_stale_month_$tag.parquet"
-    graft.Artifacts.publish(path, None) {
+    graft.Artifacts.publishFor("mv_stale_month", dir, Seq("orders")) { out =>
       monthPartials(Tables.load(s, dir, "orders")
         .filter(col("o_orderdate") < lit(mvRefreshCutoff).cast(TimestampType)))
-        .write.parquet(path)
+        .write.parquet(out)
     }
-    path
   }
 
   /** Incremental MV maintenance — the missing half of the MV story
@@ -532,9 +516,8 @@ object ScaleJoins {
         count(lit(1)).as("n_orders"))
 
   private[graft] def ensureStarMv(s: SparkSession, dir: String): String = {
-    val tag = corpusTag(dir, Seq("orders", "customer"))
-    val path = s"/tmp/graft_mv_star_nation_year_$tag.parquet"
-    graft.Artifacts.publish(path, None)(mvStarDefinition(s, dir).write.parquet(path))
+    val path = graft.Artifacts.publishFor("mv_star_nation_year", dir,
+      Seq("orders", "customer"))(mvStarDefinition(s, dir).write.parquet(_))
     mvStarDefinition(s, dir).queryExecution.analyzed match {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
         graft.plans.MvCatalog.register(a, path)
@@ -586,9 +569,7 @@ object ScaleJoins {
     * entirely. Oracle = full recompute over the surviving rows, so
     * subtract-and-patch must be bit-identical to rebuild. */
   def qMvRetract(s: SparkSession, dir: String): DataFrame = {
-    ensureMonthMv(s, dir)
-    val tag = corpusTag(dir, Seq("orders"))
-    val mv = s.read.parquet(s"/tmp/graft_mv_orders_month_$tag.parquet")
+    val mv = s.read.parquet(ensureMonthMv(s, dir))
       .withColumnRenamed("min_cents", "mv_min")
       .withColumnRenamed("max_cents", "mv_max")
     val orders = Tables.load(s, dir, "orders")
@@ -659,9 +640,8 @@ object ScaleJoins {
         max(expr(centsExpr)).as("max_cents"))
 
   private[graft] def ensureDayMv(s: SparkSession, dir: String): String = {
-    val tag = corpusTag(dir, Seq("orders"))
-    val path = s"/tmp/graft_mv_orders_day_$tag.parquet"
-    graft.Artifacts.publish(path, None)(mvDayDefinition(s, dir).write.parquet(path))
+    val path = graft.Artifacts.publishFor("mv_orders_day", dir, Seq("orders"))(
+      mvDayDefinition(s, dir).write.parquet(_))
     mvDayDefinition(s, dir).queryExecution.analyzed match {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
         graft.plans.MvCatalog.register(a, path)
@@ -710,14 +690,11 @@ object ScaleJoins {
     * before the newest fact arrivals, published once per corpus
     * fingerprint. */
   private[graft] def ensureStaleStarMv(s: SparkSession, dir: String): String = {
-    val tag = corpusTag(dir, Seq("orders", "customer"))
-    val path = s"/tmp/graft_mv_stale_star_$tag.parquet"
-    graft.Artifacts.publish(path, None) {
+    graft.Artifacts.publishFor("mv_stale_star", dir, Seq("orders", "customer")) { out =>
       starPartials(s, dir,
         col("o_orderdate") < lit(mvRefreshCutoff).cast(TimestampType))
-        .write.parquet(path)
+        .write.parquet(out)
     }
-    path
   }
 
   /** Incremental maintenance of a JOIN (star) MV — q_mv_refresh's
@@ -840,13 +817,12 @@ object ScaleJoins {
     val defn = graft.plans.MvAdvisor.definitionOf(wl(i)).getOrElse(
       throw new IllegalStateException(
         "AutoMV: recommended workload query is not an Aggregate"))
-    // the publish path is keyed by CORPUS fingerprint AND definition
-    // canonical-text hash: the recommendation is DERIVED from the
-    // workload, so unlike the fixed named definitions (ensureMv…), a
-    // workload edit can change it within one corpus — without the
-    // definition key, publish would skip on the existing artifact
-    // and register the new definition against the STALE summary
-    val tag = corpusTag(dir, Seq("orders"))
+    // the artifact name carries the definition's canonical-text hash:
+    // the recommendation is DERIVED from the workload, so unlike the
+    // fixed named definitions (ensureMv…), a workload edit can change
+    // it within one corpus — without the definition key, publish
+    // would skip on the existing artifact and register the new
+    // definition against the STALE summary
     // cryptographic digest, not String.hashCode: a 32-bit collision
     // between two recommended definitions on the same corpus would
     // recreate exactly the stale-summary registration this key exists
@@ -854,11 +830,11 @@ object ScaleJoins {
     val defTag = java.security.MessageDigest.getInstance("SHA-256")
       .digest(defn.canonicalized.toString.getBytes("UTF-8"))
       .take(8).map(b => f"$b%02x").mkString
-    val path = s"/tmp/graft_mv_auto_${defTag}_$tag.parquet"
     // publishing the (possibly already-rewritten) frame is fine — its
     // ROWS are the summary either way; the catalog key must come from
     // the raw definition
-    graft.Artifacts.publish(path, None)(wl(i).write.parquet(path))
+    val path = graft.Artifacts.publishFor(s"mv_auto_$defTag", dir, Seq("orders"))(
+      wl(i).write.parquet(_))
     graft.plans.MvCatalog.register(defn, path)
     path
   }

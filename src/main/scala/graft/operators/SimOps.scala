@@ -234,7 +234,7 @@ object SimOps {
     assignTo(c, cachedCentroids(s, dir))
   }
 
-  /** Published location of the refined centroid matrix — the IVF
+  /** The refined centroid matrix, published — the IVF
     * "model" written as parquet on every sim_ivf_topk run, exactly
     * like MLlib persists a KMeansModel. The DuckDB oracle reads it
     * back (read_parquet) and rebuilds assignment/probe/rank from the
@@ -243,12 +243,10 @@ object SimOps {
     * (VectorMean merge order), but ranking against published
     * centroids is. The path is PER-CORPUS (a run against another sf
     * dir — a bench, a spec — must not clobber the model the dumped
-    * oracle SQL references); the static SQL carries Verify's
-    * `__SFTAG__` placeholder, substituted at dump time. */
-  def centroidDumpPath(dir: String): String =
-    s"/tmp/graft_ivf_centroids_${graft.Tables.sfTag(dir)}.parquet"
-
-  /** The published model is build-once-then-load: if the per-corpus
+    * oracle SQL references); the static SQL reads it at
+    * `Artifacts.oracleRoot("ivf_centroids")`.
+    *
+    * The model is build-once-then-load: if the per-corpus
     * parquet already exists, the centroids are READ BACK from it and
     * used for ranking — Lloyd means are not bit-reproducible across
     * JVMs/partition counts, so a later run (a Bench with different
@@ -261,10 +259,9 @@ object SimOps {
     * parquet doubles round-trip exactly, so they equal the refined
     * ones. */
   def publishedCentroids(s: SparkSession, dir: String): Centroids = {
-    val path = centroidDumpPath(dir)
-    graft.Artifacts.publish(path, None) {
-      cachedCentroids(s, dir).toDF(s).coalesce(1).write.parquet(path)
-    }
+    // frozen, not content-tagged: see above
+    val path = graft.Artifacts.publishFrozen("ivf_centroids", dir)(
+      cachedCentroids(s, dir).toDF(s).coalesce(1).write.parquet(_))
     val rows = s.read.parquet(path).collect().sortBy(_.getInt(0))
     Centroids(
       rows.map(_.getInt(0)),
@@ -382,23 +379,21 @@ object SimOps {
   val pqSub: Int = embedDim / pqM
   val pqK = 16
 
-  def pqCodebookPath(dir: String): String =
-    s"/tmp/graft_pq_codebooks_${graft.Tables.sfTag(dir)}.parquet"
-
   /** Published per-subspace codebooks (m, c_id, cv, cnrm2),
     * build-once-then-load exactly like publishedCentroids: Lloyd
     * means aren't bit-reproducible across runs, so later runs must
     * encode/score against the SAME doubles the dumped oracle reads.
     * nrms holds SQUARED norms (the L2-mode contract). */
   def publishedCodebooks(s: SparkSession, dir: String): Array[Centroids] = {
-    val path = pqCodebookPath(dir)
-    graft.Artifacts.publish(path, None) {
+    // frozen, not content-tagged: a rebuild would not reproduce the
+    // codebooks the dumped oracle reads
+    val path = graft.Artifacts.publishFrozen("pq_codebooks", dir) { out =>
       val books = buildCodebooks(corpus(s, dir), pqM, pqK)
       import s.implicits._
       books.zipWithIndex.toSeq.flatMap { case (b, m) =>
         b.ids.indices.map(i => (m, b.ids(i), b.vecs(i).toSeq, b.nrms(i)))
       }.toDF("m", "c_id", "cv", "cnrm2")
-        .coalesce(1).write.parquet(path)
+        .coalesce(1).write.parquet(out)
     }
     val rows = s.read.parquet(path).collect()
     (0 until pqM).toArray.map { m =>
@@ -634,9 +629,9 @@ object SimOps {
        |  FROM embeddings WHERE vec_id % 10 = 0),
        |bn AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM b),
        |cents AS (SELECT c_id, cv, cnrm FROM
-       |  read_parquet('/tmp/graft_ivf_centroids___SFTAG__.parquet/*.parquet')),
+       |  read_parquet('${graft.Artifacts.oracleRoot("ivf_centroids")}/*.parquet')),
        |cb AS (SELECT m, c_id, cv, cnrm2 FROM
-       |  read_parquet('/tmp/graft_pq_codebooks___SFTAG__.parquet/*.parquet')),
+       |  read_parquet('${graft.Artifacts.oracleRoot("pq_codebooks")}/*.parquet')),
        |assigned AS (
        |  SELECT vec_id, c_id AS centroid FROM (
        |    SELECT bn.vec_id, ct.c_id,
@@ -673,9 +668,9 @@ object SimOps {
        |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
        |  FROM embeddings),
        |cents AS (SELECT c_id, cv, cnrm FROM
-       |  read_parquet('/tmp/graft_ivf_centroids___SFTAG__.parquet/*.parquet')),
+       |  read_parquet('${graft.Artifacts.oracleRoot("ivf_centroids")}/*.parquet')),
        |cb AS (SELECT m, c_id, cv, cnrm2 FROM
-       |  read_parquet('/tmp/graft_pq_codebooks___SFTAG__.parquet/*.parquet')),
+       |  read_parquet('${graft.Artifacts.oracleRoot("pq_codebooks")}/*.parquet')),
        |assigned AS (
        |  SELECT vec_id, c_id AS centroid FROM (
        |    SELECT c.vec_id, ct.c_id,
@@ -755,7 +750,7 @@ object SimOps {
     s"""WITH c AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |cb AS (SELECT m, c_id, cv, cnrm2
-       |  FROM read_parquet('/tmp/graft_pq_codebooks___SFTAG__.parquet/*.parquet')),
+       |  FROM read_parquet('${graft.Artifacts.oracleRoot("pq_codebooks")}/*.parquet')),
        |ms AS (SELECT unnest(range(0, $pqM)) AS m),
        |sub AS (SELECT c.vec_id, ms.m,
        |  c.v[ms.m*$pqSub+1 : ms.m*$pqSub+$pqSub] AS sv FROM c CROSS JOIN ms),
@@ -818,10 +813,10 @@ object SimOps {
        |    FROM c CROSS JOIN cents ct) WHERE rn = 1)""".stripMargin
 
   /** The published-centroid parquet CTE body (resolved per corpus by
-    * Verify's __SFTAG__ substitution). */
+    * Verify, see `Artifacts.oracleSqlFor`). */
   private val publishedCentsCte: String =
     "SELECT c_id, cv, cnrm FROM " +
-      "read_parquet('/tmp/graft_ivf_centroids___SFTAG__.parquet/*.parquet')"
+      s"read_parquet('${graft.Artifacts.oracleRoot("ivf_centroids")}/*.parquet')"
 
   private def ivfOracleSql(centsCte: String): String =
     s"""WITH ${ivfAssignSql(centsCte)},
@@ -848,9 +843,8 @@ object SimOps {
     s"SELECT vec_id AS c_id, v AS cv, nrm AS cnrm FROM c WHERE vec_id < $nCentroids")
 
   /** Lloyd-refined centroids come from the published model parquet —
-    * the exact doubles the Spark query ranked against. `__SFTAG__`
-    * resolves to the verified corpus's tag when Verify dumps the
-    * oracle json. */
+    * the exact doubles the Spark query ranked against, at the root
+    * Verify resolves for the verified corpus. */
   val simIvfTopkSql: String = ivfOracleSql(publishedCentsCte)
 
   /** Recall@k of the Lloyd-refined IVF index against the exact scan —
@@ -983,7 +977,7 @@ object SimOps {
        |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
        |  FROM embeddings),
        |cents AS (SELECT c_id, cv, cnrm FROM
-       |  read_parquet('/tmp/graft_ivf_centroids___SFTAG__.parquet/*.parquet')),
+       |  read_parquet('${graft.Artifacts.oracleRoot("ivf_centroids")}/*.parquet')),
        |assigned AS (
        |  SELECT vec_id, v, nrm, c_id AS centroid FROM (
        |    SELECT c.vec_id, c.v, c.nrm, ct.c_id,

@@ -1076,7 +1076,7 @@ object TextOps {
     * table. */
   private def bpeMerges(s: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
     bpeMergeCache.computeIfAbsent(
-      ScaleJoins.corpusTag(dir, Seq("documents")), _ => {
+      graft.Artifacts.contentTag(dir, Seq("documents")), _ => {
         var vocab = bpeVocab0(s, dir).localCheckpoint()
         val merges =
           scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
@@ -1729,9 +1729,6 @@ object TextOps {
   private[graft] val bm25Queries = 5
   private val bm25TopK = 3
 
-  private[graft] def bm25StatsPath(dir: String): String =
-    s"/tmp/graft_bm25_${graft.Tables.sfTag(dir)}.parquet"
-
   /** Publish the per-term IDF table once per corpus: idf =
     * ln(1 + (N − df + ½)/(df + ½)) is computed ONE time in ONE
     * engine and both sides READ the same doubles thereafter —
@@ -1743,10 +1740,8 @@ object TextOps {
     * fixture at the same path changes: unlike the IVF centroids
     * (frozen, because Lloyd isn't bit-reproducible), the IDF table is
     * a deterministic function of the corpus, so rebuilding is safe. */
-  private def ensureBm25Stats(s: SparkSession, dir: String): String = {
-    val path = bm25StatsPath(dir)
-    graft.Artifacts.publish(path,
-      Some(graft.operators.ScaleJoins.corpusTag(dir, Seq("documents")))) {
+  private def ensureBm25Stats(s: SparkSession, dir: String): String =
+    graft.Artifacts.publishFor("bm25", dir, Seq("documents")) { out =>
       val docs = graft.Tables.load(s, dir, "documents")
         .select(col("doc_id"), toks(col("text")).as("w"))
       val n = docs.count().toDouble
@@ -1755,10 +1750,8 @@ object TextOps {
         .select(col("term"), log(lit(1.0) +
           (lit(n) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
           .as("idf"))
-        .write.parquet(path)
+        .write.parquet(out)
     }
-    path
-  }
 
   /** BM25 retrieval — THE lexical ranking baseline every search and
     * RAG stack measures against (sim_hybrid_rrf's lexical arm is raw
@@ -1843,7 +1836,7 @@ object TextOps {
       |    COUNT(*) AS n_docs FROM d),
       |idf AS (
       |  SELECT term, idf
-      |  FROM read_parquet('/tmp/graft_bm25___SFTAG__.parquet/*.parquet')),
+      |  FROM read_parquet('${graft.Artifacts.oracleRoot("bm25")}/*.parquet')),
       |q AS (
       |  SELECT DISTINCT doc_id AS q_id, u.term
       |  FROM d, unnest(w) AS u(term) WHERE doc_id < $bm25Queries),

@@ -20,21 +20,21 @@ import graft.schema._
   */
 object Projector {
 
-  /** Project a table per its change-set: skip columns, rename the
-    * rest, optionally cast to rule-mapped types. */
+  /** Project a table per its change-set: each live column of the
+    * table def `SchemaRules.applyTable` (then `applyNode`, given a
+    * `node`) makes of `original`, under its output name, cast to the
+    * Spark type of its rule-mapped type when the rules changed the
+    * type — so the dump holds the type the DDL declares. */
   def project(df: DataFrame, original: TableDef, ch: TableChange,
       node: Option[NodeRules] = None): DataFrame = {
-    val projected = original.columns.filterNot { c =>
-      c.skip || ch.columns.get(c.name).exists(_.skip)
-    }.map { c =>
-      val cc = ch.columns.get(c.name)
-      val outName = cc.flatMap(_.rename).getOrElse(c.name)
-      val mapped = cc.flatMap(_.dataType)
-        .orElse(node.map(n => n.mapType(c).dataType).filter(_ != c.dataType))
-      mapped match {
-        case Some(t) => col(c.name).cast(Introspect.sparkType(t)).as(outName)
-        case None => col(c.name).as(outName)
-      }
+    val changed = SchemaRules.applyTable(original,
+      SchemaChanges(Map(original.name -> ch.copy(skip = false)))).get
+    val td = node.fold(changed)(SchemaRules.applyNode(changed, _))
+    val projected = original.columns.zip(td.columns).collect {
+      case (o, c) if !c.skip =>
+        val src = col(o.name)
+        (if (c.dataType == o.dataType) src
+         else src.cast(Introspect.sparkType(c.dataType))).as(c.name)
     }
     df.select(projected: _*)
   }

@@ -104,7 +104,8 @@ object Introspect {
     * reads from information_schema.statistics (incl. composite
     * indexes, MysqlParser.py:225-258) — parquet has no native index
     * catalog, so the caller supplies them the same way it supplies
-    * `pk`. */
+    * `pk`. A `pk` column is NOT NULL whatever the parquet field says,
+    * as information_schema reports a primary key's columns. */
   def fromStruct(name: String, st: StructType,
       pk: Seq[String] = Nil, autoIncrement: Option[Long] = None,
       indexes: Seq[IndexDef] = Nil): TableDef =
@@ -113,7 +114,7 @@ object Introspect {
       columns = st.fields.toSeq.map { f =>
         val t = neutralType(f.dataType)
         ColumnDef(
-          name = f.name, dataType = t, nullable = f.nullable,
+          name = f.name, dataType = t, nullable = f.nullable && !pk.contains(f.name),
           size = f.dataType match {
             case d: DecimalType => Some(s"${d.precision},${d.scale}")
             case _ => None

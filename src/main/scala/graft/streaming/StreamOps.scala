@@ -557,28 +557,6 @@ object StreamOps {
     }
   }
 
-  /** Batch twin of streamFunnelTimeout for parity checks. */
-  def batchFunnelTimeout(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = graft.Tables.load(spark, sfDir, "events")
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id").as("c_eid"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-    clicks.join(purchases,
-        col("c_user") === col("p_user") &&
-          col("p_ts") > col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 2 HOURS"), "left_outer")
-      // verdict per click EVENT (event_id), not per distinct timestamp —
-      // duplicate (user, ts) clicks each count, as they do in the stream
-      .groupBy(col("c_user"), col("c_eid"))
-      .agg(max(col("p_ts").isNotNull).as("m"))
-      .groupBy(col("c_user").as("user_id"))
-      .agg(sum(when(col("m"), 1L).otherwise(0L)).as("n_matched"),
-        sum(when(col("m"), 0L).otherwise(1L)).as("n_orphans"))
-      .orderBy("user_id")
-  }
-
   /** Streaming exact deduplication — the streaming twin of the dedup
     * family: watermarked dropDuplicates holds one state record per
     * distinct key and evicts keys older than the watermark, so state
@@ -617,8 +595,6 @@ object StreamOps {
     * directories written in sequence — v1 updates, v2 deletes, v3
     * inserts, the SAME deterministic derivation etl_cdc_upsert
     * applies in one batch — each row carrying (op, version). */
-  private[graft] def cdcLogDir(sfDir: String): String =
-    s"/tmp/graft_cdc_log_${graft.operators.ScaleJoins.corpusTag(sfDir, Seq("customer"))}"
 
   private[graft] val cdcLogSchema: StructType = StructType(Seq(
     StructField("c_custkey", LongType),
@@ -641,14 +617,11 @@ object StreamOps {
   private val cdcLogTsSchema: StructType =
     StructType(cdcLogSchema.fields :+ StructField("change_ts", TimestampType))
 
-  private[graft] def writeCdcLog(s: SparkSession, sfDir: String): Unit = {
-    val root = cdcLogDir(sfDir)
-    // layout suffix: the r13 change_ts column must force a republish
-    // of logs published by older binaries (content check only — the
-    // DIR name stays keyed on corpus identity alone)
-    val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("customer")) +
-      "|layout=ts1"
-    graft.Artifacts.publish(root, Some(tag)) {
+  /** Publishes the CDC log; returns its root. */
+  private[graft] def writeCdcLog(s: SparkSession, sfDir: String): String =
+    // layout ts1: the r13 change_ts column must force a republish of
+    // logs published by older binaries
+    graft.Artifacts.publishFor("cdc_log", sfDir, Seq("customer"), layout = "ts1") { root =>
       val base = graft.Tables.load(s, sfDir, "customer")
       def stamp(df: DataFrame, op: String, v: Int): DataFrame =
         df.withColumn("op", lit(op)).withColumn("version", lit(v))
@@ -678,7 +651,6 @@ object StreamOps {
       b2.coalesce(1).write.mode("overwrite").parquet(s"$root/b2")
       b3.coalesce(1).write.mode("overwrite").parquet(s"$root/b3")
     }
-  }
 
   /** Streaming CDC apply — the consumer side of change-data-capture:
     * a stream of versioned change images (the Debezium/binlog shape;
@@ -721,8 +693,6 @@ object StreamOps {
     * two deterministic update waves etl_scd2 derives in batch, one
     * directory per wave so maxFilesPerTrigger=1 replays them as two
     * real micro-batches. */
-  private def scd2LogDir(sfDir: String): String =
-    s"/tmp/graft_scd2_log_${graft.operators.ScaleJoins.corpusTag(sfDir, Seq("customer"))}"
 
   private val scd2LogSchema: StructType = StructType(Seq(
     StructField("c_custkey", LongType),
@@ -730,10 +700,8 @@ object StreamOps {
     StructField("c_acctbal", DoubleType),
     StructField("c_mktsegment", StringType)))
 
-  private def writeScd2Log(s: SparkSession, sfDir: String): Unit = {
-    val root = scd2LogDir(sfDir)
-    val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("customer"))
-    graft.Artifacts.publish(root, Some(tag)) {
+  private def writeScd2Log(s: SparkSession, sfDir: String): String =
+    graft.Artifacts.publishFor("scd2_log", sfDir, Seq("customer")) { root =>
       val base = graft.Tables.load(s, sfDir, "customer")
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       val w1 = base.filter(col("c_custkey") % 10 === 1)
@@ -750,7 +718,6 @@ object StreamOps {
       w2.select(cols.map(col): _*)
         .coalesce(1).write.mode("overwrite").parquet(s"$root/b2")
     }
-  }
 
   /** The per-micro-batch SCD2 MERGE: version-aware per-key interval
     * REBUILD. Affected keys (left-semi on the batch's key set) have
@@ -1161,8 +1128,7 @@ object StreamOps {
 
   def streamScd2(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
-    writeScd2Log(spark, sfDir)
-    dimStoreRun(spark, "scd2", scd2LogSchema, scd2LogDir(sfDir),
+    dimStoreRun(spark, "scd2", scd2LogSchema, writeScd2Log(spark, sfDir),
       graft.Tables.load(spark, sfDir, "customer")
         .select(col("c_custkey"), lit(0).as("eff_from_ver"),
           lit(null).cast(IntegerType).as("eff_to_ver"),
@@ -1174,8 +1140,7 @@ object StreamOps {
 
   def streamCdcApply(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
-    writeCdcLog(spark, sfDir)
-    dimStoreRun(spark, "cdc_apply", cdcLogSchema, cdcLogDir(sfDir),
+    dimStoreRun(spark, "cdc_apply", cdcLogSchema, writeCdcLog(spark, sfDir),
       cdcInit(spark, sfDir), cdcMerge) { (store, _) =>
       liveRows(readDimStore(spark, store)).orderBy("c_custkey")
     }
@@ -1199,8 +1164,7 @@ object StreamOps {
     * spec-asserted with a GC-racing-a-reader case. */
   def streamDimVacuum(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
-    writeCdcLog(spark, sfDir)
-    dimStoreRun(spark, "dim_vacuum", cdcLogSchema, cdcLogDir(sfDir),
+    dimStoreRun(spark, "dim_vacuum", cdcLogSchema, writeCdcLog(spark, sfDir),
       cdcInit(spark, sfDir), cdcMerge, compactEvery = 2) { (store, ckpt) =>
       // the retention decision as data: with 3 waves at cadence 2 some
       // generation ≥ g1 is always full (either a wave covered every
@@ -1238,8 +1202,7 @@ object StreamOps {
     * same tradeoff as Delta VACUUM vs time travel). */
   def streamDimAsof(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
-    writeCdcLog(spark, sfDir)
-    dimStoreRun(spark, "dim_asof", cdcLogSchema, cdcLogDir(sfDir),
+    dimStoreRun(spark, "dim_asof", cdcLogSchema, writeCdcLog(spark, sfDir),
       cdcInit(spark, sfDir), cdcMerge, compactEvery = 2,
       requireWave = true) { (store, _) =>
       // all four generations must exist and some full snapshot must sit
@@ -1281,8 +1244,7 @@ object StreamOps {
     * data movement. */
   def streamDimAsofTs(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
-    writeCdcLog(spark, sfDir)
-    dimStoreRun(spark, "dim_asof_ts", cdcLogTsSchema, cdcLogDir(sfDir),
+    dimStoreRun(spark, "dim_asof_ts", cdcLogTsSchema, writeCdcLog(spark, sfDir),
       cdcInit(spark, sfDir), cdcMerge, compactEvery = 2, requireWave = true,
       eventTimeMicros = Some(cdcT0Micros)) { (store, _) =>
       // probe instants (micros past T0): 0 = the initial load, +90 min
@@ -1517,19 +1479,15 @@ object StreamOps {
     * log, whose merge is version-aware), so each directory's files
     * get explicitly increasing mtimes — the file source's ordering
     * key — instead of relying on write-latency gaps. */
-  private[graft] def lateLogDir(sfDir: String): String =
-    s"/tmp/graft_late_log_${graft.operators.ScaleJoins.corpusTag(sfDir, Seq("events"))}"
 
   private val lateLogSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("event_type", StringType),
     StructField("ts", TimestampType)))
 
-  private def writeLateLog(s: SparkSession, sfDir: String): Unit = {
+  private def writeLateLog(s: SparkSession, sfDir: String): String = {
     import java.nio.file.{Files, Paths}
-    val root = lateLogDir(sfDir)
-    val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("events"))
-    graft.Artifacts.publish(root, Some(tag)) {
+    graft.Artifacts.publishFor("late_log", sfDir, Seq("events")) { root =>
       val ev = graft.Tables.load(s, sfDir, "events")
         .select(col("event_id"), col("event_type"), col("ts"))
       (0 until 3).foreach { b =>
@@ -1569,11 +1527,11 @@ object StreamOps {
     val spark = streamingSession(parent)
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    writeLateLog(spark, sfDir)
+    val log = writeLateLog(spark, sfDir)
     val name = s"stream_late_${runId.incrementAndGet()}"
     val evs = spark.readStream.schema(lateLogSchema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(s"${lateLogDir(sfDir)}/b*")
+      .parquet(s"$log/b*")
       .select(col("event_type"), unix_micros(col("ts")).as("us"))
       .as[LateEv]
     val counted = evs.groupByKey(_.event_type)
@@ -1807,18 +1765,14 @@ object StreamOps {
     * maxFilesPerTrigger=1 replays them as three real micro-batches.
     * Each row carries its WAVE id — the load-id discipline that makes
     * the additive merge idempotent under redelivery. */
-  private def mvLogDir(sfDir: String): String =
-    s"/tmp/graft_mvlog_${graft.operators.ScaleJoins.corpusTag(sfDir, Seq("orders"))}"
 
   private[graft] val mvLogSchema: StructType = StructType(Seq(
     StructField("wave", IntegerType),
     StructField("o_orderdate", TimestampType),
     StructField("o_totalprice", DoubleType)))
 
-  private def writeMvLog(s: SparkSession, sfDir: String): Unit = {
-    val root = mvLogDir(sfDir)
-    val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("orders"))
-    graft.Artifacts.publish(root, Some(tag)) {
+  private def writeMvLog(s: SparkSession, sfDir: String): String =
+    graft.Artifacts.publishFor("mvlog", sfDir, Seq("orders")) { root =>
       val delta = graft.Tables.load(s, sfDir, "orders")
         .filter(col("o_orderdate") >=
           lit(graft.operators.ScaleJoins.mvRefreshCutoff).cast(TimestampType))
@@ -1833,7 +1787,6 @@ object StreamOps {
           .coalesce(1).write.mode("overwrite").parquet(s"$root/b$w")
       } finally delta.unpersist()
     }
-  }
 
   /** Per-micro-batch MV maintenance MERGE. The store holds PER-WAVE
     * partials at (yr, mo, wave) grain — the load-id layout that buys
@@ -1890,7 +1843,7 @@ object StreamOps {
     * arrival order — same summary either way). */
   def streamMvMaintain(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
-    writeMvLog(spark, sfDir)
+    val log = writeMvLog(spark, sfDir)
     graft.Artifacts.withRunDir("mv_maintain") { run =>
       spark.read.parquet(
           graft.operators.ScaleJoins.ensureStaleMv(spark, sfDir))
@@ -1901,7 +1854,7 @@ object StreamOps {
       val last = new AtomicLong(0L)
       val arrivals = spark.readStream.schema(mvLogSchema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(s"${mvLogDir(sfDir)}/b*")
+        .parquet(s"$log/b*")
       runAvailableNow(arrivals.writeStream
         // retry-safe generations: the store index is Spark's batchId
         // (Long end to end — never truncated; stable across
@@ -1938,8 +1891,6 @@ object StreamOps {
     * discipline) and the full before-image (key, date, price) — the
     * Debezium delete shape: the consumer needs the image to know
     * which partials to subtract. */
-  private def retractLogDir(sfDir: String): String =
-    s"/tmp/graft_retractlog_${graft.operators.ScaleJoins.corpusTag(sfDir, Seq("orders"))}"
 
   private[graft] val retractLogSchema: StructType = StructType(Seq(
     StructField("wave", IntegerType),
@@ -1947,10 +1898,8 @@ object StreamOps {
     StructField("o_orderdate", TimestampType),
     StructField("o_totalprice", DoubleType)))
 
-  private def writeRetractLog(s: SparkSession, sfDir: String): Unit = {
-    val root = retractLogDir(sfDir)
-    val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("orders"))
-    graft.Artifacts.publish(root, Some(tag)) {
+  private def writeRetractLog(s: SparkSession, sfDir: String): String =
+    graft.Artifacts.publishFor("retractlog", sfDir, Seq("orders")) { root =>
       val dels = graft.Tables.load(s, sfDir, "orders")
         .filter(col("o_orderkey") % 101 === 0)
         .withColumn("wave",
@@ -1964,7 +1913,6 @@ object StreamOps {
           .coalesce(1).write.mode("overwrite").parquet(s"$root/b$w")
       } finally dels.unpersist()
     }
-  }
 
   /** Per-micro-batch retraction MERGE — q_mv_retract's
     * subtract-and-patch, re-expressed for the wave-partial store.
@@ -2057,7 +2005,7 @@ object StreamOps {
     * previous store. */
   def streamMvRetract(parent: SparkSession, sfDir: String): DataFrame = {
     val spark = streamingSession(parent)
-    writeRetractLog(spark, sfDir)
+    val log = writeRetractLog(spark, sfDir)
     graft.Artifacts.withRunDir("mv_retract") { run =>
       spark.read.parquet(
           graft.operators.ScaleJoins.ensureMonthMv(spark, sfDir))
@@ -2071,7 +2019,7 @@ object StreamOps {
       val last = new AtomicLong(0L)
       val deletes = spark.readStream.schema(retractLogSchema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(s"${retractLogDir(sfDir)}/b*")
+        .parquet(s"$log/b*")
       runAvailableNow(deletes.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           require(new java.io.File(s"$run/store_$batchId").exists,

@@ -111,12 +111,12 @@ class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a dim-store run whose merge throws on batch 1 leaves no run dir and no stream") {
     val s = StreamOps.streamingSessionForTest(spark)
-    StreamOps.writeCdcLog(s, sf)
+    val cdcLog = StreamOps.writeCdcLog(s, sf)
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     var dirsDuringRun = Seq.empty[Path]
     val err = intercept[StreamingQueryException] {
       StreamOps.dimStoreRun(s, "spec_dim", StreamOps.cdcLogSchema,
-        StreamOps.cdcLogDir(sf),
+        cdcLog,
         Tables.load(s, sf, "customer")
           .withColumn("op", lit("I")).withColumn("version", lit(0)),
         { (prev, batch) =>
@@ -141,11 +141,55 @@ class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
         p.getFileName.toString != "Artifacts.scala")
       .flatMap { p =>
         val text = Files.readString(p)
-        Seq("_GRAFT_TAG", "FileChannel", "_run_").filter(text.contains)
+        Seq("_GRAFT_TAG", "FileChannel", "_run_", "/tmp/graft_", "__SFTAG__",
+          "Artifacts.publish(").filter(text.contains)
           .map(tok => s"${main.relativize(p)}: $tok")
       }.toSeq
     assert(offenders.isEmpty,
       s"artifact lifecycle code outside Artifacts: ${offenders.mkString(", ")}")
+  }
+
+  test("a root is named by the corpus dir, and the oracle spells the same root") {
+    val root = Artifacts.root("orc", sf)
+    assert(root == s"/tmp/graft_orc_${Tables.sfTag(sf)}")
+    assert(Artifacts.oracleSqlFor(
+      s"SELECT * FROM read_parquet('${Artifacts.oracleRoot("orc")}/*.parquet')", sf) ==
+      s"SELECT * FROM read_parquet('$root/*.parquet')")
+  }
+
+  test("the orc and jsonl round-trips publish their roots tagged by content") {
+    import graft.operators.Etl
+    Etl.etlOrcRoundtrip(spark, sf).count()
+    Etl.pipelineJsonlRoundtrip(spark, sf).count()
+    for ((name, table) <- Seq("orc" -> "customer", "jsonl" -> "documents")) {
+      val root = Artifacts.root(name, sf)
+      assert(Files.readString(marker(root)) == Artifacts.contentTag(sf, Seq(table)),
+        s"$root is not published under its content tag")
+    }
+  }
+
+  test("publishFor rebuilds in place when the corpus content changes") {
+    // a corpus of one table, regenerated at the same path
+    val dir = tempDir("regen").toString
+    def regen(n: Int): Unit =
+      spark.range(n).write.mode("overwrite").parquet(s"$dir/nation.parquet")
+    var builds = 0
+    def publish(): String = Artifacts.publishFor("spec_regen", dir, Seq("nation")) { out =>
+      builds += 1
+      spark.read.parquet(s"$dir/nation.parquet").write.parquet(out)
+    }
+    try {
+      regen(3)
+      val root = publish()
+      assert(publish() == root && builds == 1 && rows(root).size == 3)
+      regen(5)
+      assert(publish() == root, "a content change moved the root")
+      assert(builds == 2 && rows(root).size == 5)
+    } finally {
+      val root = Artifacts.root("spec_regen", dir)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+      Files.deleteIfExists(Paths.get(root + ".lock"))
+    }
   }
 
   test("the suite's only temp-dir root is TestSpark's scratch root") {

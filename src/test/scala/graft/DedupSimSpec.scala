@@ -141,7 +141,7 @@ class DedupSimSpec extends AnyFunSuite {
       assert(a < 1000000L && b >= 1000000L, s"pair ($a,$b) crosses wrong") }
     // the corpus index is NOT rebuilt on a second run — per-night
     // work is O(batch): corpus segment mtimes must not move
-    val idx = new java.io.File(DedupOps.dedupIndexDir(sf), "corpus_sets")
+    val idx = new java.io.File(Artifacts.root("dedup_idx", sf), "corpus_sets")
     val stamps = idx.listFiles().map(f => f.getName -> f.lastModified()).toMap
     DedupOps.dedupIncremental(spark, sf).count()
     val after = idx.listFiles().map(f => f.getName -> f.lastModified()).toMap
@@ -329,10 +329,10 @@ class DedupSimSpec extends AnyFunSuite {
       d.listFiles().map(f => f.getName -> f.lastModified()).toMap
     }
     val (c0, b0) =
-      (stamp(SimOps.centroidDumpPath(sf)), stamp(SimOps.pqCodebookPath(sf)))
+      (stamp(Artifacts.root("ivf_centroids", sf)), stamp(Artifacts.root("pq_codebooks", sf)))
     SimOps.simIvfIngest(spark, sf).count()
-    assert(stamp(SimOps.centroidDumpPath(sf)) == c0, "ingest rebuilt the IVF model")
-    assert(stamp(SimOps.pqCodebookPath(sf)) == b0, "ingest rebuilt the PQ codebooks")
+    assert(stamp(Artifacts.root("ivf_centroids", sf)) == c0, "ingest rebuilt the IVF model")
+    assert(stamp(Artifacts.root("pq_codebooks", sf)) == b0, "ingest rebuilt the PQ codebooks")
     // ... and the plan is ONE projection over the batch scan: models
     // ride inside expressions, so no join, no aggregate, no corpus pass
     val plan = SimOps.simIvfIngest(spark, sf).queryExecution.executedPlan.toString

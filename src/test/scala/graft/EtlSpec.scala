@@ -334,7 +334,7 @@ class EtlSpec extends AnyFunSuite {
   // --- end-to-end pipeline dump (etl_pipeline_dump key) ---
 
   test("etl_pipeline_dump byte-round-trips through an independent CSV parser") {
-    val outDir = Etl.pipelineDumpDir(sf)
+    val outDir = Artifacts.root("pipeline_dump", sf)
     val expected = Etl.etlPipelineDump(spark, sf)
     // parse the dump bytes back with Spark's univocity CSV reader set
     // to the PG single-quote dialect — a parser sharing no code with
@@ -359,7 +359,7 @@ class EtlSpec extends AnyFunSuite {
 
   test("etl_pipeline_dump migration is write-once until the corpus changes") {
     import java.nio.file.{Files, Paths}
-    val outDir = Etl.pipelineDumpDir(sf)
+    val outDir = Artifacts.root("pipeline_dump", sf)
     Etl.etlPipelineDump(spark, sf).count()
     def dumpMtimes: Map[String, Long] =
       new java.io.File(s"$outDir/clients").listFiles()
@@ -417,7 +417,7 @@ class EtlSpec extends AnyFunSuite {
       s"incremental view diverges from recompute at ${g.getString(0)}") }
     // the stored base aggregate is REUSED, not rebuilt: same files,
     // same mtimes on a second maintenance run
-    val layout = Paths.get(Etl.baseAggDir(sf))
+    val layout = Paths.get(Artifacts.root("baseagg", sf))
     def stamp() = Files.list(layout).toArray.map(_.toString).sorted
       .map(p => p -> Files.getLastModifiedTime(Paths.get(p)).toMillis).toSeq
     val before = stamp()
@@ -443,7 +443,7 @@ class EtlSpec extends AnyFunSuite {
     assert(!plan.contains("Coalesce"), "export plan funnels through coalesce")
     // per-file: internally sorted; across files: disjoint ascending
     // key ranges = a global total order over (o_orderdate, o_orderkey)
-    val files = new java.io.File(Etl.shardExportDir(sf))
+    val files = new java.io.File(Artifacts.root("shard_export", sf))
       .listFiles().filter(_.getName.endsWith(".parquet")).map(_.toString)
     assert(files.length > 1, "expected multiple shard files")
     val ranges = files.map { f =>
@@ -696,7 +696,7 @@ class EtlSpec extends AnyFunSuite {
     // ...the new spec prunes straight to ONE (year, month) directory
     assert(newEra.partitionCount == 1,
       s"new era scanned ${newEra.partitionCount} partitions")
-    val evoRoot = Etl.partEvoDir(sf)
+    val evoRoot = Artifacts.root("partevo", sf)
     val newAll = spark.read.parquet(s"$evoRoot/era_month")
       .select("o_year", "o_month").distinct().count()
     assert(newAll > 12, s"new era has only $newAll month partitions")
@@ -727,7 +727,7 @@ class EtlSpec extends AnyFunSuite {
 
   test("etl_manifest_prune consults file stats and actually prunes") {
     Etl.etlManifestPrune(spark, sf).collect() // build layout + manifest
-    val root = Etl.manifestRoot(sf)
+    val root = Artifacts.root("manifest", sf)
     val allFiles = spark.read.parquet(s"$root/manifest").count()
     val sel = Etl.manifestSelectedFiles(spark, root)
     assert(sel.nonEmpty && sel.size < allFiles,
@@ -1194,10 +1194,9 @@ class EtlSpec extends AnyFunSuite {
       docs.collect().sortBy(key).toSeq,
       "JSONL must round-trip ids and UTF-8 text exactly")
     // the export is genuinely newline-delimited JSON, one object per
-    // line — what an external loader expects (path derived from the
-    // corpus tag, not a /tmp scan that could hit another corpus)
-    val tag = graft.operators.ScaleJoins.corpusTag(sf, Seq("documents"))
-    val dir = new java.io.File(s"/tmp/graft_jsonl_$tag")
+    // line — what an external loader expects (the corpus's own root,
+    // not a /tmp scan that could hit another corpus)
+    val dir = new java.io.File(Artifacts.root("jsonl", sf))
     val part = dir.listFiles().filter(_.getName.endsWith(".json")).head
     val line = scala.io.Source.fromFile(part, "UTF-8")
       .getLines().next()

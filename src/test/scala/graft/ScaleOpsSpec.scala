@@ -155,7 +155,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // DataFrame.inputFiles reads the UNPRUNED FileIndex, so the proof
     // has to come from the scan node itself: selectedPartitions is the
     // post-pruning listing the executors will actually read
-    val layout = spark.read.parquet(ScaleJoins.partLayoutDir(sf))
+    val layout = spark.read.parquet(Artifacts.root("part_orders", sf))
     val all = layout.inputFiles.length
     val root = df.queryExecution.executedPlan match {
       // AdaptiveSparkPlanExec is a LEAF node — collect won't descend
@@ -331,7 +331,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       val r = fileSpans(path).agg(avg("kspan"), avg("dspan")).collect()(0)
       (r.getDouble(0) / kRange, r.getDouble(1) / dRange)
     }
-    val (zK, zD) = avgSpans(ScaleJoins.zLayoutDir(sf))
+    val (zK, zD) = avgSpans(Artifacts.root("zorder_orders", sf))
     val (linK, linD) = avgSpans(linDir)
     assert(zK < 0.5 && zD < 0.5,
       s"z files not compact in both dims: key span $zK, date span $zD")
@@ -347,7 +347,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       }.getOrElse(fail(s"no file scan:\n${d.queryExecution.executedPlan}"))
     }
     val zRows = scanRows(
-      spark.read.parquet(ScaleJoins.zLayoutDir(sf)).filter(ScaleJoins.zQueryFilter))
+      spark.read.parquet(Artifacts.root("zorder_orders", sf)).filter(ScaleJoins.zQueryFilter))
     val linRows = scanRows(spark.read.parquet(linDir).filter(ScaleJoins.zQueryFilter))
     assert(zRows < linRows,
       s"z layout scan emitted $zRows rows, linear layout $linRows — no 2-D pruning")

@@ -238,7 +238,7 @@ class StreamPipelineSpec extends AnyFunSuite {
     // the incremental loop vacuous)
     val sfDir = sf
     val log = spark.read.schema(StreamOps.mvLogSchema)
-      .parquet(s"/tmp/graft_mvlog_${graft.operators.ScaleJoins.corpusTag(sfDir, Seq("orders"))}/b*")
+      .parquet(s"${Artifacts.root("mvlog", sfDir)}/b*")
       .cache()
     val waves = (0 to 2).map(w => log.filter(col("wave") === w))
     assert(waves.forall(_.count() > 0), "every arrival wave must be non-empty")
@@ -277,7 +277,7 @@ class StreamPipelineSpec extends AnyFunSuite {
     // three real delete waves (a single-wave log would make the
     // incremental loop vacuous)
     val log = spark.read.schema(StreamOps.retractLogSchema)
-      .parquet(s"/tmp/graft_retractlog_${graft.operators.ScaleJoins.corpusTag(sf, Seq("orders"))}/b*")
+      .parquet(s"${Artifacts.root("retractlog", sf)}/b*")
       .cache()
     val waves = (0 to 2).map(w => log.filter(col("wave") === w))
     assert(waves.forall(_.count() > 0), "every delete wave must be non-empty")
@@ -1059,7 +1059,7 @@ class StreamPipelineSpec extends AnyFunSuite {
     val crcOut = rows.map(r =>
       r.getAs[Long]("doc_id") -> r.getAs[Long]("payload_crc")).toMap
     val published = spark.read
-      .parquet(s"${MultimodalOps.mediaMetaDir(sf)}/payloads")
+      .parquet(s"${Artifacts.root("media_meta", sf)}/payloads")
       .collect().map { r =>
         val crc = new java.util.zip.CRC32()
         crc.update(r.getAs[Array[Byte]]("payload"))
@@ -1267,25 +1267,6 @@ class StreamPipelineSpec extends AnyFunSuite {
     assert(kept < ord.count() && kept > 0)
   }
 
-  test("Pipeline parquet-lake sink writes partitioned output") {
-    val out = tempDir("lake").toString
-    val res = Pipeline.migrate(spark, sf, out,
-      tables = Seq("orders"), changes = SchemaChanges(),
-      pks = Map("orders" -> Seq("o_orderkey")),
-      sink = Pipeline.ParquetLake(Map("orders" -> Seq("o_orderstatus"))))
-    assert(res.tables.head.rows ==
-      Tables.load(spark, sf, "orders").count())
-    val partDirs = new java.io.File(s"$out/orders").listFiles()
-      .filter(_.getName.startsWith("o_orderstatus="))
-    assert(partDirs.length == 3) // F / O / P
-    // partition pruning works on the lake output
-    val pruned = spark.read.parquet(s"$out/orders")
-      .filter(col("o_orderstatus") === "F")
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(o_orderstatus"),
-      s"no partition pruning in:\n$plan")
-  }
-
   test("Pipeline.migrate counts rows, not dump lines, for an embedded newline") {
     import spark.implicits._
     val src = tempDir("newline_src").toString
@@ -1295,6 +1276,46 @@ class StreamPipelineSpec extends AnyFunSuite {
     val res = Pipeline.migrate(spark, src, out, Seq("notes"), SchemaChanges())
     assert(res.tables.map(_.rows) == Seq(2L))
     assert(spark.read.text(s"$out/notes").count() == 3)
+  }
+
+  test("Pipeline.migrate keeps a 0 in a PK column that is an FK, and every PK column is NOT NULL") {
+    import spark.implicits._
+    val src = tempDir("pk_fk_src").toString
+    // the parent's key 0 is a real row, so the child's 0 is a real
+    // reference, not MySQL's "no parent"
+    Seq((Option(0L), "root"), (Option(1L), "one")).toDF("id", "name")
+      .write.parquet(s"$src/parent.parquet")
+    Seq((Option(0L), Option(1), "first"), (Option(1L), Option(1), "second"))
+      .toDF("pid", "line", "note").write.parquet(s"$src/child.parquet")
+    assert(Tables.load(spark, src, "child").schema("pid").nullable)
+    val out = tempDir("pk_fk_out").toString
+    val pks = Map("parent" -> Seq("id"), "child" -> Seq("pid", "line"))
+    val res = Pipeline.migrate(spark, src, out, Seq("parent", "child"),
+      SchemaChanges(Map("child" -> TableChange(columns = Map(
+        "pid" -> ColumnChange(reference = Some(Reference("parent", "id"))))))),
+      pks = pks)
+    val lines = spark.read.text(s"$out/child").as[String].collect().sorted.toSeq
+    assert(lines == Seq("0,1,'first'", "1,1,'second'"), lines)
+    val ddl = res.tables.map(t => t.outputName -> t.ddl).toMap
+    for ((t, cols) <- pks; c <- cols)
+      assert(s""""$c" \\w+ NOT NULL""".r.findFirstIn(ddl(t)).isDefined,
+        s"$t.$c is not NOT NULL in ${ddl(t)}")
+  }
+
+  test("Projector.extract casts a column to the type its DDL declares") {
+    // a user type the node map changes again: double -> decimal
+    val ev = Tables.load(spark, sf, "events")
+    val orig = Introspect.fromSpark(ev, "events")
+    val changes = SchemaChanges(Map("events" -> TableChange(columns = Map(
+      "value" -> ColumnChange(dataType = Some("double"))))))
+    val td = SchemaRules(Seq(orig), changes).head
+    assert(PgSqlGen.createTable(td).contains("\"value\" DECIMAL"))
+    val df = Projector.extract(ev, orig, changes.forTable("events"),
+      Tables.load(spark, sf, _), Some(NodeRules.mysqlToPg))
+    assert(df.schema("value").dataType ==
+      Introspect.sparkType(td.column("value").dataType))
+    assert(Pipeline.convertedFrame(spark, sf, "events", changes)
+      .schema("value").dataType == df.schema("value").dataType)
   }
 
   test("Pipeline.migrate runs one load and one write job per table") {

@@ -1242,7 +1242,7 @@ class TextOpsSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text")).collect()
       .map(r => r.getLong(0) -> r.getString(1).split(" ").filter(_.nonEmpty))
     val idf = spark.read.parquet(
-        graft.operators.TextOps.bm25StatsPath(sf))
+        Artifacts.root("bm25", sf))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val nDocs = docs.length.toLong
     val totDl = docs.map(_._2.length.toLong).sum

@@ -21,6 +21,7 @@ SPARK_GRAFT_ONLY iteration flow)
 import json
 import math
 import os
+import shutil
 import sys
 
 import duckdb
@@ -54,8 +55,28 @@ def cells_equal(a, b):
     return a == b
 
 
+# disk left free for everything else when DuckDB spills
+SPILL_MARGIN = 2 * 1024 ** 3
+
+
 def main(sf_dir, out_dir, only=None):
-    con = duckdb.connect()
+    # DuckDB spills under the output dir, capped below the disk's free
+    # space, so an oracle too big for the disk fails fast with DuckDB's
+    # own out-of-space error instead of filling the disk; the spill
+    # dir is removed whatever happens
+    spill = os.path.join(out_dir, "_duckdb_spill")
+    os.makedirs(spill, exist_ok=True)
+    try:
+        cap = max(0, shutil.disk_usage(spill).free - SPILL_MARGIN)
+        con = duckdb.connect()
+        con.execute(f"SET temp_directory = '{spill}'")
+        con.execute(f"SET max_temp_directory_size = '{cap}B'")
+        return compare(con, sf_dir, out_dir, only)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+
+
+def compare(con, sf_dir, out_dir, only):
     for t in TABLES:
         # driver fixtures ship single parquet FILES; GenScale'd corpora
         # (sf1) write Spark directory layouts — glob those
